@@ -305,13 +305,7 @@ object BenchData {
       .filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
         f.getName != dst.getName &&
         new java.io.File(f, "_BLOWUP_COMPLETE").isFile)
-      .foreach { stale =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(stale)
-      }
+      .foreach(graft.util.Scratch.delete)
   }
 
   /** The marker file's identity JSON (version + per-table row counts),

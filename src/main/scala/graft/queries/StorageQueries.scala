@@ -763,36 +763,31 @@ object StorageQueries {
   //      table scale. ----
   private def io19(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Exact._
-    val root = Files.createTempDirectory("graft-io19-").toString
-    def daily(extra: DataFrame => DataFrame) = extra(
-      Tables.orders(spark, dir)
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as("n_orders"),
-          sumExact(dec(col("o_totalprice"))).as("revenue")))
-    val audits = Seq[(String, DataFrame => Boolean)](
-      "nonempty" -> (d => d.limit(1).count() == 1),
-      "key_not_null" -> (d => d.filter(col("day").isNull).limit(1).count() == 0),
-      "key_unique" -> (d =>
-        d.groupBy(col("day")).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > 1).limit(1).count() == 0))
-    val (ok0, _) = graft.ops.Storage.writeAuditPublish(
-      daily(identity), root, gen = 0, audits)
-    require(ok0, "clean generation must publish")
-    val poison = daily(d => d
-      .unionByName(d.limit(1).select(lit(null).cast("string").as("day"),
-        col("n_orders"), col("revenue")))
-      .unionByName(d.limit(1)))
-    val (ok1, _) = graft.ops.Storage.writeAuditPublish(poison, root, gen = 1, audits)
-    require(!ok1, "poisoned generation must be refused")
-    val out = graft.ops.Storage.readPublished(spark, root)
-      .getOrElse(sys.error("pointer vanished"))
-    out.cache().count() // materialize before the scratch tree goes away
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
+    graft.util.Scratch.withDir("graft-io19-") { root =>
+      def daily(extra: DataFrame => DataFrame) = extra(
+        Tables.orders(spark, dir)
+          .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
+          .agg(count(lit(1)).as("n_orders"),
+            sumExact(dec(col("o_totalprice"))).as("revenue")))
+      val audits = Seq[(String, DataFrame => Boolean)](
+        "nonempty" -> (d => d.limit(1).count() == 1),
+        "key_not_null" -> (d => d.filter(col("day").isNull).limit(1).count() == 0),
+        "key_unique" -> (d =>
+          d.groupBy(col("day")).agg(count(lit(1)).as("__n"))
+            .filter(col("__n") > 1).limit(1).count() == 0))
+      val (ok0, _) = graft.ops.Storage.writeAuditPublish(
+        daily(identity), root, gen = 0, audits)
+      require(ok0, "clean generation must publish")
+      val poison = daily(d => d
+        .unionByName(d.limit(1).select(lit(null).cast("string").as("day"),
+          col("n_orders"), col("revenue")))
+        .unionByName(d.limit(1)))
+      val (ok1, _) = graft.ops.Storage.writeAuditPublish(poison, root, gen = 1, audits)
+      require(!ok1, "poisoned generation must be refused")
+      // snapshot before the scratch tree goes away
+      graft.ops.Storage.readPublished(spark, root)
+        .getOrElse(sys.error("pointer vanished")).localCheckpoint()
     }
-    rm(new java.io.File(root))
-    out
   }
 
   private val io19Oracle =
@@ -816,41 +811,37 @@ object StorageQueries {
   //      whole point of OPTIMIZE. ----
   private def io20(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tmp = Files.createTempDirectory("graft-io20-").toString
-    val addressed = Tables.orders(spark, dir)
-      .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
-    val posDeletes = addressed.filter(col("o_orderkey") % 7 === 0)
-      .select(col("file_id"), col("pos"))
-    val eqDeletes = spark.range(1).select(lit("5-LOW").as("o_orderpriority"))
-    graft.ops.Storage.applyDeletes(addressed, posDeletes, eqDeletes,
-        Seq("o_orderpriority"))
-      .drop("file_id", "pos")
-      .write.mode("overwrite").parquet(s"$tmp/live")
-    val (bytes, _) = graft.ops.Storage.dataFiles(spark, s"$tmp/live")
-    graft.ops.Storage.compact(spark, s"$tmp/live", s"$tmp/compacted",
-      math.max(1L, bytes / 2))
-    // sidecars now EMPTY: the rewrite retired every delete
-    posDeletes.limit(0).write.mode("overwrite").parquet(s"$tmp/posdel")
-    val base2 = spark.read.parquet(s"$tmp/compacted")
-      .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
-    val out = graft.ops.Storage.applyDeletes(
-        base2, spark.read.parquet(s"$tmp/posdel"),
-        eqDeletes.limit(0), Seq("o_orderpriority"))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_live"),
-        graft.ops.Exact.sumExact(
-          graft.ops.Exact.dec(col("o_totalprice"))).as("revenue"))
-    out.cache().count() // materialize before the scratch tree goes away
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
+    graft.util.Scratch.withDir("graft-io20-") { tmp =>
+      val addressed = Tables.orders(spark, dir)
+        .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
+        .withColumn("pos", row_number().over(
+          Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
+      val posDeletes = addressed.filter(col("o_orderkey") % 7 === 0)
+        .select(col("file_id"), col("pos"))
+      val eqDeletes = spark.range(1).select(lit("5-LOW").as("o_orderpriority"))
+      graft.ops.Storage.applyDeletes(addressed, posDeletes, eqDeletes,
+          Seq("o_orderpriority"))
+        .drop("file_id", "pos")
+        .write.mode("overwrite").parquet(s"$tmp/live")
+      val (bytes, _) = graft.ops.Storage.dataFiles(spark, s"$tmp/live")
+      graft.ops.Storage.compact(spark, s"$tmp/live", s"$tmp/compacted",
+        math.max(1L, bytes / 2))
+      // sidecars now EMPTY: the rewrite retired every delete
+      posDeletes.limit(0).write.mode("overwrite").parquet(s"$tmp/posdel")
+      val base2 = spark.read.parquet(s"$tmp/compacted")
+        .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
+        .withColumn("pos", row_number().over(
+          Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
+      // snapshot before the scratch tree goes away
+      graft.ops.Storage.applyDeletes(
+          base2, spark.read.parquet(s"$tmp/posdel"),
+          eqDeletes.limit(0), Seq("o_orderpriority"))
+        .groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("n_live"),
+          graft.ops.Exact.sumExact(
+            graft.ops.Exact.dec(col("o_totalprice"))).as("revenue"))
+        .localCheckpoint()
     }
-    rm(new java.io.File(tmp))
-    out
   }
 
   // ---- io21: boundary-planned balanced range layout — the layout

@@ -106,30 +106,25 @@ object ChangeFeedStream {
   /** st17's gated entry: write the deterministic io15 feed as several
     * key-hash-sprayed files, replay them one file per micro-batch (so
     * batches genuinely arrive out of seq order), and apply the
-    * recovered state to the base. All scratch dirs (feed, checkpoint,
-    * state generations) are deleted once the result is materialized —
-    * repeated bench reps must not accrete temp trees. */
+    * recovered state to the base. The result is snapshotted, then all
+    * scratch dirs (feed, checkpoint, state generations) are deleted,
+    * also when the stream throws — repeated bench reps must not
+    * accrete temp trees. */
   def cdcApplyReplay(spark: SparkSession, dir: String): DataFrame = {
     val feed = graft.queries.StorageQueries.cdcFeed(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-st17-")
-    val feedDir = s"$tmp/feed"
-    feed.repartition(4, col("o_orderkey")).write.mode("overwrite").parquet(feedDir)
-    val schema = spark.read.parquet(feedDir).schema
+    graft.util.Scratch.withDir("graft-st17-") { tmp =>
+      val feedDir = s"$tmp/feed"
+      feed.repartition(4, col("o_orderkey")).write.mode("overwrite").parquet(feedDir)
+      val schema = spark.read.parquet(feedDir).schema
 
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(feedDir)
-    val q = runCdcStream(stream, "o_orderkey", s"$tmp/state", s"$tmp/chk")
-    try q.processAllAvailable() finally q.stop()
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(feedDir)
+      val q = runCdcStream(stream, "o_orderkey", s"$tmp/state", s"$tmp/chk")
+      try q.processAllAvailable() finally q.stop()
 
-    val out = graft.queries.StorageQueries.cdcProject(
-      applyState(spark, Tables.orders(spark, dir), s"$tmp/state",
-        "o_orderkey", schema))
-    out.cache().count() // materialize before the scratch tree goes away
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
+      graft.queries.StorageQueries.cdcProject(
+        applyState(spark, Tables.orders(spark, dir), s"$tmp/state",
+          "o_orderkey", schema)).localCheckpoint()
     }
-    rm(tmp.toFile)
-    out
   }
 }

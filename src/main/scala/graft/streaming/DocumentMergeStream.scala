@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.marketpulse.Schemas
 
@@ -82,19 +82,11 @@ object DocumentMergeStream {
 
   /** Convenience: run the stateful merge synchronously over an
     * in-memory stream of versions and return the final per-symbol
-    * documents (update-mode memory sink, drained). */
-  def runToCompletion(spark: SparkSession, versions: Dataset[DocVersion],
-                      name: String = "graft_doc_merge"): DataFrame = {
-    spark.catalog.dropTempView(name)
-    val q = mergeStream(versions).toDF()
-      .writeStream.outputMode(OutputMode.Update).format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // the memory sink appends one row per (symbol, trigger); keep the
-    // latest update per symbol
-    val out = graft.ops.Relational.dedupeKeepFirst(
-      spark.table(name), Seq("symbol"), Seq(col("updates").desc))
-    out.cache().count()
-    out
-  }
+    * documents (update mode, drained). */
+  def runToCompletion(versions: Dataset[DocVersion]): DataFrame =
+    // the sink appends one row per (symbol, trigger); keep the latest
+    // update per symbol
+    graft.ops.Relational.dedupeKeepFirst(
+      StreamRun.drain("graft_doc_merge", mergeStream(versions), "update"),
+      Seq("symbol"), Seq(col("updates").desc))
 }

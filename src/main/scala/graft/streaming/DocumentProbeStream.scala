@@ -63,47 +63,36 @@ object DocumentProbeStream {
    * per-cell-loop reference implementation's value for that id.
    */
   def mediaHashReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_media_hashes"
-    spark.catalog.dropTempView(name)
     val media = graft.multimodal.Multimodal.mediaWithRealImages(
       readDocuments(spark, s"$dir/documents.parquet"))
       .filter(col("kind") === "image")
-    val q = graft.multimodal.Multimodal.imageHashes(media)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name)
-    out.cache().count()
-    out
+    StreamRun.drain("graft_stream_media_hashes",
+      graft.multimodal.Multimodal.imageHashes(media), "append")
   }
 
   /** Run `deltaStream` (a streaming frame of documents) through the
     * per-micro-batch probe against the static `corpus`, blocking until
     * all available input is processed; returns the accumulated
-    * matches. Exposed separately so tests can drive multi-batch
-    * arrival (e.g. maxFilesPerTrigger=1 over several files). */
-  def probeWithStream(deltaStream: DataFrame, corpus: DataFrame): DataFrame = {
-    val spark = corpus.sparkSession
-    val out = java.nio.file.Files.createTempDirectory("graft-probe-out-")
-    out.toFile.deleteOnExit()
-    val outDir = out.toString
-    val q = deltaStream
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Dedup.incrementalNearDups(corpus, batch, "doc_id", "text",
-            minJaccard = 0.7)
-          .write.mode("append").parquet(s"$outDir/matches")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val resultSchema = StructType(Seq(
-      StructField("delta_id", LongType),
-      StructField("corpus_id", LongType),
-      StructField("jaccard", DoubleType)))
-    val res = spark.read.schema(resultSchema).parquet(s"$outDir/matches")
-      .select("delta_id", "corpus_id", "jaccard")
-    res.cache().count()
-    res
-  }
+    * matches, snapshotted before the scratch output tree is deleted.
+    * Exposed separately so tests can drive multi-batch arrival (e.g.
+    * maxFilesPerTrigger=1 over several files). */
+  def probeWithStream(deltaStream: DataFrame, corpus: DataFrame): DataFrame =
+    graft.util.Scratch.withDir("graft-probe-out-") { outDir =>
+      val q = deltaStream
+        .writeStream
+        .option("checkpointLocation", s"$outDir/_checkpoint")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          Dedup.incrementalNearDups(corpus, batch, "doc_id", "text",
+              minJaccard = 0.7)
+            .write.mode("append").parquet(s"$outDir/matches")
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      val resultSchema = StructType(Seq(
+        StructField("delta_id", LongType),
+        StructField("corpus_id", LongType),
+        StructField("jaccard", DoubleType)))
+      corpus.sparkSession.read.schema(resultSchema).parquet(s"$outDir/matches")
+        .select("delta_id", "corpus_id", "jaccard").localCheckpoint()
+    }
 }

@@ -1,10 +1,13 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ops.Exact._
+import graft.queries.{AdvancedQueries, QualityQueries}
 
 /**
  * Structured Streaming ingest path (SURVEY §2.11 — a design addition:
@@ -57,10 +60,10 @@ object EventStream {
     val fileSchema =
       try spark.read.parquet(dir).schema
       catch {
-        case first: Throwable =>
+        case NonFatal(first) =>
           spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
           try spark.read.parquet(dir).schema
-          catch { case _: Throwable => throw first }
+          catch { case NonFatal(_) => throw first }
       }
     val tsExpr = fileSchema("ts").dataType match {
       case LongType => "timestamp_micros(ts div 1000) AS ts"
@@ -69,6 +72,10 @@ object EventStream {
     spark.readStream.schema(fileSchema).parquet(dir)
       .selectExpr("event_id", tsExpr, "user_id", "event_type", "value", "props")
   }
+
+  /** The events fixture of `dir` as a stream. */
+  private def events(spark: SparkSession, dir: String): DataFrame =
+    readEvents(spark, s"$dir/events.parquet")
 
   /** The shared (batch ≡ stream) hourly aggregation: tumbling 1-hour
     * windows per event type with exact-decimal value sums. */
@@ -86,18 +93,8 @@ object EventStream {
    * final state equal to the batch aggregation — the oracle for this
    * query is plain SQL.
    */
-  def hourlyStats(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_hourly"
-    spark.catalog.dropTempView(name)
-    val q = hourlyAgg(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // materialize: the memory sink table is mutable; copy out rows
-    val out = spark.table(name)
-    out.cache().count()
-    out
-  }
+  def hourlyStats(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.drain("graft_stream_hourly", hourlyAgg(events(spark, dir)), "complete")
 
   /**
    * Streaming cohort-drift monitor (st08): the stream maintains dq04's
@@ -110,18 +107,9 @@ object EventStream {
    * `driftFromCounts` shared verbatim with dq04, whose oracle this
    * query carries.
    */
-  def cohortDriftReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_drift"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .cohortCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val counts = spark.table(name)
-    counts.cache().count()
-    graft.queries.QualityQueries.driftFromCounts(counts)
-  }
+  def cohortDriftReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.driftFromCounts(StreamRun.drain("graft_stream_drift",
+      QualityQueries.cohortCounts(events(spark, dir)), "complete"))
 
   /**
    * Streaming binned-TVD drift monitor (st25): the stream maintains
@@ -132,21 +120,9 @@ object EventStream {
    * (plan constants, not data volume), the st08/st12 recipe applied
    * to the log-free drift aggregate; dq17's oracle carries verbatim.
    */
-  def binnedTvdReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_tvd"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .tvdCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager) rather than cache: tvdFromCounts
-    // equi-joins the counts frame with totals derived from itself, and
-    // attribute dedup cannot clone a MemorySink-backed view's leaf
-    // (the ksDriftReplay lesson)
-    val counts = spark.table(name).localCheckpoint()
-    graft.queries.QualityQueries.tvdFromCounts(counts)
-  }
+  def binnedTvdReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.tvdFromCounts(StreamRun.drain("graft_stream_tvd",
+      QualityQueries.tvdCounts(events(spark, dir)), "complete"))
 
   /**
    * st31: streaming A/B experiment monitor — the stream maintains
@@ -160,21 +136,9 @@ object EventStream {
    * monitor — the readout is recomputable after every micro-batch at
    * the cost of folding 2 state rows.
    */
-  def abReadoutReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_ab"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .abMoments(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache — the readout aggregates the
-    // counts frame it derives from (the st10/st25 lesson)
-    val counts = spark.table(name).localCheckpoint()
-    val out = graft.queries.QualityQueries.abFromMoments(counts)
-    out.cache().count()
-    out
-  }
+  def abReadoutReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.abFromMoments(StreamRun.drain("graft_stream_ab",
+      QualityQueries.abMoments(events(spark, dir)), "complete"))
 
   /**
    * st32: streaming distinct-count sketch — the stream maintains
@@ -193,18 +157,9 @@ object EventStream {
    * carries verbatim.
    */
   def hllSketchReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_hll"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .hllDailyRegisters(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache — the report joins frames
-    // derived from the drained state (the st10/st25 lesson)
-    val daily = spark.table(name).localCheckpoint()
-    graft.queries.QualityQueries.hllReportFromDaily(spark, daily,
-      graft.sources.Tables.events(spark, dir))
+    val daily = StreamRun.drain("graft_stream_hll",
+      QualityQueries.hllDailyRegisters(events(spark, dir)), "complete")
+    QualityQueries.hllReportFromDaily(spark, daily, graft.sources.Tables.events(spark, dir))
   }
 
   /**
@@ -217,19 +172,9 @@ object EventStream {
    * cheapest monitor in the registry, which is the point: freshness
    * is what you want streaming first. dq18's oracle carries verbatim.
    */
-  def freshnessReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_fresh"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .freshnessCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache — the report crossJoins a
-    // frontier derived from the counts frame itself (st10 lesson)
-    val counts = spark.table(name).localCheckpoint()
-    graft.queries.QualityQueries.freshnessFromCounts(counts)
-  }
+  def freshnessReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.freshnessFromCounts(StreamRun.drain("graft_stream_fresh",
+      QualityQueries.freshnessCounts(events(spark, dir)), "complete"))
 
   /**
    * st28: streaming modal-value monitor — the stream maintains dq19's
@@ -241,19 +186,9 @@ object EventStream {
    * firehose would bin first (dq09's state contract) and take the
    * modal BIN, same view.
    */
-  def modalValuesReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_modal"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .modalCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache — the report joins totals
-    // derived from the counts frame itself (st10 lesson)
-    val counts = spark.table(name).localCheckpoint()
-    graft.queries.QualityQueries.modalFromCounts(counts)
-  }
+  def modalValuesReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.modalFromCounts(StreamRun.drain("graft_stream_modal",
+      QualityQueries.modalCounts(events(spark, dir)), "complete"))
 
   /**
    * Streaming two-sample KS drift: the stream maintains dq06's
@@ -265,21 +200,9 @@ object EventStream {
    * counts snapshot, never on the stream. st08's recipe applied to the
    * continuous-distribution monitor.
    */
-  def ksDriftReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_ks"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .ksCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager) rather than cache: ksFromCounts
-    // self-joins the counts frame, and attribute dedup cannot clone a
-    // MemorySink-backed view's leaf (Spark resolves the conflicting
-    // references only for re-instantiable leaves like LogicalRDD)
-    val counts = spark.table(name).localCheckpoint()
-    graft.queries.QualityQueries.ksFromCounts(counts)
-  }
+  def ksDriftReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.ksFromCounts(StreamRun.drain("graft_stream_ks",
+      QualityQueries.ksCounts(events(spark, dir)), "complete"))
 
   /**
    * st15: train-then-score streaming anomaly detection — dq11's
@@ -294,18 +217,9 @@ object EventStream {
    * replayed as a stream is exactly the batch computation.
    */
   def zscoreReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_zscore"
-    spark.catalog.dropTempView(name)
-    val stats = graft.queries.QualityQueries
-      .zStats(graft.sources.Tables.events(spark, dir))
-    val q = graft.queries.QualityQueries
-      .scoreAgainst(readEvents(spark, s"$dir/events.parquet"), stats)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name)
-    out.cache().count()
-    out
+    val stats = QualityQueries.zStats(graft.sources.Tables.events(spark, dir))
+    StreamRun.drain("graft_stream_zscore",
+      QualityQueries.scoreAgainst(events(spark, dir), stats), "append")
   }
 
   /**
@@ -315,20 +229,9 @@ object EventStream {
    * and the growth curve is the same growthFromFirstSeen view q39
    * runs, over the drained snapshot. q39's oracle carries verbatim.
    */
-  def userGrowthReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_growth"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.AdvancedQueries
-      .firstSeen(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager): runningTotal re-reads the ranged frame
-    // for its offsets pass, and a MemorySink-backed view's leaf can't
-    // be re-instantiated for attribute dedup (the st10 lesson)
-    val firstDays = spark.table(name).localCheckpoint()
-    graft.queries.AdvancedQueries.growthFromFirstSeen(firstDays)
-  }
+  def userGrowthReplay(spark: SparkSession, dir: String): DataFrame =
+    AdvancedQueries.growthFromFirstSeen(StreamRun.drain("graft_stream_growth",
+      AdvancedQueries.firstSeen(events(spark, dir)), "complete"))
 
   /**
    * st20: streaming EWMA volume forecaster — the stream maintains
@@ -339,18 +242,9 @@ object EventStream {
    * is the same `ewmaFromDaily` view dq13 runs, over the drained
    * snapshot. dq13's oracle carries verbatim.
    */
-  def ewmaReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_ewma"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .dailyCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val counts = spark.table(name)
-    counts.cache().count()
-    graft.queries.QualityQueries.ewmaFromDaily(counts)
-  }
+  def ewmaReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.ewmaFromDaily(StreamRun.drain("graft_stream_ewma",
+      QualityQueries.dailyCounts(events(spark, dir)), "complete"))
 
   /**
    * st22: streaming rolling-actives monitor — the stream maintains
@@ -363,18 +257,10 @@ object EventStream {
    * q46's oracle carries verbatim.
    */
   def rollingActivesReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_rolling"
-    spark.catalog.dropTempView(name)
-    val q = readEvents(spark, s"$dir/events.parquet")
+    val ud = StreamRun.drain("graft_stream_rolling", events(spark, dir)
       .groupBy(col("user_id"), expr("unix_micros(ts) DIV 86400000000").as("d"))
-      .agg(count(lit(1)).as("__n"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager): runningTotal re-reads the ranged frame
-    // for its offsets pass (the st10/st14 MemorySink-leaf lesson)
-    val ud = spark.table(name).select("user_id", "d").localCheckpoint()
-    graft.queries.AdvancedQueries.rollingFromUserDays(ud)
+      .agg(count(lit(1)).as("__n")), "complete")
+    AdvancedQueries.rollingFromUserDays(ud.select("user_id", "d"))
   }
 
   /**
@@ -385,20 +271,9 @@ object EventStream {
    * profile is the same `seasonalFromDaily` view dq14 runs, over the
    * drained snapshot. dq14's oracle carries verbatim.
    */
-  def seasonalReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_seasonal"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .dailyCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager): seasonalFromDaily joins the stats frame
-    // back to the daily frame — both derive from this view, and
-    // attribute dedup cannot clone a MemorySink leaf (the st10 lesson)
-    val counts = spark.table(name).localCheckpoint()
-    graft.queries.QualityQueries.seasonalFromDaily(counts)
-  }
+  def seasonalReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.seasonalFromDaily(StreamRun.drain("graft_stream_seasonal",
+      QualityQueries.dailyCounts(events(spark, dir)), "complete"))
 
   /**
    * st12: streaming histogram monitor — the stream maintains dq09's
@@ -408,18 +283,9 @@ object EventStream {
    * histFromCounts view dq09 runs, over the drained snapshot. dq09's
    * oracle carries verbatim.
    */
-  def histogramReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_hist"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .histCounts(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val counts = spark.table(name)
-    counts.cache().count()
-    graft.queries.QualityQueries.histFromCounts(counts)
-  }
+  def histogramReplay(spark: SparkSession, dir: String): DataFrame =
+    QualityQueries.histFromCounts(StreamRun.drain("graft_stream_hist",
+      QualityQueries.histCounts(events(spark, dir)), "complete"))
 
   /**
    * st13: streaming quarantine router — dq10's validation is a pure
@@ -429,18 +295,9 @@ object EventStream {
    * failure reasons at ingest wire speed. dq10's oracle carries
    * verbatim.
    */
-  def quarantineReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_quarantine"
-    spark.catalog.dropTempView(name)
-    val q = graft.queries.QualityQueries
-      .quarantineRoute(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name)
-    out.cache().count()
-    out
-  }
+  def quarantineReplay(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.drain("graft_stream_quarantine",
+      QualityQueries.quarantineRoute(events(spark, dir)), "append")
 
   /**
    * st11: streaming weekly retention — the stream maintains q35's
@@ -452,20 +309,10 @@ object EventStream {
    * runs, over the drained snapshot. q35's oracle carries verbatim.
    */
   def retentionReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_retention"
-    spark.catalog.dropTempView(name)
-    val q = readEvents(spark, s"$dir/events.parquet")
-      .groupBy(col("user_id"),
-        graft.queries.AdvancedQueries.weekOf(col("ts")).as("week"))
-      .agg(count(lit(1)).as("__n"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache: retentionFromWeeks self-joins
-    // the weeks frame (cohorts derive from it), and attribute dedup
-    // cannot clone a MemorySink-backed view's leaf (the st10 lesson)
-    val weeks = spark.table(name).select("user_id", "week").localCheckpoint()
-    graft.queries.AdvancedQueries.retentionFromWeeks(weeks)
+    val weeks = StreamRun.drain("graft_stream_retention", events(spark, dir)
+      .groupBy(col("user_id"), AdvancedQueries.weekOf(col("ts")).as("week"))
+      .agg(count(lit(1)).as("__n")), "complete")
+    AdvancedQueries.retentionFromWeeks(weeks.select("user_id", "week"))
   }
 
   /**
@@ -505,18 +352,9 @@ object EventStream {
    * which is what the plain-SQL oracle asserts.
    */
   def dedupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_dedup"
-    spark.catalog.dropTempView(name)
-    val doubled = readEvents(spark, s"$dir/events.parquet")
-      .unionByName(readEvents(spark, s"$dir/events.parquet"))
-    val q = dedupWithinWatermark(doubled)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name)
+    val doubled = events(spark, dir).unionByName(events(spark, dir))
+    StreamRun.drain("graft_stream_dedup", dedupWithinWatermark(doubled), "append")
       .select("event_id", "user_id", "event_type", "value")
-    out.cache().count()
-    out
   }
 
   /**
@@ -530,19 +368,12 @@ object EventStream {
    * what the plain-SQL oracle computes.
    */
   def enrichReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_enrich"
-    spark.catalog.dropTempView(name)
     val dim = graft.marketpulse.EventTicker.dim(spark, dir)
-    val q = readEvents(spark, s"$dir/events.parquet")
+    StreamRun.drain("graft_stream_enrich", events(spark, dir)
       .join(broadcast(dim), Seq("event_type"), "left")
       .groupBy(col("category"), col("display_name"))
-      .agg(count(lit(1)).as("n_events"), sumExact(dec(col("value"))).as("sum_value"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name)
-    out.cache().count()
-    out
+      .agg(count(lit(1)).as("n_events"), sumExact(dec(col("value"))).as("sum_value")),
+      "complete")
   }
 
   /**
@@ -585,6 +416,23 @@ object EventStream {
           .as("lag_us"),
         col("purchase_value"), col("purchase_ts"))
 
+  /** The watermarked purchase and click streams st04 and st05 join,
+    * with each side's columns renamed apart. */
+  private def purchaseClickStreams(spark: SparkSession,
+                                   dir: String): (DataFrame, DataFrame) = {
+    val purchases = events(spark, dir)
+      .filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
+      .withWatermark("purchase_ts", "2 hours")
+    val clicks = events(spark, dir)
+      .filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
+        col("ts").as("click_ts"))
+      .withWatermark("click_ts", "2 hours")
+    (purchases, clicks)
+  }
+
   /**
    * st05: the left-outer interval join as a real streaming query. A
    * finite replay's watermark freezes at maxSeen − delay, so unmatched
@@ -597,23 +445,9 @@ object EventStream {
    * passage — the ordering StreamingSpec pins with a two-batch feed).
    */
   def outerIntervalJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_outer_join"
-    spark.catalog.dropTempView(name)
-    val events = () => readEvents(spark, s"$dir/events.parquet")
-    val purchases = events()
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", "2 hours")
-    val clicks = events()
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val q = purchaseClickJoinOuter(purchases, clicks)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val (purchases, clicks) = purchaseClickStreams(spark, dir)
+    val joined = StreamRun.drain("graft_stream_outer_join",
+      purchaseClickJoinOuter(purchases, clicks), "append")
     // finalized-region cutoff. A purchase's null row emits once the
     // GLOBAL watermark (= min over both sides of that side's own max
     // seen ts, minus the 2 h delay) passes its match window — and each
@@ -626,11 +460,8 @@ object EventStream {
     val sideMax = ev.filter(col("event_type").isin("purchase", "click"))
       .groupBy(col("event_type")).agg(max(unix_micros(col("ts"))).as("mx"))
       .agg(min(col("mx"))).head().getLong(0)
-    val out = spark.table(name)
-      .filter(unix_micros(col("purchase_ts")) <= sideMax - 3L * 3600 * 1000000)
+    joined.filter(unix_micros(col("purchase_ts")) <= sideMax - 3L * 3600 * 1000000)
       .drop("purchase_ts")
-    out.cache().count()
-    out
   }
 
   /**
@@ -645,26 +476,9 @@ object EventStream {
    * join — which is exactly what the plain-SQL oracle computes.
    */
   def intervalJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_interval_join"
-    spark.catalog.dropTempView(name)
-    val events = () => readEvents(spark, s"$dir/events.parquet")
-    val purchases = events()
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", "2 hours")
-    val clicks = events()
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val q = purchaseClickJoin(purchases, clicks)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name)
-    out.cache().count()
-    out
+    val (purchases, clicks) = purchaseClickStreams(spark, dir)
+    StreamRun.drain("graft_stream_interval_join",
+      purchaseClickJoin(purchases, clicks), "append")
   }
 
   /**
@@ -824,6 +638,20 @@ object EventStream {
         sessionFunc(intervalUs(gap)))
   }
 
+  /** Run the stateful sessionizer as a streaming query and return the
+    * FINALIZED sessions: the shared harness behind st06 and st16, so
+    * the correctness-critical cutoff (delay + gap + an hour of
+    * batch-boundary margin behind the corpus max) exists in exactly
+    * one place and both replays agree on which sessions are final. */
+  private def finalizedSessions(spark: SparkSession, dir: String,
+                                name: String): DataFrame = {
+    val sessions = StreamRun.drain(name, sessionizeWithState(events(spark, dir)), "append")
+    val maxUs = graft.sources.Tables.events(spark, dir)
+      .agg(max(unix_micros(col("ts")))).head().getLong(0)
+    val cutoff = maxUs - (2L * 3600 + 1800 + 3600) * 1000000L
+    sessions.filter(col("session_end_us") <= cutoff)
+  }
+
   /**
    * st06: the custom-state sessionizer as a real streaming query.
    * Append mode emits each session exactly once, on watermark passage.
@@ -832,35 +660,13 @@ object EventStream {
    * the FINALIZED region: sessions ending at least delay + gap + an
    * hour of batch-boundary margin behind the corpus max timestamp.
    */
-  /** Run the stateful sessionizer as a streaming query into a memory
-    * sink and return the FINALIZED sessions: the shared harness behind
-    * st06 and st16, so the correctness-critical cutoff (delay + gap +
-    * an hour of batch-boundary margin behind the corpus max) exists in
-    * exactly one place and both replays agree on which sessions are
-    * final. */
-  private def finalizedSessions(spark: SparkSession, dir: String,
-                                name: String): DataFrame = {
-    spark.catalog.dropTempView(name)
-    val q = sessionizeWithState(readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val maxUs = graft.sources.Tables.events(spark, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0)
-    val cutoff = maxUs - (2L * 3600 + 1800 + 3600) * 1000000L
-    spark.table(name).filter(col("session_end_us") <= cutoff)
-  }
-
-  def sessionStateReplay(spark: SparkSession, dir: String): DataFrame = {
-    val out = finalizedSessions(spark, dir, "graft_stream_sessions")
+  def sessionStateReplay(spark: SparkSession, dir: String): DataFrame =
+    finalizedSessions(spark, dir, "graft_stream_sessions")
       // st06's gated shape predates the purchase accumulators; they are
       // st16's surface
       .select(col("user_id"), col("session_start_us"), col("session_end_us"),
         col("n_events"), col("sum_cents"), col("first_type"),
         col("has_purchase"))
-    out.cache().count()
-    out
-  }
 
   /**
    * st16: first-touch revenue attribution (q41's report) computed from
@@ -870,13 +676,10 @@ object EventStream {
    * events. Restricted to the finalized region like st06 (same cutoff),
    * so the oracle is q41's chain over sessions ending before it.
    */
-  def attributionStateReplay(spark: SparkSession, dir: String): DataFrame = {
-    val out = finalizedSessions(spark, dir, "graft_stream_attribution")
+  def attributionStateReplay(spark: SparkSession, dir: String): DataFrame =
+    finalizedSessions(spark, dir, "graft_stream_attribution")
       .filter(col("n_purchases") > 0)
       .groupBy(col("first_type"))
       .agg(sum(col("n_purchases")).as("n_purchases"),
         sum(col("purchase_cents")).as("revenue_cents"))
-    out.cache().count()
-    out
-  }
 }

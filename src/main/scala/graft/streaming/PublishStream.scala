@@ -37,9 +37,8 @@ object PublishStream {
       .outputMode("complete")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // localCheckpoint: the staged write + audits re-read the frame;
-        // a MemorySink-less foreachBatch frame is safe, but eager
-        // materialization keeps the audit reading THIS trigger's rows
+        // localCheckpoint: the staged write and the audits re-read the
+        // frame, and must all read THIS trigger's rows
         Storage.writeAuditPublish(batch.localCheckpoint(), stateRoot, id, audits)
         ()
       }
@@ -62,28 +61,22 @@ object PublishStream {
     * full (event_type, day) aggregate, which is exactly the oracle's
     * batch SQL. The refusal path (a poisoned batch that must pin the
     * pointer without killing the stream) is spec'd in StreamingSpec.
-    * Scratch dirs are deleted once the result is materialized. */
-  def auditedPublishReplay(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-st24-")
-    val feedDir = s"$tmp/feed"
-    graft.sources.Tables.events(spark, dir)
-      .repartition(4, col("event_id")).write.mode("overwrite").parquet(feedDir)
-    val schema = spark.read.parquet(feedDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(feedDir)
-    val q = runAuditedPublish(
-      graft.queries.QualityQueries.dailyCounts(stream),
-      s"$tmp/pub", s"$tmp/chk", dailyAudits)
-    try q.processAllAvailable() finally q.stop()
-    val out = Storage.readPublished(spark, s"$tmp/pub")
-      .getOrElse(sys.error("no generation published"))
-      .select(col("event_type"), col("day").cast("string").as("day"), col("n"))
-    out.cache().count() // materialize before the scratch tree goes away
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
+    * The result is snapshotted, then the scratch tree is deleted. */
+  def auditedPublishReplay(spark: SparkSession, dir: String): DataFrame =
+    graft.util.Scratch.withDir("graft-st24-") { tmp =>
+      val feedDir = s"$tmp/feed"
+      graft.sources.Tables.events(spark, dir)
+        .repartition(4, col("event_id")).write.mode("overwrite").parquet(feedDir)
+      val schema = spark.read.parquet(feedDir).schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(feedDir)
+      val q = runAuditedPublish(
+        graft.queries.QualityQueries.dailyCounts(stream),
+        s"$tmp/pub", s"$tmp/chk", dailyAudits)
+      try q.processAllAvailable() finally q.stop()
+      Storage.readPublished(spark, s"$tmp/pub")
+        .getOrElse(sys.error("no generation published"))
+        .select(col("event_type"), col("day").cast("string").as("day"), col("n"))
+        .localCheckpoint()
     }
-    rm(tmp.toFile)
-    out
-  }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.quality.Qs
 
@@ -77,51 +77,27 @@ object QuantileSketchStream {
   /** st33's gated entry: spray the order rows into several key-hashed
     * files, replay one file per micro-batch (so every shard's
     * signature is genuinely folded across batches), drain the state,
-    * and run the shared dq26 report against the batch fixture.
-    * Scratch dirs are deleted once the result is materialized. */
-  private val replayCache = new graft.util.PlanCache(maxEntries = 1)
-
+    * and run the shared dq26 report against the batch fixture. The
+    * scratch feed is deleted once the drain has snapshotted the state;
+    * the report reads only the snapshot and the batch fixture. */
   def quantileSketchReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val rows = graft.queries.QualityQueries.qsRows(
       graft.sources.Tables.orders(spark, dir))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-st33-")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    // the whole body under try/finally: a throw from the streaming
-    // query, the drain, or the report must not leak the scratch tree
-    // under java.io.tmpdir (materialization happens before the finally
-    // runs, so the success path is unchanged)
-    try {
+    val sigs = graft.util.Scratch.withDir("graft-st33-") { tmp =>
       val feedDir = s"$tmp/feed"
       rows.repartition(4, col("k")).write.mode("overwrite").parquet(feedDir)
       val schema = spark.read.parquet(feedDir).schema
-
-      val name = "graft_stream_qsketch"
-      spark.catalog.dropTempView(name)
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(feedDir)
-      val q = sketchStream(stream.as[QsRow]).toDF()
-        .writeStream.outputMode(OutputMode.Update).format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-
-      // the memory sink appends one row per (shard, trigger); keep the
-      // latest update per shard, then localCheckpoint (eager) — the
-      // report joins frames derived from the drained state (st10 lesson)
-      val drained = graft.ops.Relational.dedupeKeepFirst(
-        spark.table(name), Seq("shard"), Seq(col("updates").desc))
-        .localCheckpoint()
-      // persisted through the shared PlanCache lifecycle (not a bare
-      // .cache()) so Caches.releaseAll() reclaims it between bench
-      // tier queries like every other operator-level persist
-      val out = replayCache.persisted(
-        graft.queries.QualityQueries.qsReportFromSignatures(
-          spark, signatureRows(drained), rows))
-      out.count() // materialize before the scratch tree goes away
-      out
-    } finally rm(tmp.toFile)
+      StreamRun.drain("graft_stream_qsketch", sketchStream(stream.as[QsRow]),
+        "update")
+    }
+    // the sink appends one row per (shard, trigger); keep the latest
+    // update per shard
+    val drained = graft.ops.Relational.dedupeKeepFirst(
+      sigs, Seq("shard"), Seq(col("updates").desc))
+    graft.queries.QualityQueries.qsReportFromSignatures(
+      spark, signatureRows(drained), rows)
   }
 }

@@ -12,6 +12,9 @@ import graft.text.Scrub
  */
 object ScrubStream {
 
+  private def documents(spark: SparkSession, dir: String): DataFrame =
+    DocumentProbeStream.readDocuments(spark, s"$dir/documents.parquet")
+
   /**
    * st18: streaming PII scrub — documents arrive as a file stream and
    * the plant/count/mask report runs as a STATELESS projection on the
@@ -21,18 +24,9 @@ object ScrubStream {
    * trigger or restart policy for free (same stateless-twin design as
    * st13's quarantine router). tx34's oracle carries verbatim.
    */
-  def piiScrubReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_pii"
-    spark.catalog.dropTempView(name)
-    val q = Scrub.piiScrubReport(
-      DocumentProbeStream.readDocuments(spark, s"$dir/documents.parquet"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name)
-    out.cache().count()
-    out
-  }
+  def piiScrubReplay(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.drain("graft_stream_pii",
+      Scrub.piiScrubReport(documents(spark, dir)), "append")
 
   /**
    * st19: streaming boilerplate counters — the stream maintains
@@ -47,18 +41,8 @@ object ScrubStream {
    * counts are fold-order-free).
    */
   def segmentDedupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_segcounts"
-    spark.catalog.dropTempView(name)
-    val q = Scrub.segmentCounts(
-      DocumentProbeStream.readDocuments(spark, s"$dir/documents.parquet"),
-      "text", width = 2)
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache: strikeBoilerplate broadcasts
-    // a derived single-row aggregate of this frame, and attribute
-    // dedup cannot clone a MemorySink-backed view's leaf (st10 lesson)
-    val counts = spark.table(name).localCheckpoint()
+    val counts = StreamRun.drain("graft_stream_segcounts",
+      Scrub.segmentCounts(documents(spark, dir), "text", width = 2), "complete")
     Scrub.strikeBoilerplate(Tables.documents(spark, dir), counts,
       "doc_id", "text", width = 2, thresholdDiv = 25.0)
   }
@@ -76,17 +60,9 @@ object ScrubStream {
    * batch operator runs; tx37's oracle carries verbatim.
    */
   def substringDedupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_substr"
-    spark.catalog.dropTempView(name)
-    val q = Scrub.substringStats(
-      DocumentProbeStream.readDocuments(spark, s"$dir/documents.parquet"),
-      "doc_id", "text", width = 30)
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache — the st10/st19 MemorySink
-    // attribute-dedup lesson
-    val stats = spark.table(name).localCheckpoint()
+    val stats = StreamRun.drain("graft_stream_substr",
+      Scrub.substringStats(documents(spark, dir), "doc_id", "text", width = 30),
+      "complete")
     Scrub.strikeSubstrings(Tables.documents(spark, dir), stats,
       "doc_id", "text", width = 30)
   }
@@ -104,17 +80,9 @@ object ScrubStream {
    * oracle carries verbatim.
    */
   def heavyHittersReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_hh"
-    spark.catalog.dropTempView(name)
-    val q = DocumentProbeStream.readDocuments(spark, s"$dir/documents.parquet")
+    val counts = StreamRun.drain("graft_stream_hh", documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("item"))
-      .groupBy(col("item")).agg(count(lit(1)).as("cnt"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager), not cache — the st10/st19 MemorySink
-    // attribute-dedup lesson (the report crossJoins a derived total)
-    val counts = spark.table(name).localCheckpoint()
+      .groupBy(col("item")).agg(count(lit(1)).as("cnt")), "complete")
     graft.ops.Frequency.heavyHittersFromCounts(counts, 63)
       .withColumnRenamed("item", "token")
   }

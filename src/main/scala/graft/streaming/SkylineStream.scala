@@ -26,20 +26,12 @@ import graft.sources.Tables
 object SkylineStream {
 
   def skylineReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_skyline"
-    spark.catalog.dropTempView(name)
     val path = EventStream.streamableDir(s"$dir/orders.parquet")
     val schema = spark.read.parquet(path).schema
-    val q = graft.queries.AdvancedQueries.custSpendCents(
-      spark.readStream.schema(schema).parquet(path)
-        .select(col("o_custkey"), col("o_totalprice")))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // localCheckpoint (eager): the skyline view joins the spend frame
-    // and window-scans its distinct-x reduction — a MemorySink leaf
-    // cannot be re-read across those branches (the st10 lesson)
-    val spend = spark.table(name).localCheckpoint()
+    val spend = StreamRun.drain("graft_stream_skyline",
+      graft.queries.AdvancedQueries.custSpendCents(
+        spark.readStream.schema(schema).parquet(path)
+          .select(col("o_custkey"), col("o_totalprice"))), "complete")
     graft.queries.AdvancedQueries.customerSkyline(
       Tables.customer(spark, dir), spend)
   }

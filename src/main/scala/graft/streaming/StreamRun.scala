@@ -1,0 +1,38 @@
+package graft.streaming
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+
+/**
+ * The one drain behind every memory-sink streaming query. A query
+ * module declares the stream and the batch view over its result; this
+ * helper runs the stream to completion and hands back an immutable
+ * snapshot of what the sink received.
+ *
+ * Why an eager `localCheckpoint`: the memory sink's table is mutable
+ * and lives only while its temp view does, so the rows are copied out
+ * before the view is dropped. The copy is a `LogicalRDD`, which Spark
+ * can re-instantiate, so the shared batch views may self-join or
+ * re-read it (ks, tvd, retention, skyline and the other report views
+ * join frames derived from their own counts). A MemorySink-backed
+ * view's leaf cannot be cloned for that attribute dedup. A cached
+ * copy would stay registered in the cache manager, out of
+ * `Caches.releaseAll`'s reach, and it takes more jobs per drain.
+ */
+object StreamRun {
+
+  /** Run `frame` as a streaming query named `name` into a memory sink
+    * in `outputMode` ("append", "complete" or "update"), process all
+    * available input, stop the query (also on failure) and return the
+    * sink's rows as an eager local checkpoint. The sink's temp view is
+    * dropped before and after, so no view outlives the drain. */
+  def drain(name: String, frame: Dataset[_], outputMode: String): DataFrame = {
+    val spark = frame.sparkSession
+    spark.catalog.dropTempView(name)
+    try {
+      val q = frame.writeStream.outputMode(outputMode).format("memory")
+        .queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table(name).localCheckpoint()
+    } finally spark.catalog.dropTempView(name)
+  }
+}

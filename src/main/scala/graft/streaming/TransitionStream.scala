@@ -93,31 +93,25 @@ object TransitionStream {
   }
 
   /**
-   * st30 replay: drain the pair stream into a memory sink, restrict to
-   * the FINALIZED region (a finite replay's watermark freezes at
+   * st30 replay: drain the pair stream, restrict to the FINALIZED
+   * region (a finite replay's watermark freezes at
    * maxTs − delay, so like st06/st16 the gate keeps pairs whose later
    * event is at least delay + an hour of batch-boundary margin behind
    * the corpus max), then fold q54's matrix over the emitted pairs.
    */
   def transitionReplay(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_transitions"
-    spark.catalog.dropTempView(name)
-    val q = transitionsWithState(
-        EventStream.readEvents(spark, s"$dir/events.parquet"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val pairs = StreamRun.drain("graft_stream_transitions",
+      transitionsWithState(EventStream.readEvents(spark, s"$dir/events.parquet")),
+      "append")
     val maxUs = graft.sources.Tables.events(spark, dir)
       .agg(max(unix_micros(col("ts")))).head().getLong(0)
     val cutoff = maxUs - (2L * 3600 + 3600) * 1000000L
-    val counts = spark.table(name)
+    val counts = pairs
       .filter(col("to_us") <= cutoff)
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
-    val out = counts.withColumn("p",
+    counts.withColumn("p",
       col("n").cast("double") /
         sum(col("n")).over(Window.partitionBy("from_type")).cast("double"))
-    out.cache().count()
-    out
   }
 }

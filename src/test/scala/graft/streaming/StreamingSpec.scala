@@ -499,7 +499,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val ms = MemoryStream[DocumentMergeStream.DocVersion]
     ms.addData(DocumentMergeStream.toVersions(oldV).collect().toSeq)
     ms.addData(DocumentMergeStream.toVersions(newV).collect().toSeq)
-    val merged = DocumentMergeStream.runToCompletion(spark, ms.toDS())
+    val merged = DocumentMergeStream.runToCompletion(ms.toDS())
 
     val batchMerged = DocumentMerge.mergeIncremental(oldV.unionByName(newV))
     val batchSeries = Staging.stgAlphavantage(batchMerged)
@@ -804,5 +804,46 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(2))).sorted.toSeq
       assert(after == gen0)
     } finally query.stop()
+  }
+
+  test("every st query cleans up: no stream, drain view, temp dir or cached dataset outlives two runs") {
+    val stQueries = graft.queries.Registry.all.filter(_.name.startsWith("st"))
+    assert(stQueries.size == 33)
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries(): Int =
+      Option(tmpRoot.list()).getOrElse(Array.empty).count(_.startsWith("graft-"))
+    def tempViews(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    // CacheManager.numCachedEntries is private[sql] in Scala, public in bytecode
+    val cacheManager = spark.sharedState.cacheManager
+    def cachedDatasets(): Int = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    // the st drains name their views graft_stream_*: drop any an earlier
+    // caller left behind, so every view a query leaves shows up as new
+    tempViews().filter(_.startsWith("graft_stream_")).foreach(spark.catalog.dropTempView)
+    val viewsBefore = tempViews()
+    // every leak is collected, so one run names all of them
+    val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
+    def runAll(): Unit = stQueries.foreach { q =>
+      graft.Caches.releaseAll()
+      val cachedBefore = cachedDatasets()
+      q.run(spark, sf).count()
+      if (spark.streams.active.nonEmpty) leaks += s"${q.name}: streaming query still active"
+      graft.Caches.releaseAll()
+      val cached = cachedDatasets() - cachedBefore
+      if (cached != 0) leaks += s"${q.name}: $cached cached datasets after releaseAll"
+      val views = tempViews() -- viewsBefore
+      if (views.nonEmpty) leaks += s"${q.name}: temp views ${views.mkString(", ")}"
+      // dropped so the next query is charged only for its own views
+      views.foreach(spark.catalog.dropTempView)
+    }
+    // the first run creates the memoized streamableDir symlink dirs
+    runAll()
+    val afterFirst = graftEntries()
+    runAll()
+    if (graftEntries() != afterFirst)
+      leaks += s"graft-* entries in java.io.tmpdir: $afterFirst after the first run, " +
+        s"${graftEntries()} after the second"
+    assert(leaks.isEmpty, leaks.mkString("\n", "\n", ""))
   }
 }
