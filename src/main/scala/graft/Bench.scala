@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.queries.Registry
+import graft.util.PlanCache
 
 /**
  * Benchmark main: times the headline queries on
@@ -239,7 +240,7 @@ object Bench {
           var sample: (Double, Double, Double) = (Double.NaN, -1.0, -1.0)
           var settled = false
           while (!settled) {
-            if (releaseBetween) Caches.releaseAll()
+            if (releaseBetween) PlanCache.releaseAll()
             val l = loadavg()
             val snap0 = cpuSnap()
             val t0 = System.nanoTime()
@@ -547,7 +548,7 @@ object Bench {
           val cSf = timeAll(qs, sfDir, rounds = 2, releaseBetween = true)
           val c10 = timeAll(qs, dir10, rounds = 2, releaseBetween = true)
           val c100 = timeAll(qs, dirC, rounds = 2, releaseBetween = true)
-          Caches.releaseAll() // leave no corpus-sized blocks behind
+          PlanCache.releaseAll() // leave no corpus-sized blocks behind
           (cSf, c10, c100)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] corpus100 tier skipped: $e")
@@ -593,7 +594,7 @@ object Bench {
           corpusMiniInfo = BenchData.blowUpIdentity(dirC)
           val r = timeAll(byNames(corpusMiniQueries), dirC, rounds = 2,
             releaseBetween = true)
-          Caches.releaseAll() // leave no corpus-sized blocks behind
+          PlanCache.releaseAll() // leave no corpus-sized blocks behind
           r
         } catch { case e: Throwable =>
           System.err.println(s"[bench] corpus-mini block skipped: $e")
@@ -721,7 +722,7 @@ object Bench {
         .collect { case (tier, Some(v)) => tier -> s4(v) }
       if (pts.isEmpty) None else Some(n -> jmap(pts))
     })
-    val benchCold = s"""{"protocol":"min of 2 cold self-contained samples per point; operator plan-caches flushed before every sample (Caches.releaseAll)","fixtures":{"sf0.1":${jstr(sfDir)},"10x":$blowUpInfo,"100x":$corpus100Info},"queries":$benchColdQueries}"""
+    val benchCold = s"""{"protocol":"min of 2 cold self-contained samples per point; operator plan-caches flushed before every sample (PlanCache.releaseAll)","fixtures":{"sf0.1":${jstr(sfDir)},"10x":$blowUpInfo,"100x":$corpus100Info},"queries":$benchColdQueries}"""
     val skewRule =
       """"flagged iff min/min > 1.5 AND median/median > 1.5 — one outlier-low base sample inflates only the min ratio, ambient crowding inflates only the median ratio; raw per-side series in samples_skew/samples_skew_base""""
     val deepJson =

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.queries.Registry
+import graft.util.PlanCache
 
 /** Local iteration helper: time each named query once (count-forced,
   * no result materialization) on the given fixture dir. Useful when
@@ -26,7 +27,7 @@ object BenchOne {
     spark.sparkContext.setLogLevel("WARN")
     names.foreach {
       case "--release" =>
-        Caches.releaseAll()
+        PlanCache.releaseAll()
         println("[benchone] --release                    (operator caches flushed)")
       case n =>
         val q = Registry.byName.getOrElse(n, sys.error(s"unknown query: $n"))

@@ -24,15 +24,13 @@ object Dedup {
   /** Memoized persisted projections behind [[nearDupPairsWithStats]],
     * [[allPairsJaccard]] and [[hammingNearDups]] — same lifecycle
     * treatment as the similarity-side projection cache: LRU-bounded,
-    * unpersist-on-evict, [[releaseCaches]] as the explicit flush. The
-    * cache key is the canonicalized plan of the PROJECTED frame, so
-    * differing (shingleWidth, k) parameters key distinct entries. */
+    * unpersist-on-evict, [[graft.util.PlanCache.releaseAll]] as the
+    * explicit flush. The cache key is the canonicalized plan of the
+    * PROJECTED frame, so differing (shingleWidth, k) parameters key
+    * distinct entries. */
   private val baseCache = new graft.util.PlanCache(maxEntries = 8)
 
   private[graft] def cachedBaseCount: Int = baseCache.size
-
-  /** Unpersist every memoized shingle/signature projection. */
-  def releaseCaches(): Unit = baseCache.clear()
 
   /** Size-gated SHUFFLE_HASH (r22, guide §3.1): r21's unconditional
     * hint on the banded self-joins bound at EVERY scale and displaced

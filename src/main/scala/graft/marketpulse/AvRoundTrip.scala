@@ -78,6 +78,9 @@ object AvRoundTrip {
           lit("3. Last Refreshed"), col("last_day")).as(Schemas.MetaKey),
         col("series").as(Schemas.SeriesKey))).as("json"))
 
+  // the three frames of one fixture dir, two dirs' worth
+  private val cache = new graft.util.PlanCache(maxEntries = 6)
+
   /**
    * mp05: documents → parse → U2 merge → staging flatten/casts → dim
    * enrichment. Output = one row per (symbol, trading_date) with OHLCV,
@@ -86,12 +89,9 @@ object AvRoundTrip {
   def query(spark: SparkSession, dir: String): DataFrame = {
     // Three consumers scan events (the max-day aggregate, v1's and v2's
     // bar builds) — persist the pruned projection once instead of
-    // paying the parquet scan three times. Deliberately not unpersisted
-    // (the returned frame's lineage references it; MEMORY_AND_DISK is
-    // LRU-evicted under pressure — same rationale as the IVF cache).
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // paying the parquet scan three times.
+    val ev = cache.persisted(Tables.events(spark, dir)
+      .select(col("event_id"), col("ts"), col("event_type"), col("value")))
     // data-derived fetch boundaries, kept declarative (broadcast of a
     // 1-row aggregate instead of a driver-side collect)
     val evB = ev.crossJoin(broadcast(ev.agg(max(to_date(col("ts"))).as("max_day"))))
@@ -106,15 +106,13 @@ object AvRoundTrip {
     // aggregations + JSON round-trip) re-executes up to four times.
     // Both frames are symbol-cardinality (a handful of rows), so the
     // cache cost is nil and the plan collapses to one build.
-    val versions = Ingest.parseDocumentFrame(
+    val versions = cache.persisted(Ingest.parseDocumentFrame(
       v1.withColumn("__fetch", lit("2026-01-01 00:00:00"))
         .unionByName(v2.withColumn("__fetch", lit("2026-01-02 00:00:00"))),
       col("json"),
-      to_timestamp(col("__fetch")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      to_timestamp(col("__fetch"))))
 
-    val merged = DocumentMerge.mergeIncremental(versions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val merged = cache.persisted(DocumentMerge.mergeIncremental(versions))
     val stg = Staging.stgAlphavantage(merged)
     val meta = merged.select(col("symbol"),
       col("data").getField(Schemas.MetaKey).getItem("3. Last Refreshed")

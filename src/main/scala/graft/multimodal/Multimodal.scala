@@ -970,9 +970,6 @@ object Multimodal {
   // frame); without a persist each would re-run the full GIF decode
   private val frameHashCache = new graft.util.PlanCache(maxEntries = 4)
 
-  /** Unpersist the memoized frame-hash projections. */
-  def releaseCaches(): Unit = frameHashCache.clear()
-
   /**
    * Video-level near-duplicates from frame-fingerprint overlap: two
    * videos are near-dups when the Jaccard similarity of their DISTINCT

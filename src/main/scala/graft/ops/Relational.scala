@@ -30,9 +30,6 @@ object Relational {
     * same bounded lifecycle as the dedup/similarity projections. */
   private val rangedCache = new graft.util.PlanCache(maxEntries = 4)
 
-  /** Unpersist the memoized range-partitioned frames. */
-  def releaseCaches(): Unit = rangedCache.clear()
-
   /**
    * Keep exactly one row per key group: the first row under `order`
    * (ties broken by the order columns supplied — callers must make the

@@ -28,26 +28,15 @@ object MultimodalQueries {
 
   // decode-once: a real pipeline materializes decoded features rather
   // than re-running the (pixel-bound) decode per downstream query.
-  // Memoized per source dir — Spark's plan-equality cache dedupe can't
-  // apply here because mapPartitions closures canonicalize per
-  // instance, so we key the persisted frame ourselves.
-  private val featureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // Keyed on the documents scan: the feature frame's own plan cannot
+  // key it, because mapPartitions closures canonicalize per instance.
+  private val featureCache = new graft.util.PlanCache(maxEntries = 2)
 
   private[queries] def features(spark: SparkSession, dir: String): DataFrame = {
-    // a cached frame is only valid while its session lives — a second
-    // main in the same JVM (Verify then Bench) must rebuild, not hand
-    // back a frame bound to a stopped SparkContext
-    val cached = featureCache.get(dir)
-    if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
-    else {
-      val df = Multimodal.extractFeatures(
-        Multimodal.mediaWithRealImages(Tables.documents(spark, dir)),
-        Multimodal.ImageIoDecoder)
-        .toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      featureCache.put(dir, df)
-      df
+    val docs = Tables.documents(spark, dir)
+    featureCache.persistedFor(docs) {
+      Multimodal.extractFeatures(
+        Multimodal.mediaWithRealImages(docs), Multimodal.ImageIoDecoder).toDF()
     }
   }
 

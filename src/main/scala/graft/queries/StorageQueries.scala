@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,8 +16,7 @@ import graft.sources.Tables
 object StorageQueries {
 
   // ---- io01: partitionBy sink + pruned scan + E11 key formatting ----
-  private def io01(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-io01-").toString
+  private def io01(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     Tables.documents(spark, dir)
       .write.mode("overwrite").partitionBy("lang").parquet(tmp)
     spark.read.parquet(tmp)
@@ -83,9 +80,8 @@ object StorageQueries {
   //      Same math as sim05 end-to-end (shared scoring code, doubles
   //      bit-preserved through parquet), so it shares sim05's
   //      generated oracle. ----
-  private def io03(spark: SparkSession, dir: String): DataFrame = {
+  private[queries] def io03(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.similarity.Similarity
-    val tmp = Files.createTempDirectory("graft-io03-").toString
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     Similarity.ivfLayout(emb)
@@ -104,9 +100,8 @@ object StorageQueries {
   //      composed oracle is mechanical: sim05's fitted-centroid cell
   //      CTEs pick the meeting pairs, sim08's quantized CTEs score
   //      them. ----
-  private def io04(spark: SparkSession, dir: String): DataFrame = {
+  private[queries] def io04(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.similarity.Similarity
-    val tmp = Files.createTempDirectory("graft-io04-").toString
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     Similarity.quantizedIvfLayout(emb)
@@ -126,9 +121,8 @@ object StorageQueries {
   //      which is the only correctness a layout operator has.
   //      StorageSpec pins the physical claims (file count hits
   //      ceil(bytes/target); no shuffle in the rewrite plan). ----
-  private def io05(spark: SparkSession, dir: String): DataFrame = {
+  private def io05(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.ops.Exact._
-    val tmp = Files.createTempDirectory("graft-io05-").toString
     Tables.lineitem(spark, dir).repartition(64)
       .write.mode("overwrite").parquet(s"$tmp/small")
     val compacted = graft.ops.Storage.compact(
@@ -156,9 +150,8 @@ object StorageQueries {
   //      (.schema(merged)) once it's known; the reconciliation
   //      semantics (null-fill, by-name matching) are what this query
   //      gates, and they are identical either way. ----
-  private def io06(spark: SparkSession, dir: String): DataFrame = {
+  private def io06(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.ops.Exact._
-    val tmp = Files.createTempDirectory("graft-io06-").toString
     val orders = Tables.orders(spark, dir)
     orders.filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_totalprice")
@@ -231,9 +224,8 @@ object StorageQueries {
   //      click partition carries the corrected values AND the other
   //      four survived the overwrite byte-for-byte (their aggregates
   //      still match the original table). ----
-  private def io08(spark: SparkSession, dir: String): DataFrame = {
+  private def io08(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.ops.Exact._
-    val tmp = Files.createTempDirectory("graft-io08-").toString
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
@@ -270,10 +262,9 @@ object StorageQueries {
   //      the oracle is the plain full-scan range aggregate, and
   //      StorageSpec pins that the pruned file list is a strict
   //      subset with the overlap guarantee intact. ----
-  private def io09(spark: SparkSession, dir: String): DataFrame = {
+  private def io09(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.ops.Exact._
     import graft.ops.Storage
-    val tmp = Files.createTempDirectory("graft-io09-").toString
     val manifest = Storage.sortedStoreWithManifest(
       Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_totalprice")),
@@ -302,10 +293,9 @@ object StorageQueries {
   //      Skipping stays a superset guarantee: the exact predicate
   //      applies after the skip, and the oracle is the plain full-scan
   //      2-D aggregate. ----
-  private def io10(spark: SparkSession, dir: String): DataFrame = {
+  private def io10(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.ops.Exact._
     import graft.ops.Storage
-    val tmp = Files.createTempDirectory("graft-io10-").toString
     val manifest = Storage.clusteredStoreWithManifest(
       Tables.orders(spark, dir)
         .select(col("o_custkey"), col("o_totalprice"),
@@ -389,9 +379,8 @@ object StorageQueries {
   //      the expired snapshot is really gone (in-engine boolean, the
   //      dq02 split-gate style — DuckDB can't probe the temp store's
   //      filesystem). ----
-  private def io12(spark: SparkSession, dir: String): DataFrame = {
+  private def io12(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.ops.Exact._
-    val tmp = Files.createTempDirectory("graft-io12-").toString
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
     // repartition, not coalesce: a small fixture reads as ONE input
@@ -448,8 +437,7 @@ object StorageQueries {
   //      (in-engine booleans, the dq02 split-gate style) — a dropped
   //      row, a duplicated task retry, or a corrupted value flips
   //      checksum_match even when counts agree. ----
-  private def io13(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-io13-").toString
+  private def io13(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     val src = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
     src.write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp)
@@ -486,8 +474,8 @@ object StorageQueries {
   //      broadcast (no driver action); a production pipeline is HANDED
   //      its delta as arriving files, so the second raw scan under the
   //      delta filter is fixture-shaped, not part of the scale claim. ----
-  private[queries] def incrementalBars(spark: SparkSession, dir: String): (DataFrame, String) = {
-    val tmp = Files.createTempDirectory("graft-io14-").toString
+  private[queries] def incrementalBars(spark: SparkSession, dir: String,
+                                       tmp: String): DataFrame = {
     val ev = Tables.events(spark, dir).select(
       col("event_type"),
       date_trunc("day", col("ts")).cast(org.apache.spark.sql.types.DateType)
@@ -520,7 +508,7 @@ object StorageQueries {
     // and a fixture whose events all land on one day leaves the history
     // store EMPTY (only _SUCCESS) — schema inference would fail where
     // the declared schema yields the correct empty frame
-    val merged = spark.read.schema(delta.schema).parquet(tmp)
+    spark.read.schema(delta.schema).parquet(tmp)
       .unionByName(delta)
       .groupBy(col("event_type"), col("day"))
       .agg(
@@ -531,11 +519,7 @@ object StorageQueries {
         sum(col("volume")).as("volume"))
       .select(col("event_type"), col("day"), col("open"), col("high"),
         col("low"), col("close"), col("volume"))
-    (merged, tmp)
   }
-
-  private def io14(spark: SparkSession, dir: String): DataFrame =
-    incrementalBars(spark, dir)._1
 
   private val io14Oracle =
     s"WITH ${MarketPulseQueries.barsCte} SELECT * FROM bars"
@@ -608,9 +592,8 @@ object StorageQueries {
   //      top-10 gates cell-exact. ----
   private val Io17Terms = Seq("spark", "window", "join")
 
-  private def io17(spark: SparkSession, dir: String): DataFrame = {
+  private[queries] def io17(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-io17-").toString
     val docs = Tables.documents(spark, dir)
     val bucket = pmod(xxhash64(col("term")), lit(64))
     docs.select(col("doc_id"),
@@ -761,33 +744,30 @@ object StorageQueries {
   //      on the staged FILES (a lossy writer fails its own audit);
   //      publish is one atomic pointer rename, metadata-sized at any
   //      table scale. ----
-  private def io19(spark: SparkSession, dir: String): DataFrame = {
+  private def io19(spark: SparkSession, dir: String, root: String): DataFrame = {
     import graft.ops.Exact._
-    graft.util.Scratch.withDir("graft-io19-") { root =>
-      def daily(extra: DataFrame => DataFrame) = extra(
-        Tables.orders(spark, dir)
-          .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_orders"),
-            sumExact(dec(col("o_totalprice"))).as("revenue")))
-      val audits = Seq[(String, DataFrame => Boolean)](
-        "nonempty" -> (d => d.limit(1).count() == 1),
-        "key_not_null" -> (d => d.filter(col("day").isNull).limit(1).count() == 0),
-        "key_unique" -> (d =>
-          d.groupBy(col("day")).agg(count(lit(1)).as("__n"))
-            .filter(col("__n") > 1).limit(1).count() == 0))
-      val (ok0, _) = graft.ops.Storage.writeAuditPublish(
-        daily(identity), root, gen = 0, audits)
-      require(ok0, "clean generation must publish")
-      val poison = daily(d => d
-        .unionByName(d.limit(1).select(lit(null).cast("string").as("day"),
-          col("n_orders"), col("revenue")))
-        .unionByName(d.limit(1)))
-      val (ok1, _) = graft.ops.Storage.writeAuditPublish(poison, root, gen = 1, audits)
-      require(!ok1, "poisoned generation must be refused")
-      // snapshot before the scratch tree goes away
-      graft.ops.Storage.readPublished(spark, root)
-        .getOrElse(sys.error("pointer vanished")).localCheckpoint()
-    }
+    def daily(extra: DataFrame => DataFrame) = extra(
+      Tables.orders(spark, dir)
+        .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
+        .agg(count(lit(1)).as("n_orders"),
+          sumExact(dec(col("o_totalprice"))).as("revenue")))
+    val audits = Seq[(String, DataFrame => Boolean)](
+      "nonempty" -> (d => d.limit(1).count() == 1),
+      "key_not_null" -> (d => d.filter(col("day").isNull).limit(1).count() == 0),
+      "key_unique" -> (d =>
+        d.groupBy(col("day")).agg(count(lit(1)).as("__n"))
+          .filter(col("__n") > 1).limit(1).count() == 0))
+    val (ok0, _) = graft.ops.Storage.writeAuditPublish(
+      daily(identity), root, gen = 0, audits)
+    require(ok0, "clean generation must publish")
+    val poison = daily(d => d
+      .unionByName(d.limit(1).select(lit(null).cast("string").as("day"),
+        col("n_orders"), col("revenue")))
+      .unionByName(d.limit(1)))
+    val (ok1, _) = graft.ops.Storage.writeAuditPublish(poison, root, gen = 1, audits)
+    require(!ok1, "poisoned generation must be refused")
+    graft.ops.Storage.readPublished(spark, root)
+      .getOrElse(sys.error("pointer vanished"))
   }
 
   private val io19Oracle =
@@ -809,39 +789,35 @@ object StorageQueries {
   //      exchange-free bin-packing; deletes are applied ONCE at
   //      rewrite time instead of per-read forever — that trade is the
   //      whole point of OPTIMIZE. ----
-  private def io20(spark: SparkSession, dir: String): DataFrame = {
+  private def io20(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.util.Scratch.withDir("graft-io20-") { tmp =>
-      val addressed = Tables.orders(spark, dir)
-        .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
-        .withColumn("pos", row_number().over(
-          Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
-      val posDeletes = addressed.filter(col("o_orderkey") % 7 === 0)
-        .select(col("file_id"), col("pos"))
-      val eqDeletes = spark.range(1).select(lit("5-LOW").as("o_orderpriority"))
-      graft.ops.Storage.applyDeletes(addressed, posDeletes, eqDeletes,
-          Seq("o_orderpriority"))
-        .drop("file_id", "pos")
-        .write.mode("overwrite").parquet(s"$tmp/live")
-      val (bytes, _) = graft.ops.Storage.dataFiles(spark, s"$tmp/live")
-      graft.ops.Storage.compact(spark, s"$tmp/live", s"$tmp/compacted",
-        math.max(1L, bytes / 2))
-      // sidecars now EMPTY: the rewrite retired every delete
-      posDeletes.limit(0).write.mode("overwrite").parquet(s"$tmp/posdel")
-      val base2 = spark.read.parquet(s"$tmp/compacted")
-        .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
-        .withColumn("pos", row_number().over(
-          Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
-      // snapshot before the scratch tree goes away
-      graft.ops.Storage.applyDeletes(
-          base2, spark.read.parquet(s"$tmp/posdel"),
-          eqDeletes.limit(0), Seq("o_orderpriority"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_live"),
-          graft.ops.Exact.sumExact(
-            graft.ops.Exact.dec(col("o_totalprice"))).as("revenue"))
-        .localCheckpoint()
-    }
+    val addressed = Tables.orders(spark, dir)
+      .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
+      .withColumn("pos", row_number().over(
+        Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
+    val posDeletes = addressed.filter(col("o_orderkey") % 7 === 0)
+      .select(col("file_id"), col("pos"))
+    val eqDeletes = spark.range(1).select(lit("5-LOW").as("o_orderpriority"))
+    graft.ops.Storage.applyDeletes(addressed, posDeletes, eqDeletes,
+        Seq("o_orderpriority"))
+      .drop("file_id", "pos")
+      .write.mode("overwrite").parquet(s"$tmp/live")
+    val (bytes, _) = graft.ops.Storage.dataFiles(spark, s"$tmp/live")
+    graft.ops.Storage.compact(spark, s"$tmp/live", s"$tmp/compacted",
+      math.max(1L, bytes / 2))
+    // sidecars now EMPTY: the rewrite retired every delete
+    posDeletes.limit(0).write.mode("overwrite").parquet(s"$tmp/posdel")
+    val base2 = spark.read.parquet(s"$tmp/compacted")
+      .withColumn("file_id", pmod(col("o_orderkey"), lit(8)))
+      .withColumn("pos", row_number().over(
+        Window.partitionBy(col("file_id")).orderBy(col("o_orderkey"))))
+    graft.ops.Storage.applyDeletes(
+        base2, spark.read.parquet(s"$tmp/posdel"),
+        eqDeletes.limit(0), Seq("o_orderpriority"))
+      .groupBy(col("o_orderstatus"))
+      .agg(count(lit(1)).as("n_live"),
+        graft.ops.Exact.sumExact(
+          graft.ops.Exact.dec(col("o_totalprice"))).as("revenue"))
   }
 
   // ---- io21: boundary-planned balanced range layout — the layout
@@ -858,9 +834,8 @@ object StorageQueries {
   //      (a) the deterministic plan matched the oracle's SQL-derived
   //      boundaries and (b) the round-trip dropped/duplicated
   //      nothing. The 8-row audit window is metadata-sized. ----
-  private def io21(spark: SparkSession, dir: String): DataFrame = {
+  private def io21(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tmp = Files.createTempDirectory("graft-io21-").toString
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("__k"))
@@ -919,9 +894,8 @@ object StorageQueries {
   //      split (the io06 recipe); the oracle recomputes from the
   //      original table, so green means the mixed-layout read
   //      dropped/duplicated/misattributed nothing. ----
-  private def io22(spark: SparkSession, dir: String): DataFrame = {
+  private def io22(spark: SparkSession, dir: String, tmp: String): DataFrame = {
     import graft.ops.Exact._
-    val tmp = Files.createTempDirectory("graft-io22-").toString
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"),
         to_date(col("ts")).as("day"))
@@ -954,9 +928,8 @@ object StorageQueries {
   //      prior generations — and the gated result reads THROUGH the
   //      pointer: if the rollback silently failed, readers would see
   //      gen 1's halved counts and every cell would mismatch. ----
-  private def io23(spark: SparkSession, dir: String): DataFrame = {
+  private def io23(spark: SparkSession, dir: String, root: String): DataFrame = {
     import graft.ops.Exact._
-    val root = Files.createTempDirectory("graft-io23-").toString
     val ev = Tables.events(spark, dir)
     val audits: Seq[(String, DataFrame => Boolean)] = Seq(
       "nonempty" -> (df => df.limit(1).count() == 1),
@@ -997,8 +970,8 @@ object StorageQueries {
   //      fact delta is the newest order date's arrivals (discovered
   //      via a 1-row broadcast cutoff, like io14 — production is
   //      HANDED its delta as arriving files). ----
-  private[queries] def deltaJoinView(spark: SparkSession, dir: String): (DataFrame, String) = {
-    val tmp = Files.createTempDirectory("graft-io24-").toString
+  private[queries] def deltaJoinView(spark: SparkSession, dir: String,
+                                     tmp: String): DataFrame = {
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderdate"))
@@ -1027,11 +1000,8 @@ object StorageQueries {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         coalesce(col("d_mktsegment"), col("c_mktsegment")).as("c_mktsegment"),
         col("c_nationkey"))
-    (overlaid.unionByName(enrich(deltaFacts, dimNew)), tmp)
+    overlaid.unionByName(enrich(deltaFacts, dimNew))
   }
-
-  private def io24(spark: SparkSession, dir: String): DataFrame =
-    deltaJoinView(spark, dir)._1
 
   private val io24Oracle =
     """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice,
@@ -1040,31 +1010,42 @@ object StorageQueries {
       |  c.c_nationkey
       |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey""".stripMargin
 
+  /** A store-backed query as the registry runs it: `build` writes its
+    * store under a fresh scratch tree, and the result is snapshotted
+    * (eager `localCheckpoint`) before the tree is deleted, so no run
+    * leaves a store behind. */
+  private def scratch(n: String)(
+      build: (SparkSession, String, String) => DataFrame): (SparkSession, String) => DataFrame =
+    (spark, dir) => graft.util.Scratch.withDir(s"graft-io$n-") { tmp =>
+      build(spark, dir, tmp).localCheckpoint()
+    }
+
   val all: Seq[GraftQuery] = Seq(
-    GraftQuery("io01_partitioned_sink", io01, Some(io01Oracle)),
+    GraftQuery("io01_partitioned_sink", scratch("01")(io01), Some(io01Oracle)),
     GraftQuery("io02_bucketed_join", io02, Some(io02Oracle)),
-    GraftQuery("io03_ivf_store", io03, None,
+    GraftQuery("io03_ivf_store", scratch("03")(io03), None,
       oracleGen = Some(SimilarityQueries.sim05OracleGen)),
-    GraftQuery("io04_quantized_ivf_store", io04, None,
+    GraftQuery("io04_quantized_ivf_store", scratch("04")(io04), None,
       oracleGen = Some(SimilarityQueries.io04OracleGen)),
-    GraftQuery("io05_compacted_store", io05, Some(io05Oracle)),
-    GraftQuery("io06_schema_evolution", io06, Some(io06Oracle)),
+    GraftQuery("io05_compacted_store", scratch("05")(io05), Some(io05Oracle)),
+    GraftQuery("io06_schema_evolution", scratch("06")(io06), Some(io06Oracle)),
     GraftQuery("io07_snapshot_diff", io07, Some(io07Oracle)),
-    GraftQuery("io08_dynamic_overwrite", io08, Some(io08Oracle)),
-    GraftQuery("io09_manifest_skipping", io09, Some(io09Oracle)),
-    GraftQuery("io10_zorder_skipping", io10, Some(io10Oracle)),
+    GraftQuery("io08_dynamic_overwrite", scratch("08")(io08), Some(io08Oracle)),
+    GraftQuery("io09_manifest_skipping", scratch("09")(io09), Some(io09Oracle)),
+    GraftQuery("io10_zorder_skipping", scratch("10")(io10), Some(io10Oracle)),
     GraftQuery("io11_bloom_join", io11, Some(io11Oracle)),
-    GraftQuery("io12_snapshot_expiry", io12, Some(io12Oracle)),
-    GraftQuery("io13_reconciliation", io13, Some(io13Oracle)),
-    GraftQuery("io14_incremental_refresh", io14, Some(io14Oracle), headline = true),
+    GraftQuery("io12_snapshot_expiry", scratch("12")(io12), Some(io12Oracle)),
+    GraftQuery("io13_reconciliation", scratch("13")(io13), Some(io13Oracle)),
+    GraftQuery("io14_incremental_refresh", scratch("14")(incrementalBars),
+      Some(io14Oracle), headline = true),
     GraftQuery("io15_cdc_apply", io15, Some(io15Oracle)),
     GraftQuery("io16_cdc_time_travel", io16, Some(io16Oracle)),
-    GraftQuery("io17_inverted_index", io17, Some(io17Oracle)),
+    GraftQuery("io17_inverted_index", scratch("17")(io17), Some(io17Oracle)),
     GraftQuery("io18_merge_on_read_deletes", io18, Some(io18Oracle)),
-    GraftQuery("io19_write_audit_publish", io19, Some(io19Oracle)),
-    GraftQuery("io20_mor_compaction", io20, Some(io18Oracle)),
-    GraftQuery("io21_range_layout", io21, Some(io21Oracle)),
-    GraftQuery("io22_partition_evolution", io22, Some(io22Oracle)),
-    GraftQuery("io23_snapshot_rollback", io23, Some(io23Oracle)),
-    GraftQuery("io24_delta_join_view", io24, Some(io24Oracle)))
+    GraftQuery("io19_write_audit_publish", scratch("19")(io19), Some(io19Oracle)),
+    GraftQuery("io20_mor_compaction", scratch("20")(io20), Some(io18Oracle)),
+    GraftQuery("io21_range_layout", scratch("21")(io21), Some(io21Oracle)),
+    GraftQuery("io22_partition_evolution", scratch("22")(io22), Some(io22Oracle)),
+    GraftQuery("io23_snapshot_rollback", scratch("23")(io23), Some(io23Oracle)),
+    GraftQuery("io24_delta_join_view", scratch("24")(deltaJoinView), Some(io24Oracle)))
 }

@@ -440,28 +440,15 @@ object Similarity {
   /** The shared candidate projection behind [[ivfTopK]] and
     * [[fitCentroids]] — persisted so the quantizer training sample and
     * the cell assignment scan it once, memoized per canonicalized
-    * source plan so repeated queries reuse one persisted frame instead
-    * of re-registering. MEMORY_AND_DISK entries are LRU-evicted under
-    * pressure; [[releaseCaches]] is the explicit lifecycle hook for
-    * long multi-corpus sessions. */
-  private def candProjection(candidates: DataFrame): DataFrame = {
-    val key = candidates.queryExecution.analyzed.canonicalized
-    projCache.synchronized {
-      // session-validity guard: canonicalized scans can match across
-      // sessions in one JVM, and a frame from a stopped session is dead
-      val cached = projCache.get(key)
-      if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
-      else {
-        projectionBuilds.incrementAndGet()
-        val df = candidates
-          .select(col("id").as("cand_id"), toDoubleVec(col("vec")).as("cvec"))
-          .withColumn("cnorm", l2Norm(col("cvec")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        projCache.put(key, df)
-        df
-      }
+    * candidates plan so repeated queries reuse one persisted frame
+    * instead of re-registering. */
+  private def candProjection(candidates: DataFrame): DataFrame =
+    cache.persistedFor(candidates) {
+      projectionBuilds.incrementAndGet()
+      candidates
+        .select(col("id").as("cand_id"), toDoubleVec(col("vec")).as("cvec"))
+        .withColumn("cnorm", l2Norm(col("cvec")))
     }
-  }
 
   /** Cap on memoized persisted projections: a multi-corpus sweep holds
     * at most this many frames; beyond it the least-recently-used is
@@ -469,21 +456,11 @@ object Similarity {
     * eviction never changes results, only cost). */
   val MaxCachedProjections = 8
 
-  // access-ordered LinkedHashMap = LRU; eviction unpersists so the
-  // executor-side blocks go with the map entry, not at session death
-  private val projCache = new java.util.LinkedHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
-      16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                               DataFrame]): Boolean =
-      if (size > MaxCachedProjections) {
-        e.getValue.unpersist(blocking = false); true
-      } else false
-  }
+  // the candidate projections plus the fitted quantizers and codebooks
+  // (driver-side memo, nCells × dim doubles per entry)
+  private val cache = new graft.util.PlanCache(MaxCachedProjections)
 
-  private[graft] def cachedProjectionCount: Int =
-    projCache.synchronized(projCache.size)
+  private[graft] def cachedProjectionCount: Int = cache.size
 
   // forensic counters (profile specs): how many times the projection
   // was actually BUILT (persisted) and the quantizer actually FIT —
@@ -491,18 +468,6 @@ object Similarity {
   // identical queries shows up as a count > 1
   private[graft] val projectionBuilds = new java.util.concurrent.atomic.AtomicInteger
   private[graft] val quantizerFits = new java.util.concurrent.atomic.AtomicInteger
-
-  /** Drop every cached candidate projection and memoized quantizer —
-    * the explicit cache lifecycle hook (the LRU bound handles steady
-    * state; this is the full flush). */
-  def releaseCaches(): Unit = {
-    projCache.synchronized {
-      projCache.values.forEach(df => { df.unpersist(blocking = false); () })
-      projCache.clear()
-    }
-    centroidCache.synchronized(centroidCache.clear())
-    pqCache.synchronized(pqCache.clear())
-  }
 
   /**
    * The IVF coarse quantizer: seeded k-means over a seeded ≤4096-row
@@ -527,11 +492,8 @@ object Similarity {
     // so repeated queries — and the oracle generator re-deriving the
     // centroids — skip the k-means fit instead of re-training per
     // invocation. Deterministic fit ⇒ memoization is purely a cost
-    // optimization; [[releaseCaches]] clears it.
-    val key = (candidates.queryExecution.analyzed.canonicalized, nCells, seed)
-    val cached = centroidCache.synchronized(centroidCache.get(key))
-    if (cached != null) cached
-    else {
+    // optimization.
+    cache.memo(candidates, "centroids", nCells, seed) {
       quantizerFits.incrementAndGet()
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
@@ -541,21 +503,8 @@ object Similarity {
         .limit(4096)
       val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(5)
         .setFeaturesCol("features").fit(train)
-      val centroids = model.clusterCenters.map(_.toArray).toSeq
-      centroidCache.synchronized(centroidCache.put(key, centroids))
-      centroids
+      model.clusterCenters.map(_.toArray).toSeq
     }
-  }
-
-  // driver-memory-only (nCells × dim doubles per entry) but bounded for
-  // the same multi-corpus-session reason as the projection cache
-  private val centroidCache = new java.util.LinkedHashMap[
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Long),
-      Seq[Array[Double]]](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[
-          (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Long),
-          Seq[Array[Double]]]): Boolean = size > 64
   }
 
   /** The IVF STORAGE layout: every candidate with its nearest-cell
@@ -725,17 +674,13 @@ object Similarity {
   def fitPqCodebooks(candidates: DataFrame, dim: Int, subspaces: Int = 4,
                      nCodes: Int = 16, seed: Long = 42L): Seq[Seq[Array[Double]]] = {
     require(dim % subspaces == 0, "dim must split evenly into subspaces")
-    val key = (candidates.queryExecution.analyzed.canonicalized,
-      dim * 1000000 + subspaces * 1000 + nCodes, seed)
-    val cached = pqCache.synchronized(pqCache.get(key))
-    if (cached != null) cached
-    else {
+    cache.memo(candidates, "pq", dim, subspaces, nCodes, seed) {
       quantizerFits.incrementAndGet()
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val subDim = dim / subspaces
       val proj = candProjection(candidates)
-      val books = (0 until subspaces).map { m =>
+      (0 until subspaces).map { m =>
         val train = proj
           .select(array_to_vector(
             slice(col("cvec"), m * subDim + 1, subDim)).as("features"))
@@ -745,18 +690,7 @@ object Similarity {
           .setFeaturesCol("features").fit(train)
           .clusterCenters.map(_.toArray).toSeq
       }
-      pqCache.synchronized(pqCache.put(key, books))
-      books
     }
-  }
-
-  private val pqCache = new java.util.LinkedHashMap[
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Long),
-      Seq[Seq[Array[Double]]]](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[
-          (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Long),
-          Seq[Seq[Array[Double]]]]): Boolean = size > 16
   }
 
   /** The PQ-encoded corpus: `(cand_id, codes, rn2)` — `codes(m)` is

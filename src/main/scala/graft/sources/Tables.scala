@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -45,34 +47,44 @@ object Tables {
    * need a total order (`unix_micros * 1000` on the micros layout — the
    * same value the nanos layout carries, micro-truncated).
    */
-  /** Raw events frame in whichever physical layout the fixture has.
-    * The legacy nanos conf is session-global by Spark's design (no
-    * per-relation override exists), so it is touched ONLY when the
-    * file actually carries TIMESTAMP(NANOS) — which Spark otherwise
-    * rejects at schema resolution — detected by attempting the plain
-    * read first. Current MICROS fixtures therefore never mutate the
-    * shared session (the io08/io11 isolation lesson); on a legacy
-    * nanos fixture the flag's only observable effect is on nanos
-    * columns, which exist in no other table. */
+  /** Raw events frame in whichever physical layout the fixture has. */
   private[graft] def eventsRaw(spark: SparkSession, dir: String): DataFrame =
-    try load(spark, dir, "events")
-    catch {
-      case first: Throwable =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try load(spark, dir, "events")
-        catch { case _: Throwable => throw first }
-    }
+    eventsFile(spark, s"$dir/events.parquet")._1
 
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = eventsRaw(spark, dir)
-    val tsCols = raw.schema("ts").dataType match {
+  /** The events parquet at `path` read as a batch frame, with the
+    * expressions mapping its `ts` onto microsecond `TimestampType` `ts`
+    * and nanosecond `ts_ns` — the one layout probe both the batch and
+    * the streaming loader use. The legacy nanos conf is session-global
+    * by Spark's design (no per-relation override exists), so it is
+    * touched ONLY when the file actually carries TIMESTAMP(NANOS) —
+    * which Spark otherwise rejects at schema resolution — detected by
+    * attempting the plain read first. Current MICROS fixtures therefore
+    * never mutate the shared session (the io08/io11 isolation lesson);
+    * on a legacy nanos fixture the flag's only observable effect is on
+    * nanos columns, which exist in no other table. A fatal error
+    * (out of memory, interrupt) during the plain read propagates
+    * instead of flipping the conf. */
+  private[graft] def eventsFile(spark: SparkSession,
+                                path: String): (DataFrame, String, String) = {
+    val raw =
+      try spark.read.parquet(path)
+      catch {
+        case NonFatal(first) =>
+          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          try spark.read.parquet(path)
+          catch { case NonFatal(_) => throw first }
+      }
+    raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        Seq("timestamp_micros(ts div 1000) AS ts", "ts AS ts_ns")
+        (raw, "timestamp_micros(ts div 1000) AS ts", "ts AS ts_ns")
       case _ =>
-        Seq("cast(ts AS timestamp) AS ts",
+        (raw, "cast(ts AS timestamp) AS ts",
           "unix_micros(cast(ts AS timestamp)) * 1000 AS ts_ns")
     }
-    raw.selectExpr(
-      Seq("event_id") ++ tsCols ++ Seq("user_id", "event_type", "value", "props"): _*)
+  }
+
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    val (raw, ts, tsNs) = eventsFile(spark, s"$dir/events.parquet")
+    raw.selectExpr("event_id", ts, tsNs, "user_id", "event_type", "value", "props")
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,24 +51,8 @@ object EventStream {
     * the same microsecond `TimestampType` column. */
   def readEvents(spark: SparkSession, path: String): DataFrame = {
     val dir = streamableDir(path)
-    // Same fallback discipline as Tables.eventsRaw (TablesSpec pins
-    // it): the legacy-nanos conf is session-global by Spark's design,
-    // so it is touched ONLY when the footer actually carries
-    // TIMESTAMP(NANOS) — which the plain schema probe rejects —
-    // never unconditionally on current MICROS fixtures.
-    val fileSchema =
-      try spark.read.parquet(dir).schema
-      catch {
-        case NonFatal(first) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          try spark.read.parquet(dir).schema
-          catch { case NonFatal(_) => throw first }
-      }
-    val tsExpr = fileSchema("ts").dataType match {
-      case LongType => "timestamp_micros(ts div 1000) AS ts"
-      case _        => "cast(ts AS timestamp) AS ts"
-    }
-    spark.readStream.schema(fileSchema).parquet(dir)
+    val (probe, tsExpr, _) = graft.sources.Tables.eventsFile(spark, dir)
+    spark.readStream.schema(probe.schema).parquet(dir)
       .selectExpr("event_id", tsExpr, "user_id", "event_type", "value", "props")
   }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
  * join frames derived from their own counts). A MemorySink-backed
  * view's leaf cannot be cloned for that attribute dedup. A cached
  * copy would stay registered in the cache manager, out of
- * `Caches.releaseAll`'s reach, and it takes more jobs per drain.
+ * `PlanCache.releaseAll`'s reach, and it takes more jobs per drain.
  */
 object StreamRun {
 

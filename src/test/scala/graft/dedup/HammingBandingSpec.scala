@@ -62,7 +62,7 @@ class HammingBandingSpec extends AnyFunSuite with SparkSpec {
       assert(got == expected,
         s"($m,$b): lost ${(expected -- got).take(3)}; " +
           s"invented ${(got -- expected).take(3)}")
-      Dedup.releaseCaches()
+      graft.util.PlanCache.releaseAll()
     }
   }
 
@@ -71,7 +71,7 @@ class HammingBandingSpec extends AnyFunSuite with SparkSpec {
     val auto = Dedup.hammingNearDupsAuto(rows.toDF("id", "sh"), maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(auto == brute(rows, 6))
-    Dedup.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 
   test("auto path's banded join is size-gated: broadcast at toy scale, hinted hash above") {
@@ -79,7 +79,7 @@ class HammingBandingSpec extends AnyFunSuite with SparkSpec {
     // tx09): the fingerprint count the auto-banding already pays for
     // decides hint-vs-AQE-broadcast. Pinned on the SPECIFIC banded
     // join node by its (band, chunk) keys.
-    Dedup.releaseCaches()
+    graft.util.PlanCache.releaseAll()
     val rows = corpus(200, 6, seed = 11).toDF("id", "sh")
     val df = Dedup.hammingNearDupsAuto(rows, maxHamming = 6)
     df.collect() // execute so AQE's FINAL plan is the witness
@@ -92,7 +92,7 @@ class HammingBandingSpec extends AnyFunSuite with SparkSpec {
     val saved = spark.conf.get(conf)
     try {
       spark.conf.set(conf, "1024")
-      Dedup.releaseCaches()
+      graft.util.PlanCache.releaseAll()
       val hinted = Dedup.hammingNearDupsAuto(rows, maxHamming = 6)
         .queryExecution.executedPlan.toString
       assert(hinted.contains("ShuffledHashJoin [band"),
@@ -101,12 +101,12 @@ class HammingBandingSpec extends AnyFunSuite with SparkSpec {
         s"banded self-join must never sort the banded frame:\n$hinted")
     } finally {
       spark.conf.set(conf, saved)
-      Dedup.releaseCaches()
+      graft.util.PlanCache.releaseAll()
     }
   }
 
   test("banded self-join stays a hash join over the one persisted base") {
-    Dedup.releaseCaches()
+    graft.util.PlanCache.releaseAll()
     val rows = corpus(200, 6, seed = 7)
     val plan = Dedup.hammingNearDups(rows.toDF("id", "sh"),
         maxHamming = 6, bands = 10)
@@ -119,6 +119,6 @@ class HammingBandingSpec extends AnyFunSuite with SparkSpec {
       s"banded self-join must hash, not sort:\n$plan")
     assert(plan.contains("InMemoryTableScan"),
       s"fingerprint base must serve from the persist:\n$plan")
-    Dedup.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 }

@@ -103,4 +103,34 @@ class PlanCacheCountSpec extends AnyFunSuite with graft.SparkSpec {
     assert(n1 == 37 && n2 == 37 && m == 5)
     cache.clear()
   }
+
+  test("PlanCache.clear drops the count memo: the next memoizedCount counts again") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val cache = new graft.util.PlanCache(maxEntries = 2)
+    val df = (1 to 41).toDF("memo_probe")
+    val counts = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("count_sentinel")) sentinel.countDown()
+        else if (funcName == "count") { counts.incrementAndGet(); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(cache.memoizedCount(df) == 41)
+      assert(cache.memoizedCount(df) == 41) // memo hit: no job
+      cache.clear()
+      assert(cache.memoizedCount(df) == 41) // counted again
+      // listener delivery is asynchronous but in order: once a sentinel
+      // action run afterwards is seen, every count before it is too
+      spark.range(1).toDF("count_sentinel").collect()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(counts.get == 2, s"expected 2 counting executions, saw ${counts.get}")
+    cache.clear()
+  }
 }

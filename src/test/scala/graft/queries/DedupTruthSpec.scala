@@ -59,7 +59,7 @@ class DedupTruthSpec extends AnyFunSuite with SparkSpec {
     val st = stats.collect().head
     assert(st.getAs[Long]("capped_buckets") == 4L)
     assert(st.getAs[Long]("dropped_rows") == 4L * 1200)
-    Dedup.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 
   test("planted cap pins survive an organically-capped corpus") {
@@ -87,6 +87,6 @@ class DedupTruthSpec extends AnyFunSuite with SparkSpec {
     // cross-check: the audit frame itself now holds 8 capped buckets
     // (4 mega + 4 organic), which is exactly why the total is a floor
     assert(Dedup.cappedBuckets(docs, "doc_id", "text").count() == 8L)
-    Dedup.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 }

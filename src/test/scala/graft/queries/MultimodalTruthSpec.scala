@@ -72,7 +72,7 @@ class MultimodalTruthSpec extends AnyFunSuite with SparkSpec {
     assert(r.getAs[Long]("hamming_sum") == 20L * k)
     assert(r.getAs[Long]("id_checksum") ==
       10L * k * pb + 20L * k * (k - 1) + 15L * k)
-    graft.dedup.Dedup.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 
   test("mm22 video census over the sf0.001 corpus + plant matches the closed form") {
@@ -91,7 +91,7 @@ class MultimodalTruthSpec extends AnyFunSuite with SparkSpec {
     assert(r.getAs[Long]("at_boundary_found") == 2L * k)
     assert(r.getAs[Long]("id_checksum") ==
       8L * k * pb + 16L * k * (k - 1) + 11L * k)
-    Multimodal.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 
   test("mm22 plant: four real GIFs per gadget whose frame sets nest by trim depth") {
@@ -109,7 +109,7 @@ class MultimodalTruthSpec extends AnyFunSuite with SparkSpec {
       s"frame sets lost distinctness: ${rows.view.mapValues(_.size).toMap}")
     assert(b.subsetOf(a) && d.subsetOf(b) && e.subsetOf(d),
       "trimmed frame sets must nest")
-    Multimodal.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 
   test("mm23 gadget colors: decoded content vectors match the closed form, " +

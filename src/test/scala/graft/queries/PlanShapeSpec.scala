@@ -14,6 +14,14 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   private def plan(name: String): String =
     Registry.byName(name).run(spark, dir).queryExecution.executedPlan.toString
 
+  // a store-backed io query's plan and store path, planned before the
+  // registry's snapshot while its scratch store still exists
+  private def storePlan(build: (org.apache.spark.sql.SparkSession, String, String) =>
+      org.apache.spark.sql.DataFrame): (String, String) =
+    graft.util.Scratch.withDir("graft-plan-") { store =>
+      (build(spark, dir, store).queryExecution.executedPlan.toString, store)
+    }
+
   test("q01: shipdate predicate and column pruning reach the parquet scan") {
     val p = plan("q01_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -147,7 +155,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // the ANN probe must NOT read the whole vector store: the probe
     // side broadcasts and DPP restricts the scan to the probed cells'
     // partition directories — the on-disk realization of IVF
-    val p = plan("io03_ivf_store")
+    val (p, _) = storePlan(StorageQueries.io03)
     assert(p.contains("dynamicpruningexpression(cell"),
       s"expected dynamic partition pruning on the cell column:\n$p")
     assert(p.contains("BroadcastHashJoin [cell"),
@@ -158,7 +166,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // same pruning contract as io03 — the int8 codes change what each
     // partition STORES, not how the probe prunes; if DPP ever breaks
     // here the probe reads the whole quantized corpus
-    val p = plan("io04_quantized_ivf_store")
+    val (p, _) = storePlan(StorageQueries.io04)
     assert(p.contains("dynamicpruningexpression(cell"),
       s"expected dynamic partition pruning on the cell column:\n$p")
     assert(p.contains("BroadcastHashJoin [cell"),
@@ -445,7 +453,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   test("mm15: every trimmed variant pairs with exactly its base; payloads never shuffle") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.BinaryType
-    graft.multimodal.Multimodal.releaseCaches()
+    graft.util.PlanCache.releaseAll()
     val conf = "spark.sql.adaptive.enabled"
     val saved = spark.conf.get(conf)
     val (rows, exec) =
@@ -468,12 +476,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       .map(id => (id, id + graft.multimodal.Multimodal.TrimVariantOffset)).toSet
     assert(pairs == expected,
       s"missing=${expected -- pairs} spurious=${pairs -- expected}")
-    graft.multimodal.Multimodal.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 
   test("io14: the refresh merges stored partials — history is never re-aggregated from raw events") {
-    val (merged, store) = StorageQueries.incrementalBars(spark, dir)
-    val p = merged.queryExecution.executedPlan.toString
+    val (p, store) = storePlan(StorageQueries.incrementalBars)
     // the store scan must surface the PARTIAL schema (the arg-min/max
     // carrier columns) — reading back plain bars would mean the merge
     // recomputes open/close from raw history
@@ -487,8 +494,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("io24: the join-view refresh overlays the stored view map-side — historical facts are never rescanned") {
-    val (refreshed, store) = StorageQueries.deltaJoinView(spark, dir)
-    val p = refreshed.queryExecution.executedPlan.toString
+    val (p, store) = storePlan(StorageQueries.deltaJoinView)
     assert(p.contains(store), s"expected the materialized-view scan:\n$p")
     // the dim overlay must ride a broadcast left join on the view scan;
     // a sort-merge join would mean the 100 TB view shuffles on every
@@ -568,7 +574,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // terms mean plan-time bucket values, so the scan's
     // PartitionFilters restrict the file listing to ≤ 3 of 64 bucket
     // directories — static pruning, stronger than io03's runtime DPP
-    val p = plan("io17_inverted_index")
+    val (p, _) = storePlan(StorageQueries.io17)
     val pf = "PartitionFilters: \\[[^\\]]*tb[^\\]]*(IN |EqualTo|= )[^\\]]*\\]".r
     assert(pf.findFirstIn(p).isDefined,
       s"expected a static bucket predicate in PartitionFilters:\n$p")

@@ -28,7 +28,7 @@ class Sim05ProfileSpec extends AnyFunSuite with SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("sim05 plan: broadcast-only joins, no vector shuffle, cached projection") {
-    Similarity.releaseCaches()
+    graft.util.PlanCache.releaseAll()
     val df = Registry.byName("sim05_ivf_ann").run(spark, dir)
     df.count() // materialize so AQE finalizes the executed plan
     val p = df.queryExecution.executedPlan.toString
@@ -53,7 +53,7 @@ class Sim05ProfileSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sim05 memoization: projection persisted once, quantizer fit once, across reps") {
-    Similarity.releaseCaches()
+    graft.util.PlanCache.releaseAll()
     val q = Registry.byName("sim05_ivf_ann")
     val builds0 = Similarity.projectionBuilds.get
     val fits0 = Similarity.quantizerFits.get

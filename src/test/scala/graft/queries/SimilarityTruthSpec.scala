@@ -81,7 +81,7 @@ class SimilarityTruthSpec extends AnyFunSuite with SparkSpec {
       s"mips overlap drifted: ${row.getAs[Long]("mips_hits")}/40")
     assert(row.getAs[Long]("funnel_hits") == 40L,
       s"funnel overlap drifted: ${row.getAs[Long]("funnel_hits")}/40")
-    graft.similarity.Similarity.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 
   test("exact top-5 over planted-only corpus is the closed-form grid") {
@@ -95,6 +95,6 @@ class SimilarityTruthSpec extends AnyFunSuite with SparkSpec {
     val expected = (0L until 12L).flatMap(g => (0 until 5).map(r =>
       (QBase + g, r + 1, NbrBase + g * 5 + r))).toSet
     assert(out == expected)
-    Similarity.releaseCaches()
+    graft.util.PlanCache.releaseAll()
   }
 }

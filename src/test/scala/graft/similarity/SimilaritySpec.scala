@@ -61,7 +61,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("projection cache is LRU-bounded; eviction rebuilds identical results") {
-    Similarity.releaseCaches()
+    graft.util.PlanCache.releaseAll()
     // distinct corpora — each gets its own canonicalized plan / cache key
     def corpus(tag: Int) = (0 until 12)
       .map(i => ((tag * 100 + i).toLong,
@@ -77,7 +77,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val again = Similarity.ivfLayout(corpus(0), nCells = 2)
       .collect().map(r => (r.getLong(0), r.getInt(3))).toSet
     assert(again == first)
-    Similarity.releaseCaches()
+    graft.util.PlanCache.releaseAll()
     assert(Similarity.cachedProjectionCount == 0)
   }
 

@@ -825,11 +825,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // every leak is collected, so one run names all of them
     val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
     def runAll(): Unit = stQueries.foreach { q =>
-      graft.Caches.releaseAll()
+      graft.util.PlanCache.releaseAll()
       val cachedBefore = cachedDatasets()
       q.run(spark, sf).count()
       if (spark.streams.active.nonEmpty) leaks += s"${q.name}: streaming query still active"
-      graft.Caches.releaseAll()
+      graft.util.PlanCache.releaseAll()
       val cached = cachedDatasets() - cachedBefore
       if (cached != 0) leaks += s"${q.name}: $cached cached datasets after releaseAll"
       val views = tempViews() -- viewsBefore

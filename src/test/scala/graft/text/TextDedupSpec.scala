@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.dedup.Dedup
+import graft.util.PlanCache
 
 class TextDedupSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -107,7 +108,7 @@ class TextDedupSpec extends AnyFunSuite with SparkSpec {
     // SPECIFIC banded join node, located by its (band, band_hash) keys:
     // an unrelated join elsewhere in the plan falling back to
     // sort-merge must not fail this test.
-    Dedup.releaseCaches()
+    PlanCache.releaseAll()
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", minJaccard = 0.7)
     pairs.collect() // execute so AQE's FINAL plan is the witness
@@ -125,7 +126,7 @@ class TextDedupSpec extends AnyFunSuite with SparkSpec {
     val saved = spark.conf.get(conf)
     try {
       spark.conf.set(conf, "1024")
-      Dedup.releaseCaches()
+      PlanCache.releaseAll()
       val hinted = Dedup.nearDupPairs(docs, "doc_id", "text", minJaccard = 0.7)
         .queryExecution.executedPlan.toString
       assert(hinted.contains("ShuffledHashJoin [band"),
@@ -134,7 +135,7 @@ class TextDedupSpec extends AnyFunSuite with SparkSpec {
         s"banded self-join must never sort the banded frame:\n$hinted")
     } finally {
       spark.conf.set(conf, saved)
-      Dedup.releaseCaches()
+      PlanCache.releaseAll()
     }
   }
 
@@ -219,8 +220,8 @@ class TextDedupSpec extends AnyFunSuite with SparkSpec {
     assert(Dedup.autoBands(6, 3300000L) == 10)  // next decade: quads, ≥2^24
   }
 
-  test("shingle-projection cache: memoized per source, flushed by releaseCaches") {
-    Dedup.releaseCaches()
+  test("shingle-projection cache: memoized per source, flushed by releaseAll") {
+    PlanCache.releaseAll()
     assert(Dedup.cachedBaseCount == 0)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // two calls over the same source + parameters share one entry…
@@ -231,7 +232,7 @@ class TextDedupSpec extends AnyFunSuite with SparkSpec {
     Dedup.allPairsJaccard(docs, "doc_id", "text").count()
     assert(Dedup.cachedBaseCount == 2)
     // …and the flush unpersists everything (no leaked persisted frames)
-    Dedup.releaseCaches()
+    PlanCache.releaseAll()
     assert(Dedup.cachedBaseCount == 0)
   }
 
@@ -241,17 +242,17 @@ class TextDedupSpec extends AnyFunSuite with SparkSpec {
     // duplication the r18 ADVICE flagged), the audit silently measures
     // DIFFERENT banding than the pairs it audits — the only observable
     // symptom is a second cache entry. Refuse it here.
-    Dedup.releaseCaches()
+    PlanCache.releaseAll()
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     Dedup.nearDupPairs(docs, "doc_id", "text").count()
     Dedup.cappedBuckets(docs, "doc_id", "text").count()
     assert(Dedup.cachedBaseCount == 1,
       "cappedBuckets keyed a second projection — the audit no longer " +
         "measures the banding the pair run used")
-    Dedup.releaseCaches()
+    PlanCache.releaseAll()
   }
 
-  test("Caches.releaseAll flushes every operator-level plan cache") {
+  test("PlanCache.releaseAll flushes every operator-level plan cache") {
     // the bench's cold-cost mode depends on this being a FULL flush —
     // a straggler cache keeps multi-GB persisted frames crowding the
     // next query's execution memory (measured 7× inflation at the
@@ -263,11 +264,51 @@ class TextDedupSpec extends AnyFunSuite with SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     Dedup.nearDupPairs(docs, "doc_id", "text").count()
     assert(Dedup.cachedBaseCount >= 1)
-    graft.Caches.releaseAll()
+    PlanCache.releaseAll()
     assert(Dedup.cachedBaseCount == 0)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
       s"releaseAll must leave no persisted RDD behind, leaked ids: $leaked")
+  }
+
+  test("no cached dataset or scratch dir outlives PlanCache.releaseAll after mp05, mm01, sim05, sim12, tx06 and the io queries") {
+    val dir = s"${sys.props("user.home")}/testdata/sf0.001"
+    val queries = Seq("mp05_av_documents", "mm01_media_features", "sim05_ivf_ann",
+        "sim12_pq_ann", "tx06_near_dup_pairs").map(graft.queries.Registry.byName) ++
+      graft.queries.Registry.all.filter(_.name.startsWith("io"))
+    assert(queries.size == 29)
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries(): Set[String] =
+      Option(tmpRoot.list()).getOrElse(Array.empty).filter(_.startsWith("graft-")).toSet
+    // CacheManager.numCachedEntries is private[sql] in Scala, public in
+    // bytecode (the same read as StreamingSpec's st cleanup test)
+    val cacheManager = spark.sharedState.cacheManager
+    def cachedDatasets(): Int = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    // every leak is collected, so one run names all of them
+    val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
+    PlanCache.releaseAll()
+    queries.foreach { q =>
+      val cachedBefore = cachedDatasets()
+      val tmpBefore = graftEntries()
+      q.run(spark, dir).count()
+      PlanCache.releaseAll()
+      val cached = cachedDatasets() - cachedBefore
+      if (cached != 0) leaks += s"${q.name}: $cached cached datasets after releaseAll"
+      val grown = graftEntries() -- tmpBefore
+      if (grown.nonEmpty) leaks += s"${q.name}: left ${grown.mkString(", ")} in java.io.tmpdir"
+    }
+    // memoization still hits: a repeat run without a flush adds no entry
+    Seq("mp05_av_documents", "mm01_media_features").map(graft.queries.Registry.byName)
+      .foreach { q =>
+        q.run(spark, dir).count()
+        val first = cachedDatasets()
+        q.run(spark, dir).count()
+        if (cachedDatasets() != first)
+          leaks += s"${q.name}: a repeat run cached ${cachedDatasets() - first} more datasets"
+      }
+    PlanCache.releaseAll()
+    assert(leaks.isEmpty, leaks.mkString("\n", "\n", ""))
   }
 
   test("SimHash: near-identical docs have small Hamming distance, unrelated large") {
