@@ -1,30 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 import graft.util.PlanCache
 
 /** Local iteration helper: time each named query once (count-forced,
   * no result materialization) on the given fixture dir. Useful when
-  * sizing a new bench tier — one cold sample per query, none of the
+  * sizing a new bench tier — one sample per name, none of the
   * interleaved-sampling machinery. Not part of the driver contract.
   *
-  * Usage: runMain graft.BenchOne <fixtureDir> <query> [query ...]
+  * `--release` between names runs [[PlanCache.releaseAll]], so the
+  * next sample starts with no cached frame or memo. That alone does
+  * not make it cold: the first query in a JVM also pays JVM and Spark
+  * warm-up (tx06 at the 10× tier: 15.7 s as the first query, 5.6 s
+  * after `--release`, 5.95 s as the first sample after an unrelated
+  * warm-up query). For a cold number, run an unrelated query first,
+  * then `--release`, then the query.
+  *
+  * Usage: runMain graft.BenchOne <fixtureDir> <query|--release> ...
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     names.foreach {
       case "--release" =>
         PlanCache.releaseAll()

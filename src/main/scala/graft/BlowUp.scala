@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Builds (or reuses) the deterministic 10× blow-up fixture for a scale
  * dir and prints its location + identity, so the oracle gate can run
@@ -29,14 +27,7 @@ object BlowUp {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val flavor = if (args.length > 1) args(1) else "10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val dir = flavor match {
       case "10"     => BenchData.ensureBlowUp(spark, sfDir, factor = 10)
       case "rel100" => BenchData.ensureRelationalBlowUp(spark, sfDir, factor = 100)

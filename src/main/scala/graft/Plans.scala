@@ -15,15 +15,7 @@ object Plans {
     val dir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     java.nio.file.Files.createDirectories(outDir)
     val qs =
       if (names.nonEmpty) names.flatMap(Registry.byName.get)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,11 @@ object Verify {
     // optional trailing names restrict the dump (local iteration only;
     // the driver always calls with exactly two args = full registry)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // complete-mode streaming replays (st19/st21) drain their whole
-      // maintained state through the memory sink — corpus-keyed state
-      // at the blow-up tiers exceeds the 1g default; the verify JVM is
-      // provisioned via SPARK_DRIVER_MEM, so let the drain use it
-      .config("spark.driver.maxResultSize", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // complete-mode streaming replays (st19/st21) drain their whole
+    // maintained state through the memory sink — corpus-keyed state
+    // at the blow-up tiers exceeds the 1g default; the verify JVM is
+    // provisioned via SPARK_DRIVER_MEM, so let the drain use it
+    val spark = LocalSpark.session("spark.driver.maxResultSize" -> "8g")
     // data-dependent oracles (sim05's fitted centroids) need the session
     // + sf dir to render their SQL literals
     graft.queries.OracleContext.current = Some((spark, sfDir))

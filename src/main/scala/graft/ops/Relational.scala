@@ -175,60 +175,57 @@ object Relational {
    * merge join would need; no broadcast, no range explosion, and skew
    * handling falls out of AQE because it's a plain window shape.
    *
+   * With a `tolerance` — the feature-store read contract — a match
+   * more than `tolerance` behind in the order dimension is DISCARDED
+   * (values null) instead of served stale; left rows are always
+   * preserved. The matched right-side order value rides the same
+   * window fill as one extra column and freshness is a map-side `when`
+   * over it, so the bound adds ZERO exchanges. The order columns must
+   * then be numeric (the bound is `rightOrder >= leftOrder -
+   * tolerance`, inclusive). Without a tolerance neither the extra
+   * column nor the `when` is planned.
+   *
    * (key, order) pairs must be unique on the right side for
    * deterministic results (ties take the later row in sort order).
+   * A right value column must not share a name with a left column —
+   * the union would merge the two and the fill would hand each left
+   * row its own value — and neither side may carry the reserved
+   * `__ord`/`__side`/`__rord` names; both are asserted up front.
    */
   def asOfJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                leftOrder: String, rightOrder: String,
-               rightValues: Seq[String]): DataFrame = {
+               rightValues: Seq[String],
+               tolerance: Option[Long] = None): DataFrame = {
+    val reserved = Seq("__ord", "__side", "__rord")
+      .filter(c => left.columns.contains(c) || right.columns.contains(c))
+    require(reserved.isEmpty,
+      s"asOfJoin: input columns collide with reserved names $reserved " +
+        s"— rename them before joining")
+    val shadowed = rightValues.filter(left.columns.contains)
+    require(shadowed.isEmpty,
+      s"asOfJoin: right value columns $shadowed collide with left columns " +
+        s"— rename them before joining")
+    val rord = tolerance.map(_ => "__rord").toSeq
     val l = left.withColumn("__ord", col(leftOrder)).withColumn("__side", lit(1))
     val r = right.select(
       keys.map(col) ++ Seq(col(rightOrder).as("__ord"), lit(0).as("__side")) ++
-        rightValues.map(col): _*)
+        rord.map(col(rightOrder).as(_)) ++ rightValues.map(col): _*)
     val combined = l.unionByName(r, allowMissingColumns = true)
     // right rows sort before left rows at equal __ord → inclusive match
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__ord"), col("__side"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val filled = rightValues.foldLeft(combined) { (df, v) =>
+    val filled = (rord ++ rightValues).foldLeft(combined) { (df, v) =>
       df.withColumn(v, last(col(v), ignoreNulls = true).over(w))
     }
-    filled.filter(col("__side") === 1).drop("__ord", "__side")
-  }
-
-  /**
-   * As-of join with a STALENESS BOUND — the feature-store read
-   * contract: each left row takes the latest right row at-or-before
-   * its order position, like [[asOfJoin]], but a match more than
-   * `tolerance` behind in the order dimension is DISCARDED (values
-   * null) instead of served stale. Left rows are always preserved.
-   *
-   * Same single-exchange plan as [[asOfJoin]] (union + one window
-   * pass): the matched right-side order value rides along as one
-   * extra filled column, and freshness is a map-side `when` over it —
-   * the bound adds ZERO exchanges. The order columns must be numeric
-   * (the bound is `rightOrder >= leftOrder - tolerance`, inclusive).
-   */
-  def asOfJoinWithin(left: DataFrame, right: DataFrame, keys: Seq[String],
-                     leftOrder: String, rightOrder: String,
-                     rightValues: Seq[String], tolerance: Long): DataFrame = {
-    val l = left.withColumn("__ord", col(leftOrder)).withColumn("__side", lit(1))
-    val r = right.select(
-      keys.map(col) ++ Seq(col(rightOrder).as("__ord"), lit(0).as("__side"),
-        col(rightOrder).as("__rord")) ++ rightValues.map(col): _*)
-    val combined = l.unionByName(r, allowMissingColumns = true)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ord"), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val filled = ("__rord" +: rightValues).foldLeft(combined) { (df, v) =>
-      df.withColumn(v, last(col(v), ignoreNulls = true).over(w))
+    val bounded = tolerance.fold(filled) { tol =>
+      val fresh = col("__rord").isNotNull &&
+        col("__rord") >= col("__ord") - lit(tol)
+      rightValues.foldLeft(filled) { (df, v) =>
+        df.withColumn(v, when(fresh, col(v)))
+      }
     }
-    val fresh = col("__rord").isNotNull &&
-      col("__rord") >= col("__ord") - lit(tolerance)
-    val bounded = rightValues.foldLeft(filled) { (df, v) =>
-      df.withColumn(v, when(fresh, col(v)))
-    }
-    bounded.filter(col("__side") === 1).drop("__ord", "__side", "__rord")
+    bounded.filter(col("__side") === 1).drop(Seq("__ord", "__side") ++ rord: _*)
   }
 
   /**

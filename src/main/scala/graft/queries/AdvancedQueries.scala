@@ -15,7 +15,13 @@ object AdvancedQueries {
 
   // ---- q19: as-of join — each purchase matched to the user's latest
   //      click at or before it (ordered by the unique event_id) ----
-  private def q19(spark: SparkSession, dir: String): DataFrame = {
+  private def q19(spark: SparkSession, dir: String): DataFrame =
+    purchaseClickAsOf(spark, dir, tolerance = None)
+
+  /** q19's and q51's one body: each purchase as-of joined to the same
+    * user's clicks from the one events table. */
+  private def purchaseClickAsOf(spark: SparkSession, dir: String,
+                                tolerance: Option[Long]): DataFrame = {
     val ev = Tables.events(spark, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"), col("value").as("purchase_value"))
@@ -24,7 +30,7 @@ object AdvancedQueries {
         col("value").as("click_value"))
     Relational.asOfJoin(purchases, clicks,
       keys = Seq("user_id"), leftOrder = "event_id", rightOrder = "click_event_id",
-      rightValues = Seq("click_event_id", "click_value"))
+      rightValues = Seq("click_event_id", "click_value"), tolerance = tolerance)
       .select("user_id", "event_id", "purchase_value", "click_event_id", "click_value")
   }
 
@@ -34,28 +40,6 @@ object AdvancedQueries {
       |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
       |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
       |  ON p.user_id = c.user_id AND p.event_id >= c.event_id""".stripMargin
-
-  // ---- q50: the as-of join AGAIN, through the engine's custom
-  //      Catalyst whole-operator path — a `GraftAsOfJoin` LogicalPlan
-  //      node planned by `AsOfJoinStrategy` (registered through the
-  //      public spark.experimental.extraStrategies seam), exercising
-  //      preference (c) of the extension ladder end-to-end where q19
-  //      exercises preference (a). Same inputs, same semantics, same
-  //      DuckDB ASOF JOIN oracle: green means the node's declared
-  //      output attributes, the strategy's lowering, and the exprId
-  //      remap all hold under a real gate, not just a spec. ----
-  private def q50(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("value").as("purchase_value"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_event_id"),
-        col("value").as("click_value"))
-    graft.plans.AsOf.join(purchases, clicks,
-      keys = Seq("user_id"), leftOrder = "event_id", rightOrder = "click_event_id",
-      rightValues = Seq("click_event_id", "click_value"))
-      .select("user_id", "event_id", "purchase_value", "click_event_id", "click_value")
-  }
 
   // ---- q51: as-of join with a STALENESS BOUND — the feature-store
   //      read contract on q19's exact shape: a purchase still takes
@@ -67,19 +51,8 @@ object AdvancedQueries {
   //      Oracle: DuckDB's ASOF LEFT JOIN with the staleness CASE
   //      applied on top — the engine must agree cell-exactly on which
   //      matches survive the bound. ----
-  private def q51(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("value").as("purchase_value"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_event_id"),
-        col("value").as("click_value"))
-    Relational.asOfJoinWithin(purchases, clicks,
-      keys = Seq("user_id"), leftOrder = "event_id",
-      rightOrder = "click_event_id",
-      rightValues = Seq("click_event_id", "click_value"), tolerance = 5000L)
-      .select("user_id", "event_id", "purchase_value", "click_event_id", "click_value")
-  }
+  private def q51(spark: SparkSession, dir: String): DataFrame =
+    purchaseClickAsOf(spark, dir, tolerance = Some(5000L))
 
   private val q51Oracle =
     """SELECT user_id, event_id, purchase_value,
@@ -1935,9 +1908,6 @@ object AdvancedQueries {
     GraftQuery("q47_kcore", q47, Some(q47Oracle)),
     GraftQuery("q48_active_time", q48, Some(q48Oracle)),
     GraftQuery("q49_session_funnel", q49, Some(q49Oracle), headline = true),
-    // q50 carries q19's oracle verbatim: same as-of semantics, custom
-    // Catalyst whole-operator path instead of the inline composition
-    GraftQuery("q50_asof_plan", q50, Some(q19Oracle)),
     GraftQuery("q51_asof_tolerance", q51, Some(q51Oracle)),
     GraftQuery("q52_skyline", q52, Some(q52Oracle)),
     GraftQuery("q53_bfs_reach", q53, Some(q53Oracle)),

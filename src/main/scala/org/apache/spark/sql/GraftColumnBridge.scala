@@ -12,16 +12,3 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
-
-/**
- * The logical-plan half of the same seam: wrapping a Catalyst
- * `LogicalPlan` back into a `DataFrame` (`Dataset.ofRows`) is
- * private[sql] in Spark 4, and it is exactly what a library needs to
- * expose a CUSTOM LogicalPlan node through the public Dataset API
- * (see `graft.plans.GraftAsOfJoin`).
- */
-object GraftPlanBridge {
-  def ofRows(spark: SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-}

@@ -5,17 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (per-suite sessions
   * would pay SparkContext startup repeatedly). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = LocalSpark.session()
 }
 
 trait SparkSpec {

@@ -80,8 +80,8 @@ class RelationalSpec extends AnyFunSuite with SparkSpec {
       .toDF("k", "t", "trade")
     val quotes = Seq(("u1", 4, 1.0), ("u1", 15, 2.0), ("u2", 9, 9.0))
       .toDF("k", "qt", "quote")
-    val out = Relational.asOfJoinWithin(trades, quotes, Seq("k"), "t", "qt",
-        Seq("qt", "quote"), tolerance = 5L)
+    val out = Relational.asOfJoin(trades, quotes, Seq("k"), "t", "qt",
+        Seq("qt", "quote"), tolerance = Some(5L))
       .collect().map(r => (r.getAs[String]("k"), r.getAs[Int]("t"),
         Option(r.getAs[Any]("qt")), Option(r.getAs[Any]("quote"))))
       .sortBy(r => (r._1, r._2))
@@ -95,9 +95,83 @@ class RelationalSpec extends AnyFunSuite with SparkSpec {
     // tolerance = ∞ degenerates to the plain as-of join
     val plain = Relational.asOfJoin(trades, quotes, Seq("k"), "t", "qt",
       Seq("qt", "quote")).collect().map(_.toSeq).toSet
-    val wide = Relational.asOfJoinWithin(trades, quotes, Seq("k"), "t", "qt",
-      Seq("qt", "quote"), tolerance = Long.MaxValue).collect().map(_.toSeq).toSet
+    val wide = Relational.asOfJoin(trades, quotes, Seq("k"), "t", "qt",
+      Seq("qt", "quote"), tolerance = Some(Long.MaxValue))
+      .collect().map(_.toSeq).toSet
     assert(wide == plain)
+  }
+
+  test("asOfJoin refuses a right value named like a left column and the reserved names") {
+    // unionByName would merge trades.px and quotes.px into one column,
+    // and last(ignoreNulls) would then hand each trade its OWN px
+    // (100.0, 110.0) instead of the latest quote's (99.0, 109.0)
+    val trades = Seq((1L, 10L, 100.0), (1L, 20L, 110.0)).toDF("k", "t", "px")
+    val quotes = Seq((1L, 5L, 99.0), (1L, 18L, 109.0)).toDF("k", "qt", "px")
+    intercept[IllegalArgumentException] {
+      Relational.asOfJoin(trades, quotes, Seq("k"), "t", "qt", Seq("px"))
+    }
+    val bid = quotes.withColumnRenamed("px", "bid")
+    assert(Relational.asOfJoin(trades, bid, Seq("k"), "t", "qt", Seq("bid"))
+      .collect().map(r => r.getLong(1) -> r.getDouble(3)).toMap ==
+      Map(10L -> 99.0, 20L -> 109.0))
+    // a missing column, or two different columns under one name, fails
+    // Spark's own analysis instead of binding the first match
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Relational.asOfJoin(trades, bid, Seq("k"), "t", "missing", Seq("bid"))
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Relational.asOfJoin(trades,
+        bid.select(col("k"), col("qt"), (col("qt") + 1).as("qt"), col("bid")),
+        Seq("k"), "t", "qt", Seq("bid"))
+    }
+    for (name <- Seq("__ord", "__side", "__rord")) {
+      intercept[IllegalArgumentException] {
+        Relational.asOfJoin(trades.withColumn(name, lit(0)), bid,
+          Seq("k"), "t", "qt", Seq("bid"))
+      }
+      intercept[IllegalArgumentException] {
+        Relational.asOfJoin(trades, bid.withColumn(name, lit(0)),
+          Seq("k"), "t", "qt", Seq("bid"), tolerance = Some(5L))
+      }
+    }
+  }
+
+  test("asOfJoin binds under count() when both sides filter one shared base frame") {
+    // q19's shape: both inputs project the SAME events frame, so the
+    // passthrough key carries one expression id on both sides; a
+    // re-analysis under count() must still bind it
+    val base = Seq((1L, "p", 10L, 100.0), (1L, "c", 5L, 99.0),
+      (1L, "c", 8L, 101.0), (2L, "p", 15L, 50.0))
+      .toDF("k", "side", "t", "v")
+    val l = base.filter(col("side") === "p")
+      .select(col("k"), col("t"), col("v").as("pv"))
+    val r = base.filter(col("side") === "c")
+      .select(col("k"), col("t").as("ct"), col("v").as("cv"))
+    val j = Relational.asOfJoin(l, r, Seq("k"), "t", "ct", Seq("ct", "cv"))
+      .select("k", "t", "pv", "ct", "cv")
+    assert(j.count() == 2)
+    assert(j.groupBy("k").count().count() == 2)
+    val rows = j.collect().map(x => (x.getLong(0), x.getLong(1)) ->
+      Option(x.get(3))).toMap
+    assert(rows == Map((1L, 10L) -> Some(8L), (2L, 15L) -> None))
+  }
+
+  test("asOfJoin reads only the referenced right columns from parquet") {
+    graft.util.Scratch.withDir("graft-asof-prune-") { dir =>
+      Seq((1L, 10L, 100.0), (2L, 15L, 50.0)).toDF("k", "t", "px")
+        .write.parquet(s"$dir/l")
+      Seq((1L, 5L, 99.0), (2L, 30L, 55.0)).toDF("k", "qt", "bid")
+        .withColumn("r_wide_unused", lit("x"))
+        .withColumn("r_wide_unused2", lit(7L))
+        .write.parquet(s"$dir/r")
+      val out = Relational.asOfJoin(spark.read.parquet(s"$dir/l"),
+        spark.read.parquet(s"$dir/r"), Seq("k"), "t", "qt", Seq("bid"))
+      val p = out.queryExecution.executedPlan.toString
+      assert(p.contains("ReadSchema"), s"expected parquet scans:\n$p")
+      assert(!p.contains("r_wide_unused"),
+        s"unreferenced right columns must not be read:\n$p")
+      assert(out.count() == 2)
+    }
   }
 
   test("saltedEquiJoin result equals the plain equi-join") {

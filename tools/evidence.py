@@ -250,14 +250,10 @@ INCLUDE_100X = {
     "q19_asof_join", "q46_rolling_distinct", "q56_interval_merge",
     "q57_interval_clip",
     # r18 — the rest of the as-of family rides the same 10M-event
-    # fixture (all measured): q50 runs q19's semantics through the
-    # CUSTOM GraftAsOfJoin LogicalPlan + strategy — the extension
-    # ladder's preference-(c) path gated at the decade (oracle 12.2 s,
-    # 2M-row compare); q51's staleness bound (10.2 s), q44's snapshot
-    # grain (9.1 s), and q33's day-spine gap fill (0.1 s — day-grain
-    # output) complete the family
-    "q50_asof_plan", "q51_asof_tolerance", "q44_asof_snapshot",
-    "q33_gap_fill",
+    # fixture (all measured): q51's staleness bound (10.2 s), q44's
+    # snapshot grain (9.1 s), and q33's day-spine gap fill (0.1 s —
+    # day-grain output) complete the family
+    "q51_asof_tolerance", "q44_asof_snapshot", "q33_gap_fill",
     # r18 — st33 joins its batch twin dq26 (already gated here): the
     # streaming bottom-K quantile state is K=256-bounded per month
     # shard regardless of volume, so the decade stresses the
@@ -501,7 +497,10 @@ def gate(sf_dir, out_dir, names=None):
     if names:
         args += " " + " ".join(sorted(names))
         rec["n_requested"] = len(names)
-    v = run(["sbt", "-batch", args])
+    # every main defaults to all cores the JVM sees; each stage names its
+    # own count (Verify 4, BlowUp 16, Bench 32)
+    v = run(["sbt", "-batch", args],
+            env=dict(os.environ, SPARK_GRAFT_CPUS="4"))
     verify_errs = [l for l in v.stderr.splitlines() if "[verify]" in l]
     rec["verify_ok"] = v.returncode == 0
     rec["verify_errors"] = verify_errs[:20]
@@ -608,7 +607,8 @@ def main():
     def derived_gate(tier, flavor, out_dir, gate_names,
                      src="/root/testdata/sf0.1"):
         b = run(["sbt", "-batch",
-                 f"runMain graft.BlowUp {src} {flavor}"])
+                 f"runMain graft.BlowUp {src} {flavor}"],
+                env=dict(os.environ, SPARK_GRAFT_CPUS="16"))
         m = re.search(r"BLOWUP_DIR=(\S+)", b.stdout)
         ident = re.search(r"BLOWUP_IDENTITY=(.*)", b.stdout)
         if m:
