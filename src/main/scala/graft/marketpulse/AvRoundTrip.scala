@@ -78,8 +78,8 @@ object AvRoundTrip {
           lit("3. Last Refreshed"), col("last_day")).as(Schemas.MetaKey),
         col("series").as(Schemas.SeriesKey))).as("json"))
 
-  // the three frames of one fixture dir, two dirs' worth
-  private val cache = new graft.util.PlanCache(maxEntries = 6)
+  // the two frames of one fixture dir, two dirs' worth
+  private val cache = new graft.util.PlanCache(maxEntries = 4)
 
   /**
    * mp05: documents → parse → U2 merge → staging flatten/casts → dim
@@ -100,17 +100,15 @@ object AvRoundTrip {
     val v1 = docsOf(barsOf(evB.filter(col("ts") < noonCutoff)))
     val v2 = docsOf(barsOf(evB.filter(to_date(col("ts")) >= date_sub(col("max_day"), 6))))
 
-    // versions is consumed twice inside mergeIncremental (newest-window
-    // and series-explode branches) and merged twice below (staging and
-    // meta) — without these persists the whole document build (two bar
-    // aggregations + JSON round-trip) re-executes up to four times.
-    // Both frames are symbol-cardinality (a handful of rows), so the
-    // cache cost is nil and the plan collapses to one build.
-    val versions = cache.persisted(Ingest.parseDocumentFrame(
+    // the merge reads versions once; merged is consumed twice below
+    // (staging and meta) — persisting it keeps the document build (two
+    // bar aggregations + JSON round-trip) to one execution. It is
+    // symbol-cardinality (a handful of rows), so the cache cost is nil.
+    val versions = Ingest.parseDocumentFrame(
       v1.withColumn("__fetch", lit("2026-01-01 00:00:00"))
         .unionByName(v2.withColumn("__fetch", lit("2026-01-02 00:00:00"))),
       col("json"),
-      to_timestamp(col("__fetch"))))
+      to_timestamp(col("__fetch")))
 
     val merged = cache.persisted(DocumentMerge.mergeIncremental(versions))
     val stg = Staging.stgAlphavantage(merged)

@@ -1,7 +1,6 @@
 package graft.marketpulse
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Relational
@@ -19,10 +18,13 @@ import graft.ops.Relational
  *    append-only.
  *
  * Both are set-oriented: any number of symbols/versions merge in one
- * shuffle on the key — versus the reference's per-symbol loop. At
- * scale, U2's explode keeps rows narrow (symbol, date, one OHLCV
- * struct) through the shuffle; documents are only re-assembled at the
- * end, and only if the caller wants the document shape back.
+ * shuffle on the key — versus the reference's per-symbol loop. U2 is
+ * one grouping by symbol, the batch shape of the stateful per-key fold
+ * in [[graft.streaming.DocumentMergeStream]]: the aggregation buffer
+ * holds a symbol's k versions whole and the last-writer-wins pick runs
+ * on that array. Every caller merges k = 2 versions per symbol (the
+ * landed store plus one fetch, or mp05's v1 plus v2), so the buffer is
+ * about twice one document.
  */
 object DocumentMerge {
 
@@ -44,38 +46,39 @@ object DocumentMerge {
    * is the newest version's.
    */
   def mergeIncremental(versions: DataFrame): DataFrame = {
-    val seriesCol = col("data").getField(Schemas.SeriesKey)
-
-    // newest version carries Meta Data + load_date (the clobber law,
-    // get_stock.py:95)
-    val newest = Relational.dedupeKeepFirst(versions, Seq("symbol"),
-      Seq(col("load_date").desc))
-      .select(col("symbol"),
-        col("data").getField(Schemas.MetaKey).as("meta"),
-        col("load_date"))
-
-    // explode every version's series; last writer wins per (symbol, date)
-    val bars = versions
-      .select(col("symbol"), col("load_date").as("v_load"),
-        explode(seriesCol).as(Seq("date", "bar")))
-    val latestBars = Relational.dedupeKeepFirst(bars,
-      keys = Seq("symbol", "date"), order = Seq(col("v_load").desc))
-
-    // deterministic re-assembly: sort entries by date inside each group
-    val series = latestBars
+    // load order as a sort key, smaller = newer; a NULL load_date ranks
+    // oldest, as `load_date DESC` (NULLS LAST) does. Negating
+    // unix_micros cannot overflow for any valid timestamp.
+    val age = struct(col("load_date").isNull.as("undated"),
+      negate(unix_micros(col("load_date"))).as("newest_first"))
+    val noSeries = map().cast(Schemas.rawDocument(Schemas.SeriesKey).dataType)
+    versions
       .groupBy(col("symbol"))
-      .agg(map_from_entries(array_sort(collect_list(struct(col("date"), col("bar")))))
-        .as("series"))
-
-    // left join from newest: a symbol whose every version had an empty
-    // series keeps its (empty-map) document rather than vanishing
-    newest.join(series, Seq("symbol"), "left")
+      .agg(
+        // the newest version carries Meta Data + load_date (the clobber
+        // law, get_stock.py:95)
+        min_by(col("data").getField(Schemas.MetaKey), age).as("meta"),
+        max(col("load_date")).as("load_date"),
+        collect_list(struct(age.as("age"),
+          coalesce(col("data").getField(Schemas.SeriesKey), noSeries).as("series"))).as("vs"))
+      // every version's (date, age, bar), dates ascending and the newest
+      // version first within a date…
+      .select(col("symbol"), col("meta"), col("load_date"),
+        array_sort(flatten(transform(col("vs"), v =>
+          transform(map_entries(v.getField("series")), e =>
+            struct(e.getField("key").as("date"), v.getField("age").as("age"),
+              e.getField("value").as("bar")))))).as("bars"))
+      // …so the first entry of each date is its last writer. A symbol
+      // whose every version had an empty series keeps its (empty-map)
+      // document.
       .select(
         col("symbol"),
         struct(
           col("meta").as(Schemas.MetaKey),
-          coalesce(col("series"), map().cast(Schemas.rawDocument(Schemas.SeriesKey).dataType))
-            .as(Schemas.SeriesKey)).as("data"),
+          map_from_entries(transform(
+            filter(col("bars"), (b, i) =>
+              i === 0 || get(col("bars"), i - 1).getField("date") =!= b.getField("date")),
+            b => struct(b.getField("date"), b.getField("bar")))).as(Schemas.SeriesKey)).as("data"),
         col("load_date"))
   }
 }

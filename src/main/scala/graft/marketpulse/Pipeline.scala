@@ -1,7 +1,13 @@
 package graft.marketpulse
 
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.quality.DataQuality
@@ -90,12 +96,45 @@ object Pipeline {
     fromMerged(merged)
   }
 
-  /** Materialize every model as a table, mirroring the reference's
-    * all-tables policy (`dbt_project.yml:6`). */
+  /**
+   * Materialize every model as a table, mirroring the reference's
+   * all-tables policy (`dbt_project.yml:6`). The four writes are
+   * independent, so they run concurrently, one thread per model, each
+   * with the caller's active session and local properties (job group,
+   * scheduler pool); their small jobs then share the cores instead of
+   * waiting on each other's stage tails. Waits for every write, then
+   * rethrows the first failure (in model order) naming its table. Every
+   * thread it starts has ended when it returns.
+   */
   def materialize(run: Run, prefix: String = "marketpulse"): Unit = {
-    run.staging.write.mode("overwrite").saveAsTable(s"${prefix}_stg_alphavantage")
-    run.dim.write.mode("overwrite").saveAsTable(s"${prefix}_dim_stock")
-    run.fact.write.mode("overwrite").saveAsTable(s"${prefix}_fact_stock_prices")
-    run.weekly.write.mode("overwrite").saveAsTable(s"${prefix}_agg_weekly_prices")
+    val models = Seq(
+      "stg_alphavantage" -> run.staging,
+      "dim_stock" -> run.dim,
+      "fact_stock_prices" -> run.fact,
+      "agg_weekly_prices" -> run.weekly)
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(models.size, { r =>
+      val t = new Thread(r, s"graft-materialize-$prefix")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      val writes = models.map { case (model, df) =>
+        val table = s"${prefix}_$model"
+        table -> SQLExecution.withThreadLocalCaptured(castToImpl(df.sparkSession), pool) {
+          df.write.mode("overwrite").saveAsTable(table)
+        }
+      }
+      val failures = writes.flatMap { case (table, write) =>
+        Try(write.join()).failed.toOption.map(e => table -> Option(e.getCause).getOrElse(e))
+      }
+      failures.headOption.foreach { case (table, e) =>
+        throw new RuntimeException(s"materialize $table failed: ${e.getMessage}", e)
+      }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
   }
 }

@@ -1,7 +1,11 @@
 package graft.marketpulse
 
 import java.sql.Date
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -134,5 +138,79 @@ class MarketPulseSpec extends AnyFunSuite with SparkSpec {
     assert(unsound.head.violations > 0) // quirk §2.13.2: fails at >1 symbol, by design
     val rest = results.filterNot(c => c.check == "unique" && c.column == "trading_date")
     assert(rest.forall(_.passed), rest.filterNot(_.passed).mkString(", "))
+  }
+
+  test("materialize: four tables equal the Run, jobs keep the caller's group, a failure names its table") {
+    val sc = spark.sparkContext
+    val prefix = "mp_materialize_spec"
+    val tables = Seq("stg_alphavantage", "dim_stock", "fact_stock_prices", "agg_weekly_prices")
+      .map(t => s"${prefix}_$t")
+    // (event, job id, job group) in listener order; the bus delivers
+    // one queue's events in posting order, so once a sentinel job's
+    // start is seen, every earlier job start and end has been too
+    val events = new ConcurrentLinkedQueue[(String, Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.add(("start", e.jobId,
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = events.add(("end", e.jobId, ""))
+    }
+    def sentinel(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!events.asScala.exists(_._3 == group) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(events.asScala.exists(_._3 == group), s"sentinel $group never seen")
+    }
+    /** Jobs seen between two sentinels: every one carries `group` and
+      * ended before the closing sentinel started. */
+    def assertJobsBetween(open: String, close: String, group: String): Unit = {
+      val all = events.asScala.toSeq
+      val openJob = all.find(_._3 == open).get._2
+      val seen = all.dropWhile(_._3 != open).drop(1).takeWhile(_._3 != close)
+      val started = seen.filter(_._1 == "start")
+      assert(started.nonEmpty && started.forall(_._3 == group), started)
+      assert(started.map(_._2).toSet == seen.filter(_._1 == "end").map(_._2).toSet - openJob,
+        s"a job outlived the call: $seen")
+    }
+    /** The status store follows the listener bus; give it the same
+      * bound the sentinel gets. */
+    def assertNoActiveJobs(): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-materialize")),
+        "a materialize thread outlived the call")
+    }
+
+    val r = run(Fixtures.aapl, Fixtures.v, Fixtures.brkB)
+    sc.addSparkListener(listener)
+    try {
+      sentinel("mp-open")
+      sc.setJobGroup("mp-materialize", "materialize spec")
+      try Pipeline.materialize(r, prefix) finally sc.clearJobGroup()
+      assertNoActiveJobs()
+      sentinel("mp-close")
+      assertJobsBetween("mp-open", "mp-close", "mp-materialize")
+      tables.zip(Seq(r.staging, r.dim, r.fact, r.weekly)).foreach { case (t, model) =>
+        val written = spark.table(t)
+        assert(written.exceptAll(model).isEmpty && model.exceptAll(written).isEmpty, t)
+      }
+
+      // a model whose evaluation throws fails the whole call, by name
+      val broken = r.copy(dim = r.dim.withColumn("boom", raise_error(lit("planted failure"))))
+      sentinel("mp-open2")
+      sc.setJobGroup("mp-broken", "materialize spec, failing model")
+      val e = try intercept[RuntimeException](Pipeline.materialize(broken, prefix))
+        finally sc.clearJobGroup()
+      assert(e.getMessage.contains(s"${prefix}_dim_stock"), e.getMessage)
+      assert(e.getMessage.contains("planted failure"), e.getMessage)
+      assertNoActiveJobs()
+      sentinel("mp-close2")
+      assertJobsBetween("mp-open2", "mp-close2", "mp-broken")
+    } finally {
+      sc.removeSparkListener(listener)
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
   }
 }
