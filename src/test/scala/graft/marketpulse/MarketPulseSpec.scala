@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -211,6 +212,10 @@ class MarketPulseSpec extends AnyFunSuite with SparkSpec {
     } finally {
       sc.removeSparkListener(listener)
       tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      // the failing write leaves its table's directory behind with no
+      // catalog entry, so DROP TABLE does not remove it
+      tables.foreach(t => graft.util.Scratch.delete(
+        new java.io.File(spark.sessionState.catalog.defaultTablePath(TableIdentifier(t)))))
     }
   }
 }
