@@ -23,7 +23,9 @@ object BlowUp {
     * blow-up), `rel100` (relational-only 100× decade tier), `skew`
     * (hot-key variant of the 10× tier), `skew1x` (the same hot-key
     * construction planted directly on the source fixture — the small
-    * tier where the quadratic dedup oracles stay affordable). */
+    * tier where the quadratic dedup oracles stay affordable),
+    * `corpus100` (documents/embeddings at 100×, relational tables
+    * verbatim). */
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val flavor = if (args.length > 1) args(1) else "10"

@@ -33,6 +33,10 @@ object Triangles {
   // job once, not once per run
   private val metaCache = new graft.util.PlanCache(maxEntries = 4)
 
+  /** Edge count up to which the adjacency frame is broadcast: 8M
+    * edges ≈ 64 MB of array payload (see [[triangleEnds]]). */
+  private val BcastAdjMaxEdges = 8000000L
+
   /** Per-node triangle participation over an undirected edge list.
     * `edges` must carry one row per undirected edge as `(a, b)` with
     * `a < b` (canonical form — no duplicates, no self-loops). Returns
@@ -41,7 +45,14 @@ object Triangles {
     * legs scan — pass a lifecycle-managed persist (a PlanCache) when
     * the edge subtree is expensive to recompute. */
   def perNodeCounts(edges: DataFrame,
-                    persist: DataFrame => DataFrame = identity): DataFrame = {
+                    persist: DataFrame => DataFrame = identity): DataFrame =
+    perNodeCounts(edges, persist, BcastAdjMaxEdges)
+
+  /** [[perNodeCounts]] with the adjacency broadcast cap as an argument,
+    * so a spec can force either join strategy. */
+  private[graph] def perNodeCounts(edges: DataFrame,
+                                   persist: DataFrame => DataFrame,
+                                   bcastAdjMaxEdges: Long): DataFrame = {
     // persist the EDGE subtree itself, not just the oriented frame
     // (r21, guide §2.4): the degree aggregate and the orientation join
     // both consume it, and when the subtree is expensive (q45's
@@ -63,7 +74,7 @@ object Triangles {
       .select(
         when(aFirst, col("a")).otherwise(col("b")).as("src"),
         when(aFirst, col("b")).otherwise(col("a")).as("dst")))
-    val tri = triangleEnds(oriented)
+    val tri = triangleEnds(oriented, bcastAdjMaxEdges)
     tri.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
   }
@@ -99,9 +110,9 @@ object Triangles {
     * to prune.
     *
     * Join strategy: the adjacency frame is one row per wedge SOURCE
-    * (≤ |V|) carrying ~8·m bytes of array payload in total. Below
-    * `spark.graft.triangles.bcastAdjMaxEdges` (default 8M edges ≈
-    * 64 MB) it is broadcast — both probe legs then stream the edge
+    * (≤ |V|) carrying ~8·m bytes of array payload in total. Up to
+    * `bcastAdjMaxEdges` ([[BcastAdjMaxEdges]] in production: 8M
+    * edges ≈ 64 MB) it is broadcast — both probe legs then stream the edge
     * list with NO exchange at all, immune to in-degree skew. Above the
     * cap the legs fall back to SHUFFLE_HASH with the adjacency side as
     * build (8·m/P bytes per task — same shuffle-partition
@@ -109,15 +120,13 @@ object Triangles {
     * input size). Inner equi-joins — strategy changes the plan, never
     * the rows; a dst with no out-edges closes nothing and drops out of
     * either plan identically. */
-  private def triangleEnds(oriented: DataFrame): DataFrame = {
-    val spark = oriented.sparkSession
+  private def triangleEnds(oriented: DataFrame,
+                           bcastAdjMaxEdges: Long): DataFrame = {
     val adjRaw = oriented.groupBy(col("src"))
       .agg(collect_list(col("dst")).as("nbrs"))
-    val bcastCap = spark.conf
-      .get("spark.graft.triangles.bcastAdjMaxEdges", "8000000").toLong
     val m = metaCache.memoizedCount(oriented)
     val adj =
-      if (m <= bcastCap) broadcast(adjRaw)
+      if (m <= bcastAdjMaxEdges) broadcast(adjRaw)
       else adjRaw.hint("shuffle_hash")
     oriented
       .join(adj.select(col("src").as("u2"), col("nbrs").as("nu")),

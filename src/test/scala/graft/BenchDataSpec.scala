@@ -7,34 +7,38 @@ import org.scalatest.funsuite.AnyFunSuite
   * gating/timing a 10× dir derived from replaced data. */
 class BenchDataSpec extends AnyFunSuite with SparkSpec {
 
-  private def makeFixtureDir(sizes: Map[String, Int]): java.io.File = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fp-spec-").toFile
-    val tables = Seq("documents", "embeddings", "lineitem", "orders",
-      "customer", "events", "region", "nation", "supplier", "part")
-    tables.foreach { t =>
-      val f = new java.io.File(dir, s"$t.parquet")
-      java.nio.file.Files.write(f.toPath, new Array[Byte](sizes.getOrElse(t, 8)))
+  /** Run `body` on a scratch dir holding an 8-byte stand-in file per
+    * fixture table. */
+  private def withFixtureDir[A](body: java.io.File => A): A =
+    graft.util.Scratch.withDir("graft-fp-spec-") { path =>
+      val dir = new java.io.File(path)
+      val tables = Seq("documents", "embeddings", "lineitem", "orders",
+        "customer", "events", "region", "nation", "supplier", "part")
+      tables.foreach { t =>
+        val f = new java.io.File(dir, s"$t.parquet")
+        java.nio.file.Files.write(f.toPath, new Array[Byte](8))
+      }
+      body(dir)
     }
-    dir
-  }
 
   test("sourceFingerprint: stable for unchanged files, flips on size or mtime change") {
-    val dir = makeFixtureDir(Map.empty)
-    val fp1 = BenchData.sourceFingerprint(dir.toString)
-    assert(fp1.matches("[0-9a-f]{8}"))
-    assert(BenchData.sourceFingerprint(dir.toString) == fp1, "must be deterministic")
+    withFixtureDir { dir =>
+      val fp1 = BenchData.sourceFingerprint(dir.toString)
+      assert(fp1.matches("[0-9a-f]{8}"))
+      assert(BenchData.sourceFingerprint(dir.toString) == fp1, "must be deterministic")
 
-    // size change on one table → new fingerprint
-    val ev = new java.io.File(dir, "events.parquet")
-    java.nio.file.Files.write(ev.toPath, new Array[Byte](32))
-    val fp2 = BenchData.sourceFingerprint(dir.toString)
-    assert(fp2 != fp1, "size change must invalidate")
+      // size change on one table → new fingerprint
+      val ev = new java.io.File(dir, "events.parquet")
+      java.nio.file.Files.write(ev.toPath, new Array[Byte](32))
+      val fp2 = BenchData.sourceFingerprint(dir.toString)
+      assert(fp2 != fp1, "size change must invalidate")
 
-    // same size, newer mtime (a regeneration that happens to match
-    // byte count) → still a new fingerprint
-    assert(ev.setLastModified(ev.lastModified() + 60000L))
-    val fp3 = BenchData.sourceFingerprint(dir.toString)
-    assert(fp3 != fp2, "mtime change must invalidate")
+      // same size, newer mtime (a regeneration that happens to match
+      // byte count) → still a new fingerprint
+      assert(ev.setLastModified(ev.lastModified() + 60000L))
+      val fp3 = BenchData.sourceFingerprint(dir.toString)
+      assert(fp3 != fp2, "mtime change must invalidate")
+    }
   }
 
   test("ensureSkewed plants a genuinely hot key on every skewed axis") {

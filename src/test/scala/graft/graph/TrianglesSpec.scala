@@ -10,8 +10,10 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def counts(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Triangles.perNodeCounts(edges.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    toMap(Triangles.perNodeCounts(edges.toDF("a", "b")))
+
+  private def toMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("K4: every node sits in C(3,2)=3 triangles") {
     val k4 = for (i <- 1L to 4L; j <- i + 1 to 4L) yield (i, j)
@@ -57,10 +59,8 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
       val ring = (10L until 30L).map(i => i -> (i + 1))
       (k5 ++ hub ++ ring).distinct
     }
-    val conf = "spark.graft.triangles.bcastAdjMaxEdges"
     val shuffled = // cap 0 forces the shuffle_hash branch
-      try { spark.conf.set(conf, "0"); counts(edges) }
-      finally spark.conf.unset(conf)
+      toMap(Triangles.perNodeCounts(edges.toDF("a", "b"), identity, 0L))
     val broadcasted = counts(edges)
     assert(shuffled == broadcasted,
       s"join strategy changed the triangle census: $shuffled != $broadcasted")
@@ -73,8 +73,7 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
     val base = counts(edges)
     for (parts <- Seq(1, 7)) {
       val df = edges.toDF("a", "b").repartition(parts, col("b"))
-      val got = Triangles.perNodeCounts(df)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = toMap(Triangles.perNodeCounts(df))
       assert(got == base, s"partitioning $parts changed counts")
     }
   }

@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.util.Scratch
 
 /**
  * tx50's reason to exist, demonstrated on a constructed witness: a
@@ -27,36 +28,41 @@ class ClusterSplitSpec extends AnyFunSuite with SparkSpec {
   private val idTrain = (1L to 10000L).find(i => bucket("split:", i) < 98).get
   private val idTest = (1L to 10000L).find(i => bucket("split:", i) == 99).get
 
-  private lazy val dir: String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tx50-").toString
-    val dup = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = Seq(
-      (idTrain, dup, "en", "web", dup.length.toLong),
-      (idTest, dup, "en", "web", dup.length.toLong)) ++
-      Seq(21L, 22L, 23L).zipWithIndex.map { case (id, i) =>
-        val text = s"singleton text number $i with entirely unshared words " +
-          s"alpha$i beta$i gamma$i delta$i epsilon$i"
-        (id, text, "en", "web", text.length.toLong)
-      }
-    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$tmp/documents.parquet")
-    tmp
-  }
+  /** Run `body` on a scratch dir holding the witness corpus. */
+  private def withWitness[A](body: String => A): A =
+    Scratch.withDir("graft-tx50-") { tmp =>
+      val dup = "the quick brown fox jumps over the lazy dog again and again"
+      val docs = Seq(
+        (idTrain, dup, "en", "web", dup.length.toLong),
+        (idTest, dup, "en", "web", dup.length.toLong)) ++
+        Seq(21L, 22L, 23L).zipWithIndex.map { case (id, i) =>
+          val text = s"singleton text number $i with entirely unshared words " +
+            s"alpha$i beta$i gamma$i delta$i epsilon$i"
+          (id, text, "en", "web", text.length.toLong)
+        }
+      docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$tmp/documents.parquet")
+      body(tmp)
+    }
 
   test("tx19 splits the near-dup twins apart — the leak the witness plants") {
-    val rows = Registry.byName("tx19_split_assign").run(spark, dir)
-      .select("doc_id", "split").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val rows = withWitness { dir =>
+      Registry.byName("tx19_split_assign").run(spark, dir)
+        .select("doc_id", "split").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
     assert(rows(idTrain) == "train" && rows(idTest) == "test",
       s"witness ids $idTrain/$idTest no longer straddle under tx19 — " +
         "the doc-keyed hash or fractions changed; re-derive the witness")
   }
 
   test("tx50 moves the whole cluster together and passes singletons through") {
-    val rows = Registry.byName("tx50_cluster_split").run(spark, dir)
-      .select("doc_id", "cluster", "bucket", "split").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2), r.getString(3))))
-      .toMap
+    val rows = withWitness { dir =>
+      Registry.byName("tx50_cluster_split").run(spark, dir)
+        .select("doc_id", "cluster", "bucket", "split").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2), r.getString(3))))
+        .toMap
+    }
     val canonical = math.min(idTrain, idTest)
     // the twins share the canonical cluster and therefore the split
     assert(rows(idTrain)._1 == canonical && rows(idTest)._1 == canonical)

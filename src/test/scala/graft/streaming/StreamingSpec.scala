@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.marketpulse.{DocumentMerge, Fixtures, Ingest, Staging}
+import graft.util.Scratch
 
 class StreamingSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -215,18 +216,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("foreachBatch keyed upsert sink: staged overwrite, batch rows win") {
     implicit val sqlCtx = spark.sqlContext
-    val target = java.nio.file.Files.createTempDirectory("graft-upsert-").toString + "/t"
-    val ms = MemoryStream[(String, Int)]
-    val q = UpsertSink.keyedUpsertStream(ms.toDS().toDF("k", "v"), Seq("k"), target)
-    try {
-      ms.addData(("a", 1), ("b", 2))
-      q.processAllAvailable()
-      ms.addData(("b", 20), ("c", 30))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.read.parquet(target).collect()
-      .map(r => (r.getString(0), r.getInt(1))).sortBy(_._1)
-    assert(out.toSeq == Seq(("a", 1), ("b", 20), ("c", 30)))
+    Scratch.withDir("graft-upsert-") { base =>
+      val target = s"$base/t"
+      val ms = MemoryStream[(String, Int)]
+      val q = UpsertSink.keyedUpsertStream(ms.toDS().toDF("k", "v"), Seq("k"), target)
+      try {
+        ms.addData(("a", 1), ("b", 2))
+        q.processAllAvailable()
+        ms.addData(("b", 20), ("c", 30))
+        q.processAllAvailable()
+      } finally q.stop()
+      val out = spark.read.parquet(target).collect()
+        .map(r => (r.getString(0), r.getInt(1))).sortBy(_._1)
+      assert(out.toSeq == Seq(("a", 1), ("b", 20), ("c", 30)))
+    }
   }
 
   test("streaming session windows: update-mode replay equals batch sessionization") {
@@ -310,85 +313,88 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("custom-state sessionizer: crash replay from checkpoint converges to the batch sessions") {
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
-    val base = java.nio.file.Files.createTempDirectory("graft-sess-crash-").toString
-    val out = s"$base/out"
-    val checkpoint = s"$base/chk"
-    val ms = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    @volatile var injected = false
-    // torn state: the batch that EMITS finalized sessions writes its
-    // output, then dies before the offset/state commit — recovery must
-    // replay it from the checkpointed state store, so the emitted rows
-    // appear at-least-once and the DISTINCT session set must still
-    // equal the batch semantics
-    def start() = EventStream
-      .sessionizeWithState(ms.toDS().toDF("user_id", "ts", "event_id", "event_type", "value"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[EventStream.SessionOut], _: Long) =>
-        val rows = batch.persist()
-        rows.write.mode("append").parquet(out)
-        val n = rows.count()
-        rows.unpersist()
-        if (n > 0 && !injected) {
-          injected = true
-          throw new RuntimeException("injected crash after write, before offset commit")
-        }
-      }.start()
+    Scratch.withDir("graft-sess-crash-") { base =>
+      val out = s"$base/out"
+      val checkpoint = s"$base/chk"
+      val ms = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      @volatile var injected = false
+      // torn state: the batch that EMITS finalized sessions writes its
+      // output, then dies before the offset/state commit — recovery must
+      // replay it from the checkpointed state store, so the emitted rows
+      // appear at-least-once and the DISTINCT session set must still
+      // equal the batch semantics
+      def start() = EventStream
+        .sessionizeWithState(ms.toDS().toDF("user_id", "ts", "event_id", "event_type", "value"))
+        .writeStream
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[EventStream.SessionOut], _: Long) =>
+          val rows = batch.persist()
+          rows.write.mode("append").parquet(out)
+          val n = rows.count()
+          rows.unpersist()
+          if (n > 0 && !injected) {
+            injected = true
+            throw new RuntimeException("injected crash after write, before offset commit")
+          }
+        }.start()
 
-    val q1 = start()
-    // session A (user 1): click → purchase, two events 10 min apart
-    ms.addData((1L, t("2024-01-01 00:00:00"), 10L, "click", 1.0),
-      (1L, t("2024-01-01 00:10:00"), 11L, "purchase", 2.5))
-    q1.processAllAvailable()
-    // session B (user 1) + a sentinel that advances the watermark past
-    // A's close: the batch that emits A is the one that crashes
-    ms.addData((1L, t("2024-01-01 02:00:00"), 12L, "view", 4.0),
-      (99L, t("2024-01-02 00:00:00"), 98L, "view", 0.0))
-    intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
-    assert(q1.exception.isDefined, "expected the injected crash to kill the query")
-    assert(injected)
+      val q1 = start()
+      // session A (user 1): click → purchase, two events 10 min apart
+      ms.addData((1L, t("2024-01-01 00:00:00"), 10L, "click", 1.0),
+        (1L, t("2024-01-01 00:10:00"), 11L, "purchase", 2.5))
+      q1.processAllAvailable()
+      // session B (user 1) + a sentinel that advances the watermark past
+      // A's close: the batch that emits A is the one that crashes
+      ms.addData((1L, t("2024-01-01 02:00:00"), 12L, "view", 4.0),
+        (99L, t("2024-01-02 00:00:00"), 98L, "view", 0.0))
+      intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
+      assert(q1.exception.isDefined, "expected the injected crash to kill the query")
+      assert(injected)
 
-    val q2 = start() // restart: the uncommitted emitting batch replays
-    try {
-      q2.processAllAvailable()
-      // far-future sentinel finalizes session B after recovery
-      ms.addData((99L, t("2024-01-05 00:00:00"), 99L, "view", 0.0))
-      q2.processAllAvailable()
-    } finally q2.stop()
+      val q2 = start() // restart: the uncommitted emitting batch replays
+      try {
+        q2.processAllAvailable()
+        // far-future sentinel finalizes session B after recovery
+        ms.addData((99L, t("2024-01-05 00:00:00"), 99L, "view", 0.0))
+        q2.processAllAvailable()
+      } finally q2.stop()
 
-    val emitted = spark.read.parquet(out).filter(col("user_id") < 99)
-      .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4),
-        r.getString(5), r.getBoolean(6))).toSeq
-    // at-least-once: the crashed batch's sessions really were written
-    // twice (once before the crash, once on replay)…
-    assert(emitted.size > emitted.distinct.size,
-      "replayed batch should re-emit the crashed batch's sessions")
-    // …but the distinct set converges to the batch-equivalent sessions
-    assert(emitted.distinct.sortBy(_._3) == Seq(
-      (1L, 2L, 350L, "click", true),   // session A: click→purchase
-      (1L, 1L, 400L, "view", false)).sortBy(_._3))
+      val emitted = spark.read.parquet(out).filter(col("user_id") < 99)
+        .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4),
+          r.getString(5), r.getBoolean(6))).toSeq
+      // at-least-once: the crashed batch's sessions really were written
+      // twice (once before the crash, once on replay)…
+      assert(emitted.size > emitted.distinct.size,
+        "replayed batch should re-emit the crashed batch's sessions")
+      // …but the distinct set converges to the batch-equivalent sessions
+      assert(emitted.distinct.sortBy(_._3) == Seq(
+        (1L, 2L, 350L, "click", true),   // session A: click→purchase
+        (1L, 1L, 400L, "view", false)).sortBy(_._3))
+    }
   }
 
   test("continuous pipeline: streamed documents refresh the full model DAG") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-pipe-").toString + "/raw"
-    val ms = MemoryStream[String]
-    val q = StreamingPipeline.run(ms.toDS().toDF("json"), store, prefix = "sp_test")
-    try {
-      ms.addData(Fixtures.aapl)
-      q.processAllAvailable()
-      assert(spark.table("sp_test_stg").count() == 10)
-      assert(spark.table("sp_test_dim").count() == 1)
-      // second batch: another symbol arrives; whole DAG refreshes
-      ms.addData(Fixtures.v)
-      q.processAllAvailable()
-      assert(spark.table("sp_test_stg").count() == 12)
-      val dim = spark.table("sp_test_dim").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(dim.keySet == Set("AAPL", "V"))
-      assert(dim("V") == "Unknown Company") // quirks survive streaming too
-      assert(spark.table("sp_test_weekly").count() > 0)
-    } finally q.stop()
+    Scratch.withDir("graft-pipe-") { base =>
+      val store = s"$base/raw"
+      val ms = MemoryStream[String]
+      val q = StreamingPipeline.run(ms.toDS().toDF("json"), store, prefix = "sp_test")
+      try {
+        ms.addData(Fixtures.aapl)
+        q.processAllAvailable()
+        assert(spark.table("sp_test_stg").count() == 10)
+        assert(spark.table("sp_test_dim").count() == 1)
+        // second batch: another symbol arrives; whole DAG refreshes
+        ms.addData(Fixtures.v)
+        q.processAllAvailable()
+        assert(spark.table("sp_test_stg").count() == 12)
+        val dim = spark.table("sp_test_dim").collect()
+          .map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(dim.keySet == Set("AAPL", "V"))
+        assert(dim("V") == "Unknown Company") // quirks survive streaming too
+        assert(spark.table("sp_test_weekly").count() > 0)
+      } finally q.stop()
+    }
   }
 
   test("streaming dedup drops cross-batch duplicates within the watermark") {
@@ -414,79 +420,82 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("partitioned store: unrelated micro-batch leaves other partitions byte-identical") {
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-part-").toString + "/raw"
-    val ms = MemoryStream[String]
-    val q = StreamingPipeline.run(ms.toDS().toDF("json"), store, prefix = "pp_test")
+    Scratch.withDir("graft-part-") { base =>
+      val store = s"$base/raw"
+      val ms = MemoryStream[String]
+      val q = StreamingPipeline.run(ms.toDS().toDF("json"), store, prefix = "pp_test")
 
-    def partBytes(sym: String): Map[String, Seq[Byte]] = {
-      val dir = new java.io.File(s"$store/symbol=$sym")
-      dir.listFiles().filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-        .map(f => f.getName ->
-          java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+      def partBytes(sym: String): Map[String, Seq[Byte]] = {
+        val dir = new java.io.File(s"$store/symbol=$sym")
+        dir.listFiles().filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+          .map(f => f.getName ->
+            java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+      }
+
+      try {
+        ms.addData(Fixtures.aapl, Fixtures.v)
+        q.processAllAvailable()
+        val aaplBefore = partBytes("AAPL")
+        val vBefore = partBytes("V")
+        assert(aaplBefore.nonEmpty && vBefore.nonEmpty)
+
+        // an unrelated symbol arrives: only its partition may change
+        ms.addData(Fixtures.overlapOld)
+        q.processAllAvailable()
+        assert(partBytes("AAPL") == aaplBefore)
+        assert(partBytes("V") == vBefore)
+        assert(new java.io.File(s"$store/symbol=GOOGL").isDirectory)
+
+        // full views see the merged store; delta views only the batch's slice
+        assert(spark.table("pp_test_dim").count() == 3)
+        assert(spark.table("pp_test_stg_delta").select("symbol").distinct()
+          .collect().map(_.getString(0)).toSeq == Seq("GOOGL"))
+        assert(spark.table("pp_test_fact_delta").count() == 2)
+      } finally q.stop()
     }
-
-    try {
-      ms.addData(Fixtures.aapl, Fixtures.v)
-      q.processAllAvailable()
-      val aaplBefore = partBytes("AAPL")
-      val vBefore = partBytes("V")
-      assert(aaplBefore.nonEmpty && vBefore.nonEmpty)
-
-      // an unrelated symbol arrives: only its partition may change
-      ms.addData(Fixtures.overlapOld)
-      q.processAllAvailable()
-      assert(partBytes("AAPL") == aaplBefore)
-      assert(partBytes("V") == vBefore)
-      assert(new java.io.File(s"$store/symbol=GOOGL").isDirectory)
-
-      // full views see the merged store; delta views only the batch's slice
-      assert(spark.table("pp_test_dim").count() == 3)
-      assert(spark.table("pp_test_stg_delta").select("symbol").distinct()
-        .collect().map(_.getString(0)).toSeq == Seq("GOOGL"))
-      assert(spark.table("pp_test_fact_delta").count() == 2)
-    } finally q.stop()
   }
 
   test("crash recovery: uncommitted batch replays from checkpoint, upsert converges") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-crash-").toString
-    val store = s"$base/store"
-    val checkpoint = s"$base/chk"
-    val ms = MemoryStream[(String, Int)]
-    @volatile var injected = false
-    // the torn state a real crash leaves: the partition WRITE succeeded,
-    // the checkpoint offset commit did not — recovery must replay the
-    // batch and the partitioned upsert must be idempotent under it
-    def start() = ms.toDS().toDF("symbol", "v").writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        UpsertSink.upsertPartitioned(batch, store)
-        if (id == 1L && !injected) {
-          injected = true
-          throw new RuntimeException("injected crash after write, before offset commit")
-        }
-      }.start()
+    Scratch.withDir("graft-crash-") { base =>
+      val store = s"$base/store"
+      val checkpoint = s"$base/chk"
+      val ms = MemoryStream[(String, Int)]
+      @volatile var injected = false
+      // the torn state a real crash leaves: the partition WRITE succeeded,
+      // the checkpoint offset commit did not — recovery must replay the
+      // batch and the partitioned upsert must be idempotent under it
+      def start() = ms.toDS().toDF("symbol", "v").writeStream
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          UpsertSink.upsertPartitioned(batch, store)
+          if (id == 1L && !injected) {
+            injected = true
+            throw new RuntimeException("injected crash after write, before offset commit")
+          }
+        }.start()
 
-    val q1 = start()
-    ms.addData(("a", 1), ("b", 2))
-    q1.processAllAvailable()
-    ms.addData(("b", 20), ("c", 30))
-    intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
-    assert(q1.exception.isDefined, "expected the injected crash to kill the query")
-    assert(injected)
+      val q1 = start()
+      ms.addData(("a", 1), ("b", 2))
+      q1.processAllAvailable()
+      ms.addData(("b", 20), ("c", 30))
+      intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
+      assert(q1.exception.isDefined, "expected the injected crash to kill the query")
+      assert(injected)
 
-    val q2 = start() // restart from the same checkpoint: batch 1 replays
-    try {
-      q2.processAllAvailable()
-      // new data after recovery flows normally
-      ms.addData(("a", 100))
-      q2.processAllAvailable()
-    } finally q2.stop()
+      val q2 = start() // restart from the same checkpoint: batch 1 replays
+      try {
+        q2.processAllAvailable()
+        // new data after recovery flows normally
+        ms.addData(("a", 100))
+        q2.processAllAvailable()
+      } finally q2.stop()
 
-    val out = spark.read.parquet(store).collect()
-      .map(r => (r.getAs[String]("symbol"), r.getAs[Int]("v"))).sorted
-    assert(out.toSeq == Seq(("a", 100), ("b", 20), ("c", 30)),
-      "store must equal the batch-equivalent upsert result, each key exactly once")
+      val out = spark.read.parquet(store).collect()
+        .map(r => (r.getAs[String]("symbol"), r.getAs[Int]("v"))).sorted
+      assert(out.toSeq == Seq(("a", 100), ("b", 20), ("c", 30)),
+        "store must equal the batch-equivalent upsert result, each key exactly once")
+    }
   }
 
   test("stateful streaming U2 merge replay equals the batch merge") {
@@ -521,30 +530,30 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val delta = docs.filter(pmod(col("doc_id"), lit(10)) === 7)
     // two files → with maxFilesPerTrigger=1, two real micro-batches;
     // the accumulated matches must equal the one-shot batch probe
-    val dir = java.nio.file.Files.createTempDirectory("graft-probe-spec-")
-    dir.toFile.deleteOnExit()
-    delta.filter(col("doc_id") < 250).coalesce(1)
-      .write.parquet(s"$dir/part1")
-    delta.filter(col("doc_id") >= 250).coalesce(1)
-      .write.parquet(s"$dir/part2")
-    Seq("part1", "part2").foreach { p =>
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
-        .filter(f => f.toString.endsWith(".parquet"))
-        .forEach(f => java.nio.file.Files.move(f,
-          java.nio.file.Paths.get(s"$dir/$p.parquet")))
+    Scratch.withDir("graft-probe-spec-") { dir =>
+      delta.filter(col("doc_id") < 250).coalesce(1)
+        .write.parquet(s"$dir/part1")
+      delta.filter(col("doc_id") >= 250).coalesce(1)
+        .write.parquet(s"$dir/part2")
+      Seq("part1", "part2").foreach { p =>
+        java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
+          .filter(f => f.toString.endsWith(".parquet"))
+          .forEach(f => java.nio.file.Files.move(f,
+            java.nio.file.Paths.get(s"$dir/$p.parquet")))
+      }
+      val stream = spark.readStream.schema(DocumentProbeStream.docSchema)
+        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val streamed = DocumentProbeStream.probeWithStream(stream, corpus)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(t => (t._1, t._2))
+      val batch = graft.dedup.Dedup
+        .incrementalNearDups(corpus, delta, "doc_id", "text", minJaccard = 0.7)
+        .select("delta_id", "corpus_id", "jaccard")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(t => (t._1, t._2))
+      assert(streamed.toSeq == batch.toSeq)
+      assert(streamed.nonEmpty)
     }
-    val stream = spark.readStream.schema(DocumentProbeStream.docSchema)
-      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    val streamed = DocumentProbeStream.probeWithStream(stream, corpus)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._2))
-    val batch = graft.dedup.Dedup
-      .incrementalNearDups(corpus, delta, "doc_id", "text", minJaccard = 0.7)
-      .select("delta_id", "corpus_id", "jaccard")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._2))
-    assert(streamed.toSeq == batch.toSeq)
-    assert(streamed.nonEmpty)
   }
 
   test("streaming CDC: mutated duplicate (key,seq) split across batches resolves as batch, either order") {
@@ -563,17 +572,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val want = tuples(Relational.applyChangeFeed(base, full, "k"))
     assert(want == Seq(("a", 99), ("b", 2))) // content decides, not arrival
     Seq(Seq(lo, hi), Seq(hi, lo)).foreach { order =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-dup-").toString
-      val ms = MemoryStream[(String, String, Long, Int)]
-      val q = ChangeFeedStream.runCdcStream(
-        ms.toDS().toDF("k", "op", "seq", "v"), "k", s"$tmp/state", s"$tmp/chk")
-      try {
-        ms.addData(order(0)); q.processAllAvailable()
-        ms.addData(order(1)); q.processAllAvailable()
-      } finally q.stop()
-      val got = tuples(ChangeFeedStream.applyState(
-        spark, base, s"$tmp/state", "k", full.schema))
-      assert(got == want, s"arrival order $order diverged from batch: $got")
+      Scratch.withDir("graft-cdc-dup-") { tmp =>
+        val ms = MemoryStream[(String, String, Long, Int)]
+        val q = ChangeFeedStream.runCdcStream(
+          ms.toDS().toDF("k", "op", "seq", "v"), "k", s"$tmp/state", s"$tmp/chk")
+        try {
+          ms.addData(order(0)); q.processAllAvailable()
+          ms.addData(order(1)); q.processAllAvailable()
+        } finally q.stop()
+        val got = tuples(ChangeFeedStream.applyState(
+          spark, base, s"$tmp/state", "k", full.schema))
+        assert(got == want, s"arrival order $order diverged from batch: $got")
+      }
     }
   }
 
@@ -585,53 +595,55 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val batch2 = Seq(("e", "I", 1L, 50), ("a", "U", 2L, 77))
     val batch3 = Seq(("b", "D", 3L, 0))
     val allChanges = (batch1 ++ batch2 ++ batch3).toDF("k", "op", "seq", "v")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-crash-").toString
-    val ms = MemoryStream[(String, String, Long, Int)]
-    @volatile var injected = false
-    // the torn state a real crash leaves: the generation write
-    // succeeded, the offset/state-store commit did not — recovery must
-    // replay the batch, and the generation sink must be idempotent
-    // under the replay (gen-<id> recomputed from the same predecessor)
-    def start() = ChangeFeedStream.runCdcStream(
-      ms.toDS().toDF("k", "op", "seq", "v"), "k", s"$tmp/state", s"$tmp/chk",
-      onBatch = id => if (id >= 1 && !injected) {
-        injected = true
-        throw new RuntimeException("injected crash after write, before commit")
-      })
-    val q1 = start()
-    ms.addData(batch1)
-    q1.processAllAvailable()
-    ms.addData(batch2)
-    intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
-    assert(q1.exception.isDefined, "expected the injected crash to kill the query")
-    assert(injected)
+    Scratch.withDir("graft-cdc-crash-") { tmp =>
+      val ms = MemoryStream[(String, String, Long, Int)]
+      @volatile var injected = false
+      // the torn state a real crash leaves: the generation write
+      // succeeded, the offset/state-store commit did not — recovery must
+      // replay the batch, and the generation sink must be idempotent
+      // under the replay (gen-<id> recomputed from the same predecessor)
+      def start() = ChangeFeedStream.runCdcStream(
+        ms.toDS().toDF("k", "op", "seq", "v"), "k", s"$tmp/state", s"$tmp/chk",
+        onBatch = id => if (id >= 1 && !injected) {
+          injected = true
+          throw new RuntimeException("injected crash after write, before commit")
+        })
+      val q1 = start()
+      ms.addData(batch1)
+      q1.processAllAvailable()
+      ms.addData(batch2)
+      intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
+      assert(q1.exception.isDefined, "expected the injected crash to kill the query")
+      assert(injected)
 
-    val q2 = start() // restart: the uncommitted batch replays from checkpoint
-    try {
-      q2.processAllAvailable()
-      ms.addData(batch3) // post-recovery arrivals flow normally
-      q2.processAllAvailable()
-    } finally q2.stop()
+      val q2 = start() // restart: the uncommitted batch replays from checkpoint
+      try {
+        q2.processAllAvailable()
+        ms.addData(batch3) // post-recovery arrivals flow normally
+        q2.processAllAvailable()
+      } finally q2.stop()
 
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getInt(1))).sortBy(_._1).toSeq
-    val got = tuples(ChangeFeedStream.applyState(
-      spark, base, s"$tmp/state", "k", allChanges.schema))
-    assert(got == tuples(Relational.applyChangeFeed(base, allChanges, "k")))
-    assert(got == Seq(("a", 77), ("d", 4), ("e", 50)))
+      def tuples(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getInt(1))).sortBy(_._1).toSeq
+      val got = tuples(ChangeFeedStream.applyState(
+        spark, base, s"$tmp/state", "k", allChanges.schema))
+      assert(got == tuples(Relational.applyChangeFeed(base, allChanges, "k")))
+      assert(got == Seq(("a", 77), ("d", 4), ("e", 50)))
+    }
   }
 
   test("streaming CDC: an empty feed yields the untouched base, no NPE") {
     implicit val sqlCtx = spark.sqlContext
     val base = Seq(("a", 1)).toDF("k", "v")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-empty-").toString
-    val ms = MemoryStream[(String, String, Long, Int)]
-    val feed = ms.toDS().toDF("k", "op", "seq", "v")
-    val q = ChangeFeedStream.runCdcStream(feed, "k", s"$tmp/state", s"$tmp/chk")
-    try q.processAllAvailable() finally q.stop()
-    val got = ChangeFeedStream.applyState(spark, base, s"$tmp/state", "k", feed.schema)
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-    assert(got == Seq(("a", 1)))
+    Scratch.withDir("graft-cdc-empty-") { tmp =>
+      val ms = MemoryStream[(String, String, Long, Int)]
+      val feed = ms.toDS().toDF("k", "op", "seq", "v")
+      val q = ChangeFeedStream.runCdcStream(feed, "k", s"$tmp/state", s"$tmp/chk")
+      try q.processAllAvailable() finally q.stop()
+      val got = ChangeFeedStream.applyState(spark, base, s"$tmp/state", "k", feed.schema)
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+      assert(got == Seq(("a", 1)))
+    }
   }
 
   test("st33 quantile-sketch state: adversarial batch splits drain to the batch signature") {
@@ -680,54 +692,55 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       java.lang.Long.parseLong(
         d.map("%02x".format(_)).mkString.substring(0, 13), 16)
     }
-    val base = java.nio.file.Files.createTempDirectory("graft-qs-crash-").toString
-    val out = s"$base/out"
-    val chk = s"$base/chk"
-    val ms = MemoryStream[QsRow]
-    @volatile var injected = false
-    // torn state: the batch that folds the first 400 rows writes its
-    // signatures, then dies before the offset/state commit — recovery
-    // must replay it against the CHECKPOINTED (empty) pre-batch state,
-    // re-emitting identical signatures, and the post-restart fold must
-    // build on state recovered from the store, not recomputed ad hoc
-    def start() = sketchStream(ms.toDS()).toDF()
-      .writeStream.outputMode(OutputMode.Update)
-      .option("checkpointLocation", chk)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = batch.persist()
-        rows.write.mode("append").parquet(out)
-        val n = rows.count()
-        rows.unpersist()
-        if (n > 0 && !injected) {
-          injected = true
-          throw new RuntimeException(
-            "injected crash after write, before offset commit")
-        }
-      }.start()
-    val rows = (1L to 600L).map(k =>
-      QsRow(if (k % 2 == 0) "s1" else "s2", k, h(k), k * 0.5))
-    val q1 = start()
-    ms.addData(rows.take(400))
-    intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
-    assert(q1.exception.isDefined, "expected the injected crash to kill the query")
-    assert(injected)
-    val q2 = start() // restart: the uncommitted folding batch replays
-    try {
-      ms.addData(rows.drop(400))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    // at-least-once sink: the torn batch's rows appear twice, but the
-    // replayed emission is IDENTICAL (same pre-batch state), so
-    // latest-updates-wins recovers the exact final signature
-    val drained = graft.ops.Relational.dedupeKeepFirst(
-      spark.read.parquet(out), Seq("shard"), Seq(col("updates").desc))
-    val got = signatureRows(drained)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val want = rows.groupBy(_.shard).toSeq.flatMap { case (s, rs) =>
-      rs.sortBy(r => (r.h, r.k)).take(graft.quality.Qs.K).map(r => (s, r.k))
-    }.toSet
-    assert(got == want,
-      "recovered stream state drifted from the batch bottom-K")
+    Scratch.withDir("graft-qs-crash-") { base =>
+      val out = s"$base/out"
+      val chk = s"$base/chk"
+      val ms = MemoryStream[QsRow]
+      @volatile var injected = false
+      // torn state: the batch that folds the first 400 rows writes its
+      // signatures, then dies before the offset/state commit — recovery
+      // must replay it against the CHECKPOINTED (empty) pre-batch state,
+      // re-emitting identical signatures, and the post-restart fold must
+      // build on state recovered from the store, not recomputed ad hoc
+      def start() = sketchStream(ms.toDS()).toDF()
+        .writeStream.outputMode(OutputMode.Update)
+        .option("checkpointLocation", chk)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          val rows = batch.persist()
+          rows.write.mode("append").parquet(out)
+          val n = rows.count()
+          rows.unpersist()
+          if (n > 0 && !injected) {
+            injected = true
+            throw new RuntimeException(
+              "injected crash after write, before offset commit")
+          }
+        }.start()
+      val rows = (1L to 600L).map(k =>
+        QsRow(if (k % 2 == 0) "s1" else "s2", k, h(k), k * 0.5))
+      val q1 = start()
+      ms.addData(rows.take(400))
+      intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
+      assert(q1.exception.isDefined, "expected the injected crash to kill the query")
+      assert(injected)
+      val q2 = start() // restart: the uncommitted folding batch replays
+      try {
+        ms.addData(rows.drop(400))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      // at-least-once sink: the torn batch's rows appear twice, but the
+      // replayed emission is IDENTICAL (same pre-batch state), so
+      // latest-updates-wins recovers the exact final signature
+      val drained = graft.ops.Relational.dedupeKeepFirst(
+        spark.read.parquet(out), Seq("shard"), Seq(col("updates").desc))
+      val got = signatureRows(drained)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      val want = rows.groupBy(_.shard).toSeq.flatMap { case (s, rs) =>
+        rs.sortBy(r => (r.h, r.k)).take(graft.quality.Qs.K).map(r => (s, r.k))
+      }.toSet
+      assert(got == want,
+        "recovered stream state drifted from the batch bottom-K")
+    }
   }
 
   test("st09 media-hash stream accumulates across real micro-batches") {
@@ -735,75 +748,76 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     // two files → with maxFilesPerTrigger=1, two genuine micro-batches;
     // the stateless decode must accumulate to the one-shot batch result
-    val dir = java.nio.file.Files.createTempDirectory("graft-media-spec-")
-    dir.toFile.deleteOnExit()
-    docs.filter(col("doc_id") < 25).coalesce(1).write.parquet(s"$dir/part1")
-    docs.filter(col("doc_id") >= 25).coalesce(1).write.parquet(s"$dir/part2")
-    Seq("part1", "part2").foreach { p =>
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
-        .filter(f => f.toString.endsWith(".parquet"))
-        .forEach(f => java.nio.file.Files.move(f,
-          java.nio.file.Paths.get(s"$dir/$p.parquet")))
+    Scratch.withDir("graft-media-spec-") { dir =>
+      docs.filter(col("doc_id") < 25).coalesce(1).write.parquet(s"$dir/part1")
+      docs.filter(col("doc_id") >= 25).coalesce(1).write.parquet(s"$dir/part2")
+      Seq("part1", "part2").foreach { p =>
+        java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$p"))
+          .filter(f => f.toString.endsWith(".parquet"))
+          .forEach(f => java.nio.file.Files.move(f,
+            java.nio.file.Paths.get(s"$dir/$p.parquet")))
+      }
+      val name = "graft_spec_media_stream"
+      spark.catalog.dropTempView(name)
+      val stream = spark.readStream.schema(DocumentProbeStream.docSchema)
+        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val q = Multimodal.imageHashes(
+          Multimodal.mediaWithRealImages(stream).filter(col("kind") === "image"))
+        .writeStream.outputMode("append").format("memory").queryName(name)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
+        "expected at least two non-empty micro-batches")
+      def tuples(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      val streamed = tuples(spark.table(name))
+      val batch = tuples(Multimodal.imageHashes(
+        Multimodal.mediaWithRealImages(docs).filter(col("kind") === "image")))
+      assert(streamed == batch)
+      assert(streamed.nonEmpty)
     }
-    val name = "graft_spec_media_stream"
-    spark.catalog.dropTempView(name)
-    val stream = spark.readStream.schema(DocumentProbeStream.docSchema)
-      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    val q = Multimodal.imageHashes(
-        Multimodal.mediaWithRealImages(stream).filter(col("kind") === "image"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
-      "expected at least two non-empty micro-batches")
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val streamed = tuples(spark.table(name))
-    val batch = tuples(Multimodal.imageHashes(
-      Multimodal.mediaWithRealImages(docs).filter(col("kind") === "image")))
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
   }
 
   test("audited publish: a poisoned micro-batch pins the pointer and the stream survives") {
-    val base = java.nio.file.Files.createTempDirectory("graft-st24spec-").toString
-    def t(s: String) = Timestamp.valueOf(s)
-    new java.io.File(s"$base/feed").mkdirs()
-    // the file stream lists the feed dir FLAT — stage each batch and
-    // move its single part file in as feed/<name>.parquet
-    def write(name: String, rows: Seq[(Long, Timestamp, Long, String, Double, String)]): Unit = {
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/stage-$name")
-      val part = new java.io.File(s"$base/stage-$name").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$base/feed/$name.parquet"))
-      ()
+    Scratch.withDir("graft-st24spec-") { base =>
+      def t(s: String) = Timestamp.valueOf(s)
+      new java.io.File(s"$base/feed").mkdirs()
+      // the file stream lists the feed dir FLAT — stage each batch and
+      // move its single part file in as feed/<name>.parquet
+      def write(name: String, rows: Seq[(Long, Timestamp, Long, String, Double, String)]): Unit = {
+        rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+          .coalesce(1).write.mode("overwrite").parquet(s"$base/stage-$name")
+        val part = new java.io.File(s"$base/stage-$name").listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(s"$base/feed/$name.parquet"))
+        ()
+      }
+      // batch 1: clean; batch 2: a NULL ts row poisons the (type, day)
+      // state with a NULL day key — key_not_null must refuse from then on
+      write("f1", Seq((1L, t("2024-01-01 10:00:00"), 1L, "click", 1.0, "{}"),
+        (2L, t("2024-01-01 11:00:00"), 2L, "view", 1.0, "{}")))
+      val q0 = spark.readStream
+        .schema(spark.read.parquet(s"$base/feed/f1.parquet").schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$base/feed")
+      val query = PublishStream.runAuditedPublish(
+        graft.queries.QualityQueries.dailyCounts(q0),
+        s"$base/pub", s"$base/chk", PublishStream.dailyAudits)
+      try {
+        query.processAllAvailable()
+        val gen0 = graft.ops.Storage.readPublished(spark, s"$base/pub").get
+          .collect().map(r => (r.getString(0), r.getLong(2))).sorted.toSeq
+        assert(gen0 == Seq(("click", 1L), ("view", 1L)))
+        write("f2", Seq((3L, null.asInstanceOf[Timestamp], 3L, "click", 1.0, "{}")))
+        query.processAllAvailable()
+        assert(query.isActive, "a refused batch must not kill the stream")
+        // pointer still serves the clean generation — the poisoned
+        // snapshot (with its NULL day) never became visible
+        val after = graft.ops.Storage.readPublished(spark, s"$base/pub").get
+          .collect().map(r => (r.getString(0), r.getLong(2))).sorted.toSeq
+        assert(after == gen0)
+      } finally query.stop()
     }
-    // batch 1: clean; batch 2: a NULL ts row poisons the (type, day)
-    // state with a NULL day key — key_not_null must refuse from then on
-    write("f1", Seq((1L, t("2024-01-01 10:00:00"), 1L, "click", 1.0, "{}"),
-      (2L, t("2024-01-01 11:00:00"), 2L, "view", 1.0, "{}")))
-    val q0 = spark.readStream
-      .schema(spark.read.parquet(s"$base/feed/f1.parquet").schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/feed")
-    val query = PublishStream.runAuditedPublish(
-      graft.queries.QualityQueries.dailyCounts(q0),
-      s"$base/pub", s"$base/chk", PublishStream.dailyAudits)
-    try {
-      query.processAllAvailable()
-      val gen0 = graft.ops.Storage.readPublished(spark, s"$base/pub").get
-        .collect().map(r => (r.getString(0), r.getLong(2))).sorted.toSeq
-      assert(gen0 == Seq(("click", 1L), ("view", 1L)))
-      write("f2", Seq((3L, null.asInstanceOf[Timestamp], 3L, "click", 1.0, "{}")))
-      query.processAllAvailable()
-      assert(query.isActive, "a refused batch must not kill the stream")
-      // pointer still serves the clean generation — the poisoned
-      // snapshot (with its NULL day) never became visible
-      val after = graft.ops.Storage.readPublished(spark, s"$base/pub").get
-        .collect().map(r => (r.getString(0), r.getLong(2))).sorted.toSeq
-      assert(after == gen0)
-    } finally query.stop()
   }
 
   test("every st query cleans up: no stream, drain view, temp dir or cached dataset outlives two runs") {

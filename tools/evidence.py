@@ -467,16 +467,24 @@ INCLUDE_SKEW_SMALL = {
 SELFCHECK_TAIL = re.compile(r"(\d+) oracle-backed checked, (\d+) failures")
 
 
+def half_mem():
+    """Half of MemTotal in whole GiB (at least 2), the tier-1 command's
+    heap rule without its 8g cap: q43's 100x edge list and st21's
+    complete-mode window-stats state store both ran out of heap at 8g."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+        return f"{max(2, kb // 2097152)}g"
+    except (OSError, StopIteration, ValueError):
+        return "2g"
+
+
 def run(cmd, **kw):
     print(f"[evidence] $ {' '.join(cmd)}", flush=True)
-    # The forked run JVM defaults to -Xmx8g (build.sbt), which the deep
-    # tiers outgrew this round: q43's 100x edge list and st21's
-    # complete-mode window-stats state store both OOMed at 8g while the
-    # box has 125 GiB free. Provision the gate JVMs like the bench run
-    # is provisioned — explicit, not default; a caller's own setting
-    # still wins.
+    # The forked run JVM defaults to -Xmx8g (build.sbt); size it for the
+    # box instead. A caller's own SPARK_DRIVER_MEM still wins.
     env = kw.pop("env", dict(os.environ))
-    env.setdefault("SPARK_DRIVER_MEM", "48g")
+    env.setdefault("SPARK_DRIVER_MEM", half_mem())
     return subprocess.run(cmd, cwd=REPO, capture_output=True, text=True,
                           env=env, **kw)
 
@@ -497,8 +505,8 @@ def gate(sf_dir, out_dir, names=None):
     if names:
         args += " " + " ".join(sorted(names))
         rec["n_requested"] = len(names)
-    # every main defaults to all cores the JVM sees; each stage names its
-    # own count (Verify 4, BlowUp 16, Bench 32)
+    # Verify runs at 4 cores; BlowUp and Bench use every core the JVM
+    # sees (LocalSpark's default)
     v = run(["sbt", "-batch", args],
             env=dict(os.environ, SPARK_GRAFT_CPUS="4"))
     verify_errs = [l for l in v.stderr.splitlines() if "[verify]" in l]
@@ -525,7 +533,8 @@ def bench_only():
     preserving every gate. Exists because the full refresh runs the
     bench LAST, on a JVM and box that just spent ~2 h on the deep
     tiers — which inflates every query uniformly (the r16 refresh read
-    1.17x on per-query MINS across untouched code, loadavg_pre 12.4).
+    1.17x on per-query MINS across untouched code, starting at loadavg
+    12.4).
     The bench contract says run it exclusively; this re-runs it that
     way and records the superseded total for provenance."""
     with open(os.path.join(REPO, "EVIDENCE.json")) as f:
@@ -545,7 +554,6 @@ def bench_only():
     t0 = time.time()
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR="/root/testdata/sf0.1",
-               SPARK_GRAFT_CPUS="32",
                SPARK_GRAFT_DEEP_TIERS="1")
     bench = run(["sbt", "-batch", "runMain graft.Bench"], env=env)
     bo = os.path.join(REPO, "bench_out.json")
@@ -561,7 +569,7 @@ def bench_only():
     if prev.get("value") is not None:
         evidence["bench"]["superseded_run"] = {
             "value": prev.get("value"),
-            "loadavg_pre": prev.get("loadavg_pre"),
+            "loadavg_start": prev.get("loadavg_start"),
             "note": "bench from the full tier refresh (hot JVM/box); "
                     "replaced by this exclusive re-run per the "
                     "run-bench-exclusively contract"}
@@ -607,8 +615,7 @@ def main():
     def derived_gate(tier, flavor, out_dir, gate_names,
                      src="/root/testdata/sf0.1"):
         b = run(["sbt", "-batch",
-                 f"runMain graft.BlowUp {src} {flavor}"],
-                env=dict(os.environ, SPARK_GRAFT_CPUS="16"))
+                 f"runMain graft.BlowUp {src} {flavor}"])
         m = re.search(r"BLOWUP_DIR=(\S+)", b.stdout)
         ident = re.search(r"BLOWUP_IDENTITY=(.*)", b.stdout)
         if m:
@@ -642,7 +649,6 @@ def main():
         t0 = time.time()
         env = dict(os.environ,
                    SPARK_GRAFT_SF_DIR="/root/testdata/sf0.1",
-                   SPARK_GRAFT_CPUS="32",
                    SPARK_GRAFT_DEEP_TIERS="0" if skip_deep else "1")
         bench = run(["sbt", "-batch", "runMain graft.Bench"], env=env)
         bo = os.path.join(REPO, "bench_out.json")
