@@ -100,34 +100,6 @@ object PageRank {
     * recurrence form. Same recurrence, same integer math, row-exact
     * equivalence with the old form checked at sf0.01/sf0.1 before the
     * swap. */
-  /** The pre-r22 oracle form — kept as the CHAIN ANCHOR (the
-    * q45NaiveOracle pattern): every CTE inlined, the edge list joined
-    * twice per iteration. Unaffordable for DuckDB replay past the
-    * sf0.1 tier, but obviously the textbook recurrence;
-    * PageRankOracleChainSpec replays both forms through Spark SQL and
-    * pins them row-exact, so the shipped MATERIALIZED form stays
-    * provably the naive one in disguise. */
-  def oracleIterCtesNaive(iters: Int = 10): String = {
-    val steps = (1 to iters).map { i =>
-      s"""pr$i AS (
-         |  SELECT nd.node,
-         |    CAST((15 * ($Scale // nn.n)) // 100
-         |      + (85 * COALESCE(inc.s, 0)) // 100 AS BIGINT) AS pr
-         |  FROM nodes nd CROSS JOIN n nn
-         |  LEFT JOIN (
-         |    SELECT e.dst AS node, CAST(SUM(p.pr // dg.deg) AS BIGINT) AS s
-         |    FROM edges e
-         |    JOIN pr${i - 1} p ON p.node = e.src
-         |    JOIN deg dg ON dg.src = e.src
-         |    GROUP BY e.dst) inc ON inc.node = nd.node)""".stripMargin
-    }
-    s"""deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
-       |nodes AS (SELECT DISTINCT src AS node FROM edges),
-       |n AS (SELECT COUNT(*) AS n FROM nodes),
-       |pr0 AS (SELECT node, $Scale // nn.n AS pr FROM nodes CROSS JOIN n nn),
-       |${steps.mkString(",\n")}""".stripMargin
-  }
-
   def oracleIterCtes(iters: Int = 10): String = {
     val steps = (1 to iters).map { i =>
       s"""pr$i AS MATERIALIZED (

@@ -19,11 +19,10 @@ import graft.ops.Relational
  *
  * Both are set-oriented: any number of symbols/versions merge in one
  * shuffle on the key — versus the reference's per-symbol loop. U2 is
- * one grouping by symbol, the batch shape of the stateful per-key fold
- * in [[graft.streaming.DocumentMergeStream]]: the aggregation buffer
- * holds a symbol's k versions whole and the last-writer-wins pick runs
- * on that array. Every caller merges k = 2 versions per symbol (the
- * landed store plus one fetch, or mp05's v1 plus v2), so the buffer is
+ * one grouping by symbol: the aggregation buffer holds a symbol's k
+ * versions whole and the last-writer-wins pick runs on that array.
+ * Every caller merges k = 2 versions per symbol (the landed store plus
+ * one fetch or micro-batch, or mp05's v1 plus v2), so the buffer is
  * about twice one document.
  */
 object DocumentMerge {

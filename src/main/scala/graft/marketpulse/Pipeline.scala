@@ -61,35 +61,44 @@ object Pipeline {
   /**
    * The reference's whole Airflow DAG as one call
    * (`stock_pipeline_dag.py:141`: fetch → load → transform → publish):
-   * fetch documents through the pluggable transport, U2-merge them
-   * with the already-landed per-symbol JSON store, write the merged
-   * documents back (`get_stock.py:99-104` — the landed store IS the
-   * durable merge state), then derive the model DAG from the merged
-   * raw. Because U2 is idempotent and last-writer-wins, re-running
+   * fetch documents through the pluggable transport, then [[land]]
+   * them. Because U2 is idempotent and last-writer-wins, re-running
    * with the same fetch changes nothing, and a refetch restating old
    * dates wins exactly where it should.
    */
   def referenceDag(spark: SparkSession, symbols: Seq[String],
                    fetcher: Fetch.DocumentFetcher, docsRoot: String,
-                   rateLimitMillis: Long = 0L): Run = {
-    val fetched = Fetch.fetchDocuments(spark, symbols, fetcher, rateLimitMillis)
+                   rateLimitMillis: Long = 0L): Run =
+    land(Fetch.fetchDocuments(spark, symbols, fetcher, rateLimitMillis), docsRoot)
+
+  /**
+   * Land fetched document versions (rawTable-shaped) in the per-symbol
+   * JSON store at `docsRoot`: U2-merge them with the already-landed
+   * documents, write the merged documents back (`get_stock.py:99-104`
+   * — the landed store IS the durable merge state), then derive the
+   * model DAG from the merged raw. The one landing path of the daily
+   * DAG and the continuous pipeline. The returned `raw` is persisted;
+   * the caller unpersists it when done with the Run.
+   */
+  def land(versions: DataFrame, docsRoot: String): Run = {
+    val spark = versions.sparkSession
     val root = new Path(docsRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasStore = fs.exists(root) && fs.listStatus(root).nonEmpty
-    // the landed store is by definition OLDER than this cycle's fetch:
-    // stamp it epoch-zero so last-writer-wins resolves ties toward the
-    // incoming documents (current_timestamp is per-query constant, so
-    // both frames would otherwise carry the same load_date)
-    val versions =
+    // the landed store is by definition OLDER than the incoming
+    // versions: stamp it epoch-zero so last-writer-wins resolves ties
+    // toward them (current_timestamp is per-query constant, so both
+    // frames would otherwise carry the same load_date)
+    val all =
       if (hasStore)
         Ingest.readDocuments(spark, docsRoot)
           .withColumn("load_date", to_timestamp(lit("1970-01-01 00:00:00")))
-          .unionByName(fetched)
-      else fetched
+          .unionByName(versions)
+      else versions
     // persist + materialize BEFORE the write-back: the merge plan reads
     // the very files writeDocuments is about to overwrite, and every
     // later action on the Run would otherwise re-pay the whole merge
-    val merged = DocumentMerge.mergeIncremental(versions)
+    val merged = DocumentMerge.mergeIncremental(all)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     merged.count()
     DocumentSink.writeDocuments(merged, docsRoot)

@@ -86,19 +86,31 @@ object AdvancedQueries {
       |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       |GROUP BY o.o_orderpriority""".stripMargin
 
-  // ---- q21: gap-based sessionization (30-minute inactivity) ----
-  private def q21(spark: SparkSession, dir: String): DataFrame = {
+  // ---- gap sessionization, shared by q21, q37, q41, q42, q48 and
+  //      q49: over each user's events in `order`, `new_s` = 1 marks
+  //      the first event and every event more than 30 minutes after
+  //      the one before it, and `sid`, the running count of marks,
+  //      numbers the user's sessions. Reads `user_id` and `tus` (epoch
+  //      micros). ----
+  private def sessionize(events: DataFrame,
+                         order: Seq[Column] = Seq(col("tus"), col("event_id"))): DataFrame = {
     val gapMicros = 30L * 60 * 1000000
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
-    val sessions = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"))
+    val byUser = Window.partitionBy(col("user_id")).orderBy(order: _*)
+    events
       .withColumn("prev", lag(col("tus"), 1).over(byUser))
       .withColumn("new_s",
         when(col("prev").isNull || col("tus") - col("prev") > gapMicros, 1)
           .otherwise(0))
-      .withColumn("session_id",
+      .withColumn("sid",
         sum(col("new_s")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("session_id"))
+  }
+
+  // ---- q21: gap-based sessionization (30-minute inactivity) ----
+  private def q21(spark: SparkSession, dir: String): DataFrame = {
+    val sessions = sessionize(Tables.events(spark, dir)
+        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus")),
+        Seq(col("event_id")))
+      .groupBy(col("user_id"), col("sid"))
       .agg(count(lit(1)).as("n"))
     sessions.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"),
@@ -601,17 +613,8 @@ object AdvancedQueries {
   //      absorb a 1-µs-before-midnight boundary (1.2e-11 below the
   //      integer) and round floor() into the wrong day. ----
   private def q37(spark: SparkSession, dir: String): DataFrame = {
-    val gapMicros = 30L * 60 * 1000000
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("tus"), col("event_id"))
-    val sessions = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(byUser))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > gapMicros, 1)
-          .otherwise(0))
-      .withColumn("sid",
-        sum(col("new_s")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+    val sessions = sessionize(Tables.events(spark, dir)
+        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus")))
       .groupBy(col("user_id"), col("sid"))
       .agg(min(col("tus")).as("s"), max(col("tus")).as("e"))
     val deltas = sessions.select(col("s").as("t"), lit(1L).as("d"))
@@ -774,16 +777,12 @@ object AdvancedQueries {
   //      engines. ----
   private def q41(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val gapMicros = 30L * 60 * 1000000
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("tus"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(byUser))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > gapMicros, 1)
-          .otherwise(0))
+    // `sid` goes unused here, so the optimizer prunes its window
+    sessionize(Tables.events(spark, dir)
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          col("value"), unix_micros(col("ts")).as("tus")))
       .withColumn("first_type",
         last(when(col("new_s") === 1, col("event_type")), ignoreNulls = true)
           .over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
@@ -828,18 +827,9 @@ object AdvancedQueries {
   //      stays a division of exact integers, identical on any IEEE
   //      engine. ----
   private def q42(spark: SparkSession, dir: String): DataFrame = {
-    val gapMicros = 30L * 60 * 1000000
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("tus"), col("event_id"))
-    val baskets = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(byUser))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > gapMicros, 1)
-          .otherwise(0))
-      .withColumn("sid",
-        sum(col("new_s")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+    val baskets = sessionize(Tables.events(spark, dir)
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          unix_micros(col("ts")).as("tus")))
       .select(col("user_id"), col("sid"), col("event_type")).distinct()
     val nSessions = baskets.select(col("user_id"), col("sid")).distinct()
       .agg(count(lit(1)).as("n_sessions"))
@@ -1206,44 +1196,6 @@ object AdvancedQueries {
     }.reduce(_ unionByName _)
   }
 
-  /** The r17-era peel formulation, kept ONLY as the chain-spec
-    * reference (KCoreOracleChainSpec replays both FORMS through Spark
-    * SQL at a reduced unroll and asserts cell equality — the
-    * q45/TriangleOracleChainSpec playbook; form-vs-form equality is
-    * per-round, so it holds at ANY round count, and Spark cannot
-    * replay the 16-round text: it ignores MATERIALIZED, and this
-    * form's 3-references-per-round inline to 3^16 scans — the exact
-    * blow-up the shipped oracle's hints exist to stop): each round
-    * filters with two identical IN subqueries against the previous
-    * round, and e0/sym are plain CTEs. Correct but 2x the per-round
-    * work and, in DuckDB, 4x the support self-join when inlined —
-    * see q47Oracle for the shipped form. */
-  private[queries] def q47LegacyOracleAt(unroll: Int): String = {
-    def peel(k: Int): String = {
-      val base = s"e${k}_0 AS MATERIALIZED (SELECT u, v FROM sym)"
-      val rounds = (1 to unroll).map { r =>
-        val p = s"e${k}_${r - 1}"
-        s"""e${k}_$r AS MATERIALIZED (
-           |  SELECT s.u, s.v FROM $p s
-           |  WHERE s.u IN (SELECT u FROM $p GROUP BY u HAVING COUNT(*) >= $k)
-           |    AND s.v IN (SELECT u FROM $p GROUP BY u HAVING COUNT(*) >= $k))""".stripMargin
-      }
-      (base +: rounds).mkString(",\n")
-    }
-    s"""WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-       |e0 AS (SELECT a.p AS pa, b.p AS pb
-       |       FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-       |       GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-       |sym AS (SELECT pa AS u, pb AS v FROM e0
-       |        UNION ALL SELECT pb, pa FROM e0),
-       |${peel(2)},
-       |${peel(3)}
-       |SELECT CAST(2 AS INT) AS k, u AS partkey, COUNT(*) AS core_degree
-       |FROM e2_$unroll GROUP BY 2
-       |UNION ALL
-       |SELECT CAST(3 AS INT), u, COUNT(*) FROM e3_$unroll GROUP BY 2""".stripMargin
-  }
-
   private[queries] val q47Oracle: String = q47OracleAt(Q47Rounds)
 
   private[queries] def q47OracleAt(unroll: Int): String = {
@@ -1303,18 +1255,9 @@ object AdvancedQueries {
   //      sessionization, one (user, day) aggregate, one day-grain
   //      report aggregate. ----
   private def q48(spark: SparkSession, dir: String): DataFrame = {
-    val gapMicros = 30L * 60 * 1000000
     val dayUs = 86400000000L
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("tus"), col("event_id"))
-    val sessions = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(byUser))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > gapMicros, 1)
-          .otherwise(0))
-      .withColumn("sid",
-        sum(col("new_s")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+    val sessions = sessionize(Tables.events(spark, dir)
+        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus")))
       .groupBy(col("user_id"), col("sid"))
       .agg(min(col("tus")).as("s"), max(col("tus")).as("e"))
     val perUserDay = sessions
@@ -1386,18 +1329,9 @@ object AdvancedQueries {
   //      chained min-rank-after joins — so the gate cross-checks the
   //      greedy, not just re-runs it. ----
   private def q49(spark: SparkSession, dir: String): DataFrame = {
-    val gapMicros = 30L * 60 * 1000000
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("tus"), col("event_id"))
-    val sessioned = Tables.events(spark, dir)
+    val sessioned = sessionize(Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(byUser))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > gapMicros, 1)
-          .otherwise(0))
-      .withColumn("sid",
-        sum(col("new_s")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+        unix_micros(col("ts")).as("tus")))
     val walked = sessioned
       .groupBy(col("user_id"), col("sid"))
       .agg(min(col("tus")).as("start_tus"),

@@ -585,11 +585,11 @@ object StorageQueries {
   //      before the job starts; pinned in PlanShapeSpec). The bucket
   //      of each query term comes from evaluating the writer's own
   //      xxhash64 expression over a 3-row literal frame (one
-  //      metadata-sized driver action, the UpsertSink pattern) — the
-  //      bucket function is engine-internal LAYOUT, so the oracle
-  //      never needs to reproduce it: it answers the search from the
-  //      raw corpus. tf sums are integers, so the AND-semantics
-  //      top-10 gates cell-exact. ----
+  //      metadata-sized driver action) — the bucket function is
+  //      engine-internal LAYOUT, so the oracle never needs to
+  //      reproduce it: it answers the search from the raw corpus. tf
+  //      sums are integers, so the AND-semantics top-10 gates
+  //      cell-exact. ----
   private val Io17Terms = Seq("spark", "window", "join")
 
   private[queries] def io17(spark: SparkSession, dir: String, tmp: String): DataFrame = {

@@ -21,7 +21,7 @@ import graft.sources.Tables
  * only), and `foreachBatch` lets every arriving micro-batch reuse it
  * verbatim — one code path, one set of plan-shape guarantees, plus the
  * streaming machinery (micro-batches, offsets, restartability) on top.
- * This is the same composition as [[UpsertSink]]'s streaming MERGE.
+ * This is the same composition as [[StreamingPipeline]]'s landing.
  */
 object DocumentProbeStream {
 

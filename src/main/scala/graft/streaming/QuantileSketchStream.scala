@@ -35,8 +35,7 @@ object QuantileSketchStream {
 
   /** Per-shard signature state: the bottom-K (h, k, v) triples in
     * (h, k) order, plus a monotonic update counter so update-mode
-    * sinks can recover "latest state per shard" unambiguously (the
-    * [[DocumentMergeStream.MergedDoc]] pattern). */
+    * sinks can recover "latest state per shard" unambiguously. */
   case class QsSig(shard: String, hs: Seq[Long], ks: Seq[Long],
                    vs: Seq[Double], updates: Long)
 

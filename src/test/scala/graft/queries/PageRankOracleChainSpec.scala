@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.graph.PageRank.Scale
 
 /** Chains q43's MATERIALIZED aggregated-recurrence gate oracle (r22)
   * to the naive inlined form it replaced: both CTE chains replay
@@ -39,8 +40,33 @@ class PageRankOracleChainSpec extends AnyFunSuite with SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
   }
 
+  /** The pre-r22 oracle form, the chain's anchor (the q45NaiveOracle
+    * pattern): every CTE inlined, the edge list joined twice per
+    * iteration. Unaffordable for DuckDB replay past the sf0.1 tier,
+    * but obviously the textbook recurrence. */
+  private def naiveIterCtes(iters: Int): String = {
+    val steps = (1 to iters).map { i =>
+      s"""pr$i AS (
+         |  SELECT nd.node,
+         |    CAST((15 * ($Scale // nn.n)) // 100
+         |      + (85 * COALESCE(inc.s, 0)) // 100 AS BIGINT) AS pr
+         |  FROM nodes nd CROSS JOIN n nn
+         |  LEFT JOIN (
+         |    SELECT e.dst AS node, CAST(SUM(p.pr // dg.deg) AS BIGINT) AS s
+         |    FROM edges e
+         |    JOIN pr${i - 1} p ON p.node = e.src
+         |    JOIN deg dg ON dg.src = e.src
+         |    GROUP BY e.dst) inc ON inc.node = nd.node)""".stripMargin
+    }
+    s"""deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
+       |nodes AS (SELECT DISTINCT src AS node FROM edges),
+       |n AS (SELECT COUNT(*) AS n FROM nodes),
+       |pr0 AS (SELECT node, $Scale // nn.n AS pr FROM nodes CROSS JOIN n nn),
+       |${steps.mkString(",\n")}""".stripMargin
+  }
+
   private def chain(): Unit = {
-    val naive = run(graft.graph.PageRank.oracleIterCtesNaive(10))
+    val naive = run(naiveIterCtes(10))
     val shipped = run(graft.graph.PageRank.oracleIterCtes(10))
     assert(naive.nonEmpty, "chain fixture produced no ranks")
     assert(shipped == naive,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.marketpulse.{DocumentMerge, Fixtures, Ingest, Staging}
+import graft.marketpulse.{Fetch, Fixtures, Pipeline}
 import graft.util.Scratch
 
 class StreamingSpec extends AnyFunSuite with SparkSpec {
@@ -214,24 +214,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("foreachBatch keyed upsert sink: staged overwrite, batch rows win") {
-    implicit val sqlCtx = spark.sqlContext
-    Scratch.withDir("graft-upsert-") { base =>
-      val target = s"$base/t"
-      val ms = MemoryStream[(String, Int)]
-      val q = UpsertSink.keyedUpsertStream(ms.toDS().toDF("k", "v"), Seq("k"), target)
-      try {
-        ms.addData(("a", 1), ("b", 2))
-        q.processAllAvailable()
-        ms.addData(("b", 20), ("c", 30))
-        q.processAllAvailable()
-      } finally q.stop()
-      val out = spark.read.parquet(target).collect()
-        .map(r => (r.getString(0), r.getInt(1))).sortBy(_._1)
-      assert(out.toSeq == Seq(("a", 1), ("b", 20), ("c", 30)))
-    }
-  }
-
   test("streaming session windows: update-mode replay equals batch sessionization") {
     implicit val sqlCtx = spark.sqlContext
     def t(s: String) = Timestamp.valueOf(s)
@@ -373,11 +355,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** Every landed document's bytes, by file name. */
+  private def storeBytes(store: String): Map[String, Seq[Byte]] =
+    new java.io.File(store).listFiles()
+      .filter(f => f.isFile && !f.getName.startsWith("."))
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
   test("continuous pipeline: streamed documents refresh the full model DAG") {
     implicit val sqlCtx = spark.sqlContext
     Scratch.withDir("graft-pipe-") { base =>
       val store = s"$base/raw"
       val ms = MemoryStream[String]
+      val persisted = spark.sparkContext.getPersistentRDDs.size
       val q = StreamingPipeline.run(ms.toDS().toDF("json"), store, prefix = "sp_test")
       try {
         ms.addData(Fixtures.aapl)
@@ -393,7 +382,46 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         assert(dim.keySet == Set("AAPL", "V"))
         assert(dim("V") == "Unknown Company") // quirks survive streaming too
         assert(spark.table("sp_test_weekly").count() > 0)
+        // a third batch restates a landed symbol
+        ms.addData(Fixtures.aapl)
+        q.processAllAvailable()
+        assert(spark.table("sp_test_stg").count() == 12)
       } finally q.stop()
+      // every micro-batch released the merged frame it landed
+      assert(spark.sparkContext.getPersistentRDDs.size == persisted)
+    }
+  }
+
+  test("continuous pipeline: compact refetch keeps older dates (U2)") {
+    implicit val sqlCtx = spark.sqlContext
+    Scratch.withDir("graft-pipe-u2-") { base =>
+      val store = s"$base/stream"
+      val ms = MemoryStream[String]
+      val q = StreamingPipeline.run(ms.toDS().toDF("json"), store, prefix = "u2_test")
+      try {
+        ms.addData(Fixtures.overlapOld)
+        q.processAllAvailable()
+        // a compact refetch: restates 10-02, adds 10-03, omits 10-01
+        ms.addData(Fixtures.overlapNew)
+        q.processAllAvailable()
+      } finally q.stop()
+      val streamed = spark.table("u2_test_stg").orderBy("trading_date").collect().toSeq
+      assert(streamed.map(_.get(1).toString) == Seq("2025-10-01", "2025-10-02", "2025-10-03"))
+      assert(streamed(1).getAs[Double]("open") == 99.0) // restated by the newer batch
+
+      // the same documents as two daily DAG cycles land the same store
+      // and the same models
+      val daily = s"$base/daily"
+      Pipeline.referenceDag(spark, Seq("GOOGL"),
+        new Fetch.StubFetcher(Map("GOOGL" -> Fixtures.overlapOld)), daily).raw.unpersist()
+      val run = Pipeline.referenceDag(spark, Seq("GOOGL"),
+        new Fetch.StubFetcher(Map("GOOGL" -> Fixtures.overlapNew)), daily)
+      try {
+        assert(streamed == run.staging.orderBy("trading_date").collect().toSeq)
+        assert(spark.table("u2_test_fact").collect().toSet == run.fact.collect().toSet)
+        assert(spark.table("u2_test_weekly").collect().toSet == run.weekly.collect().toSet)
+      } finally run.raw.unpersist()
+      assert(storeBytes(store) == storeBytes(daily))
     }
   }
 
@@ -418,33 +446,24 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(ids.toSeq == Seq(1L, 2L, 3L)) // each id exactly once
   }
 
-  test("partitioned store: unrelated micro-batch leaves other partitions byte-identical") {
+  test("unrelated micro-batch leaves other documents byte-identical") {
     implicit val sqlCtx = spark.sqlContext
     Scratch.withDir("graft-part-") { base =>
       val store = s"$base/raw"
       val ms = MemoryStream[String]
       val q = StreamingPipeline.run(ms.toDS().toDF("json"), store, prefix = "pp_test")
-
-      def partBytes(sym: String): Map[String, Seq[Byte]] = {
-        val dir = new java.io.File(s"$store/symbol=$sym")
-        dir.listFiles().filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-          .map(f => f.getName ->
-            java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
-      }
-
       try {
         ms.addData(Fixtures.aapl, Fixtures.v)
         q.processAllAvailable()
-        val aaplBefore = partBytes("AAPL")
-        val vBefore = partBytes("V")
-        assert(aaplBefore.nonEmpty && vBefore.nonEmpty)
+        val before = storeBytes(store)
+        assert(before.keySet == Set("AAPL.json", "V.json"))
 
-        // an unrelated symbol arrives: only its partition may change
+        // an unrelated symbol arrives: only its document is new
         ms.addData(Fixtures.overlapOld)
         q.processAllAvailable()
-        assert(partBytes("AAPL") == aaplBefore)
-        assert(partBytes("V") == vBefore)
-        assert(new java.io.File(s"$store/symbol=GOOGL").isDirectory)
+        val after = storeBytes(store)
+        assert(after.keySet == before.keySet + "GOOGL.json")
+        assert(after -- Seq("GOOGL.json") == before)
 
         // full views see the merged store; delta views only the batch's slice
         assert(spark.table("pp_test_dim").count() == 3)
@@ -460,67 +479,34 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     Scratch.withDir("graft-crash-") { base =>
       val store = s"$base/store"
       val checkpoint = s"$base/chk"
-      val ms = MemoryStream[(String, Int)]
-      @volatile var injected = false
-      // the torn state a real crash leaves: the partition WRITE succeeded,
-      // the checkpoint offset commit did not — recovery must replay the
-      // batch and the partitioned upsert must be idempotent under it
-      def start() = ms.toDS().toDF("symbol", "v").writeStream
+      val ms = MemoryStream[String]
+      @volatile var landedOnce = Map.empty[String, Seq[Byte]]
+      // the torn state a real crash leaves: the landing succeeded, the
+      // checkpoint offset commit did not — recovery replays the batch
+      // and lands it a second time
+      def start() = StreamingPipeline.parseDocStream(ms.toDS().toDF("json")).writeStream
         .option("checkpointLocation", checkpoint)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          UpsertSink.upsertPartitioned(batch, store)
-          if (id == 1L && !injected) {
-            injected = true
-            throw new RuntimeException("injected crash after write, before offset commit")
+          Pipeline.land(batch, store).raw.unpersist()
+          if (id == 1L && landedOnce.isEmpty) {
+            landedOnce = storeBytes(store)
+            throw new RuntimeException("injected crash after landing, before offset commit")
           }
         }.start()
 
       val q1 = start()
-      ms.addData(("a", 1), ("b", 2))
+      ms.addData(Fixtures.aapl, Fixtures.overlapOld)
       q1.processAllAvailable()
-      ms.addData(("b", 20), ("c", 30))
+      ms.addData(Fixtures.overlapNew, Fixtures.v)
       intercept[Exception] { q1.processAllAvailable(); q1.awaitTermination() }
       assert(q1.exception.isDefined, "expected the injected crash to kill the query")
-      assert(injected)
+      assert(landedOnce.keySet == Set("AAPL.json", "GOOGL.json", "V.json"))
 
       val q2 = start() // restart from the same checkpoint: batch 1 replays
-      try {
-        q2.processAllAvailable()
-        // new data after recovery flows normally
-        ms.addData(("a", 100))
-        q2.processAllAvailable()
-      } finally q2.stop()
-
-      val out = spark.read.parquet(store).collect()
-        .map(r => (r.getAs[String]("symbol"), r.getAs[Int]("v"))).sorted
-      assert(out.toSeq == Seq(("a", 100), ("b", 20), ("c", 30)),
-        "store must equal the batch-equivalent upsert result, each key exactly once")
+      try q2.processAllAvailable() finally q2.stop()
+      // landing the batch twice leaves the bytes of landing it once
+      assert(storeBytes(store) == landedOnce)
     }
-  }
-
-  test("stateful streaming U2 merge replay equals the batch merge") {
-    implicit val sqlCtx = spark.sqlContext
-    val oldV = Ingest.parseDocuments(spark, Seq(Fixtures.overlapOld))
-      .withColumn("load_date", to_timestamp(lit("2025-10-02 00:00:00")))
-    val newV = Ingest.parseDocuments(spark, Seq(Fixtures.overlapNew))
-      .withColumn("load_date", to_timestamp(lit("2025-10-03 00:00:00")))
-
-    val ms = MemoryStream[DocumentMergeStream.DocVersion]
-    ms.addData(DocumentMergeStream.toVersions(oldV).collect().toSeq)
-    ms.addData(DocumentMergeStream.toVersions(newV).collect().toSeq)
-    val merged = DocumentMergeStream.runToCompletion(ms.toDS())
-
-    val batchMerged = DocumentMerge.mergeIncremental(oldV.unionByName(newV))
-    val batchSeries = Staging.stgAlphavantage(batchMerged)
-      .orderBy("trading_date")
-      .collect().map(r => (r.get(1).toString, r.getAs[Double]("open"))).toSeq
-
-    val streamSeries = merged.selectExpr("explode(series) AS (d, bar)")
-      .orderBy("d")
-      .collect().map(r => (r.getString(0), r.getStruct(1).getString(0).toDouble)).toSeq
-    assert(streamSeries == batchSeries)
-    assert(streamSeries.map(_._1) == Seq("2025-10-01", "2025-10-02", "2025-10-03"))
-    assert(streamSeries(1)._2 == 99.0) // restated by the newer version
   }
 
   test("streaming incremental dedup probe: multi-batch arrival equals the batch probe") {
