@@ -47,11 +47,7 @@ object Dedup {
     * local mode must scale shuffle partitions with input size so the
     * build side stays bounded (SMJ spills gracefully; SHJ does not). */
   private def hintedAboveBroadcast(side: DataFrame, bandedRows: Long): DataFrame = {
-    val conf = side.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val threshold =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
-      catch { case _: Throwable => 10485760L }
+    val threshold = side.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     // (id, band, chunk) UnsafeRow: 8-byte null bitset + 3 × 8-byte slots
     val bandedBytes = bandedRows * 32L
     if (threshold <= 0 || bandedBytes > threshold) side.hint("shuffle_hash")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.reflect.runtime.universe.TypeTag
+
 /**
  * Multimodal columns for a training-data pipeline: media as opaque
  * `binary` payloads with typed metadata, and a decode/feature-extract
@@ -26,15 +28,7 @@ object Multimodal {
 
   val Kinds = Seq("image", "audio", "video")
 
-  /** Media table schema: id, kind, opaque payload, typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sample_rate_hz", IntegerType)))
-
+  /** Media table row: id, kind, opaque payload, typed metadata. */
   final case class MediaRow(media_id: Long, kind: String, payload: Array[Byte],
                             width: Int, height: Int, sample_rate_hz: Int)
 
@@ -97,64 +91,48 @@ object Multimodal {
     /** Feature layout for decoded audio: (0) sample rate Hz, (1) channel
       * count, (2) frame count, (3) peak |amplitude| in raw int16 units,
       * (4) mean |amplitude|, (5) RMS, (6) zero crossings; remaining slots
-      * hold a normalized |amplitude| histogram. Only PCM_SIGNED 16-bit
-      * (WAV/AIFF — what the JDK parses) decodes; anything else degrades
-      * to [[StubDecoder]], so a corrupt blob never fails the pipeline. */
+      * hold a normalized |amplitude| histogram. Only what [[pcm16]]
+      * accepts (16-bit signed PCM in either byte order) decodes;
+      * anything else degrades to [[StubDecoder]], so a corrupt blob
+      * never fails the pipeline. */
     private def decodeAudio(payload: Array[Byte], featureDim: Int): Decoded = {
-      val in =
-        try javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(payload))
-        catch {
-          case _: javax.sound.sampled.UnsupportedAudioFileException => null
-          case _: java.io.IOException                               => null
-        }
-      if (in == null) return StubDecoder.decode("audio", payload, featureDim)
-      try {
-        val fmt = in.getFormat
-        if (fmt.getSampleSizeInBits != 16 ||
-            fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED)
-          return StubDecoder.decode("audio", payload, featureDim)
-        val bytes = in.readAllBytes()
-        val channels = math.max(fmt.getChannels, 1)
-        val big = fmt.isBigEndian
-        val nSamples = bytes.length / 2
-        val nFrames = nSamples / channels
-        var peak = 0; var sumAbs = 0L; var sumSq = 0.0; var zc = 0; var prev = 0
-        val histBins = math.max(featureDim - 7, 0)
-        val hist = new Array[Long](math.max(histBins, 1))
-        var i = 0
-        while (i < nSamples) {
-          val b0 = bytes(2 * i); val b1 = bytes(2 * i + 1)
-          val v = if (big) (b0.toInt << 8) | (b1 & 0xff)
-                  else (b1.toInt << 8) | (b0 & 0xff)
-          val a = math.abs(v)
-          if (a > peak) peak = a
-          sumAbs += a
-          sumSq += v.toDouble * v
-          if (i > 0 && ((v ^ prev) < 0)) zc += 1
-          if (histBins > 0) hist(math.min(a * histBins / 32768, histBins - 1)) += 1
-          prev = v
-          i += 1
-        }
-        val features = new Array[Float](featureDim)
-        if (featureDim > 0) features(0) = fmt.getSampleRate
-        if (featureDim > 1) features(1) = channels.toFloat
-        if (featureDim > 2) features(2) = nFrames.toFloat
-        if (featureDim > 3) features(3) = peak.toFloat
-        if (featureDim > 4) features(4) =
-          if (nSamples > 0) (sumAbs.toDouble / nSamples).toFloat else 0f
-        if (featureDim > 5) features(5) =
-          if (nSamples > 0) math.sqrt(sumSq / nSamples).toFloat else 0f
-        if (featureDim > 6) features(6) = zc.toFloat
-        i = 0
-        while (i < histBins) {
-          features(7 + i) = if (nSamples > 0) hist(i).toFloat / nSamples else 0f
-          i += 1
-        }
-        Decoded(nFrames, 0, 0, features)
-      } catch {
-        case _: java.io.IOException => StubDecoder.decode("audio", payload, featureDim)
-      } finally in.close()
+      val pcm = pcm16(payload)
+      if (pcm.isEmpty) return StubDecoder.decode("audio", payload, featureDim)
+      val (fmt, samples) = pcm.get
+      val channels = math.max(fmt.getChannels, 1)
+      val nSamples = samples.length
+      val nFrames = nSamples / channels
+      var peak = 0; var sumAbs = 0L; var sumSq = 0.0; var zc = 0; var prev = 0
+      val histBins = math.max(featureDim - 7, 0)
+      val hist = new Array[Long](math.max(histBins, 1))
+      var i = 0
+      while (i < nSamples) {
+        val v = samples(i)
+        val a = math.abs(v)
+        if (a > peak) peak = a
+        sumAbs += a
+        sumSq += v.toDouble * v
+        if (i > 0 && ((v ^ prev) < 0)) zc += 1
+        if (histBins > 0) hist(math.min(a * histBins / 32768, histBins - 1)) += 1
+        prev = v
+        i += 1
+      }
+      val features = new Array[Float](featureDim)
+      if (featureDim > 0) features(0) = fmt.getSampleRate
+      if (featureDim > 1) features(1) = channels.toFloat
+      if (featureDim > 2) features(2) = nFrames.toFloat
+      if (featureDim > 3) features(3) = peak.toFloat
+      if (featureDim > 4) features(4) =
+        if (nSamples > 0) (sumAbs.toDouble / nSamples).toFloat else 0f
+      if (featureDim > 5) features(5) =
+        if (nSamples > 0) math.sqrt(sumSq / nSamples).toFloat else 0f
+      if (featureDim > 6) features(6) = zc.toFloat
+      i = 0
+      while (i < histBins) {
+        features(7 + i) = if (nSamples > 0) hist(i).toFloat / nSamples else 0f
+        i += 1
+      }
+      Decoded(nFrames, 0, 0, features)
     }
 
     /** Feature layout for decoded video: (0) frame count, (1) width,
@@ -241,6 +219,39 @@ object Multimodal {
       Decoded(1, w, h, features)
     }
   }
+
+  /** The one PCM decode: an audio payload's samples (channels
+    * interleaved) with its format, when `javax.sound.sampled` parses it
+    * as 16-bit signed PCM in either byte order (WAV is little-endian,
+    * AIFF big-endian). None for anything else — unparseable bytes,
+    * 8-bit, unsigned, float or compressed audio — so no caller ever
+    * reads another format's bytes as if they were int16 samples. */
+  private def pcm16(payload: Array[Byte])
+      : Option[(javax.sound.sampled.AudioFormat, Array[Int])] =
+    try {
+      val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(payload))
+      try {
+        val fmt = in.getFormat
+        if (fmt.getSampleSizeInBits != 16 ||
+            fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) None
+        else {
+          val bytes = in.readAllBytes()
+          val hiFirst = fmt.isBigEndian
+          val out = new Array[Int](bytes.length / 2)
+          var i = 0
+          while (i < out.length) {
+            val hi = if (hiFirst) 2 * i else 2 * i + 1
+            out(i) = (bytes(hi) << 8) | (bytes(hi ^ 1) & 0xff)
+            i += 1
+          }
+          Some((fmt, out))
+        }
+      } finally in.close()
+    } catch {
+      case _: javax.sound.sampled.UnsupportedAudioFileException => None
+      case _: java.io.IOException => None
+    }
 
   /** PNG-encode a frame through a memory-backed ImageOutputStream —
     * the encode-side twin of [[memoryIis]]: `ImageIO.write(img, fmt,
@@ -402,10 +413,15 @@ object Multimodal {
     * `id` — the fixture formula mm06's oracle recomputes. */
   def wavSampleCount(id: Long): Int = 256 + (id % 7).toInt * 64
 
+  /** Fixture geometry (width, height) of image row `id`, shared by the
+    * animated GIF of video row `id` — the dimension formulas mm04's
+    * oracle recomputes. */
+  def imageSize(id: Long): (Int, Int) = (8 + (id % 9).toInt, 8 + (id % 7).toInt)
+
   /**
    * Media table with REAL image and audio payloads: image-kind rows
-   * carry a genuine PNG (dimensions derived from the id — `8 + id % 9`
-   * × `8 + id % 7`), audio-kind rows a genuine WAV (sample count
+   * carry a genuine PNG (dimensions [[imageSize]]), audio-kind rows a
+   * genuine WAV (sample count
    * [[wavSampleCount]], 16 kHz mono, pinned peak) — so an independent
    * engine can predict what a correct decode must find. Video rows keep
    * UTF-8 stand-in payloads behind the declared stub boundary (the JDK
@@ -427,8 +443,7 @@ object Multimodal {
     docs.select("doc_id", "text").as[(Long, String)].map { case (id, text) =>
       Kinds((id % 3).toInt) match {
         case "image" =>
-          val w = 8 + (id % 9).toInt
-          val h = 8 + (id % 7).toInt
+          val (w, h) = imageSize(id)
           MediaRow(id, "image", renderPng(id, w, h), w, h, 0)
         case "audio" =>
           MediaRow(id, "audio", renderWav(id, wavSampleCount(id), 16000), 0, 0, 16000)
@@ -449,26 +464,42 @@ object Multimodal {
       lit(64).as("width"), lit(64).as("height"), lit(16000).as("sample_rate_hz"))
 
   /**
+   * The one decode pass every media kernel runs: the media table pruned
+   * to the six [[MediaRow]] columns, narrowed to `kind`'s rows (all
+   * kinds for None) by a Catalyst filter ahead of the deserializer, and
+   * `f` run once per partition. No exchange, persist or job of its own.
+   *
+   * `f` reaches `mapPartitions` as given, never wrapped: `MapPartitions`
+   * compares its function by reference, and the plan caches keyed on
+   * canonicalized plans (mm09's fingerprint base, the frame-hash frame
+   * behind [[videoNearDups]]) hit from one run to the next only because
+   * their kernels pass non-capturing lambdas — the same instance on
+   * every call. A closure created here per call would miss every time.
+   */
+  private[graft] def decodePass[U <: Product : TypeTag](media: DataFrame,
+      kind: Option[String])(f: Iterator[MediaRow] => Iterator[U]): Dataset[U] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    val rows = media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
+    kind.fold(rows)(k => rows.filter(col("kind") === k)).as[MediaRow].mapPartitions(f)
+  }
+
+  /**
    * Decode + feature-extract, one decoder per partition. The input is
    * pruned to the columns the decoder needs before the shuffle-free
    * partition pass; output is a narrow typed frame ready for the
    * similarity operators.
    */
   def extractFeatures(media: DataFrame, decoder: MediaDecoder,
-                      featureDim: Int = 16): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions { rows =>
-        // per-partition setup happens here (library handle, scratch buffers)
-        rows.map { r =>
-          val d = decoder.decode(r.kind, r.payload, featureDim)
-          MediaFeatures(r.media_id, r.kind, d.nFrames, r.payload.length,
-            d.width, d.height, d.features)
-        }
+                      featureDim: Int = 16): Dataset[MediaFeatures] =
+    decodePass(media, None) { rows =>
+      // per-partition setup happens here (library handle, scratch buffers)
+      rows.map { r =>
+        val d = decoder.decode(r.kind, r.payload, featureDim)
+        MediaFeatures(r.media_id, r.kind, d.nFrames, r.payload.length,
+          d.width, d.height, d.features)
       }
-  }
+    }
 
   /**
    * REAL image resize (JDK `Graphics2D`, bilinear): decode the payload,
@@ -494,18 +525,12 @@ object Multimodal {
   /** The resize stage over a media table: image payloads re-encoded at
     * `w`×`h` (declared metadata updated to match), other kinds pass
     * through. */
-  def resizeMedia(media: DataFrame, w: Int, h: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions(_.map { r =>
-        if (r.kind == "image")
-          r.copy(payload = resizeImage(r.payload, w, h), width = w, height = h)
-        else r
-      })
-      .toDF()
-  }
+  def resizeMedia(media: DataFrame, w: Int, h: Int): DataFrame =
+    decodePass(media, None)(_.map { r =>
+      if (r.kind == "image")
+        r.copy(payload = resizeImage(r.payload, w, h), width = w, height = h)
+      else r
+    }).toDF()
 
   /** Frame sampling as pure metadata math (every `stride`-th frame). */
   def sampleFrameCount(features: DataFrame, stride: Int): DataFrame =
@@ -888,8 +913,7 @@ object Multimodal {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select("doc_id").as[Long].filter(_ % 3 == 2).map { id =>
-      val w = 8 + (id % 9).toInt
-      val h = 8 + (id % 7).toInt
+      val (w, h) = imageSize(id)
       MediaRow(id, "video", renderGif(id, w, h, gifFrameCount(id)), w, h, 0)
     }.toDF()
   }
@@ -906,36 +930,27 @@ object Multimodal {
    * or a Hamming band join over `frame_hash` both run on rows of ~24
    * bytes, regardless of video size.
    */
-  def videoFrameHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.kind != "video") Iterator.empty
+  def videoFrameHashes(media: DataFrame): DataFrame =
+    decodePass(media, Some("video"))(_.flatMap { r =>
+      val iis = memoryIis(r.payload)
+      try {
+        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) Iterator.empty
         else {
-          val iis = memoryIis(r.payload)
+          val reader = readers.next()
+          reader.setInput(iis)
           try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) Iterator.empty
-            else {
-              val reader = readers.next()
-              reader.setInput(iis)
-              try {
-                val n = reader.getNumImages(true)
-                (0 until n).flatMap { f =>
-                  Option(averageHash64(reader.read(f)))
-                    .map(hash => (r.media_id, f, n, hash.longValue()))
-                }.iterator
-              } finally reader.dispose()
-            }
-          } catch {
-            case _: java.io.IOException => Iterator.empty
-          } finally iis.close()
+            val n = reader.getNumImages(true)
+            (0 until n).flatMap { f =>
+              Option(averageHash64(reader.read(f)))
+                .map(hash => (r.media_id, f, n, hash.longValue()))
+            }.iterator
+          } finally reader.dispose()
         }
-      })
-      .toDF("media_id", "frame_idx", "n_frames", "frame_hash")
-  }
+      } catch {
+        case _: java.io.IOException => Iterator.empty
+      } finally iis.close()
+    }).toDF("media_id", "frame_idx", "n_frames", "frame_hash")
 
   /** Offset separating trimmed-variant media ids from their base ids —
     * far above any fixture doc_id, so `variant - TrimVariantOffset`
@@ -951,18 +966,20 @@ object Multimodal {
     import spark.implicits._
     // same gated spread as mediaWithRealImages: the GIF render below
     // is the priciest per-row pass in the engine and a single-file
-    // fixture scan serialized it on one core
+    // fixture scan serialized it on one core. mapPartitions, not
+    // Dataset.flatMap: flatMap wraps its function in a fresh closure
+    // per call, so the plan would never match itself and the
+    // frame-hash cache below would miss on every warm mm15/mm20 run
     graft.util.Spread.toCores(docs.select("doc_id"), col("doc_id"))
-      .as[Long].filter(_ % 3 == 2).flatMap { id =>
-      val w = 8 + (id % 9).toInt
-      val h = 8 + (id % 7).toInt
-      val n = gifFrameCount(id)
-      val base = MediaRow(id, "video", renderGif(id, w, h, n), w, h, 0)
-      if (id % 6 == 5)
-        Seq(base, MediaRow(id + TrimVariantOffset, "video",
-          renderGif(id, w, h, n, 1), w, h, 0))
-      else Seq(base)
-    }.toDF()
+      .as[Long].filter(_ % 3 == 2).mapPartitions(_.flatMap { id =>
+        val (w, h) = imageSize(id)
+        val n = gifFrameCount(id)
+        val base = MediaRow(id, "video", renderGif(id, w, h, n), w, h, 0)
+        if (id % 6 == 5)
+          Seq(base, MediaRow(id + TrimVariantOffset, "video",
+            renderGif(id, w, h, n, 1), w, h, 0))
+        else Seq(base)
+      }).toDF()
   }
 
   // decode-once guard for the near-dup plan: the frame-hash projection
@@ -1031,60 +1048,37 @@ object Multimodal {
 
   /**
    * Per-frame energy profile of a media table's audio rows: the
-   * decoded 16-bit PCM stream cut into fixed `frameSize`-sample frames
+   * decoded PCM stream cut into fixed `frameSize`-sample frames
    * (last frame partial), each summarized as (n_samples, energy =
    * Σ sample², peak = max |sample|) — the windowed feature pass VAD /
    * silence-trim / loudness normalization start from. One
    * per-partition decode pass ([[videoFrameHashes]]' shape for audio):
-   * the WAV parses once per payload, and only ~32-byte frame rows
+   * the payload parses once, and only ~32-byte frame rows
    * leave the partition — payloads never shuffle, so a downstream
    * silence filter or loudness join runs on frame metadata regardless
    * of audio length. Integer arithmetic throughout (energy ≤
    * frameSize · 32767² ≈ 1.4e11 ≪ Long.MaxValue): no float fold
    * order to make results partitioning-dependent, which is what lets
-   * an independent engine reproduce every cell. Undecodable payloads
-   * and non-audio kinds drop.
+   * an independent engine reproduce every cell. Audio contract
+   * ([[pcm16]]): 16-bit signed PCM in either byte order (WAV, AIFF);
+   * payloads in any other format or undecodable, and non-audio kinds,
+   * drop.
    */
   def audioFrameEnergies(media: DataFrame, frameSize: Int): DataFrame = {
     require(frameSize > 0, "frameSize must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.kind != "audio") Iterator.empty
-        else {
-          val samples =
-            try {
-              val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(r.payload))
-              try {
-                val bytes = in.readAllBytes()
-                val out = new Array[Int](bytes.length / 2)
-                var i = 0
-                while (i < out.length) { // 16-bit little-endian signed PCM
-                  out(i) = ((bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff))
-                  i += 1
-                }
-                out
-              } finally in.close()
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException => null
-              case _: java.io.IOException => null
-            }
-          if (samples == null) Iterator.empty
-          else samples.grouped(frameSize).zipWithIndex.map { case (frame, idx) =>
-            var energy = 0L
-            var peak = 0
-            frame.foreach { v =>
-              energy += v.toLong * v
-              if (math.abs(v) > peak) peak = math.abs(v)
-            }
-            (r.media_id, idx, frame.length, energy, peak)
+    decodePass(media, Some("audio"))(_.flatMap { r =>
+      pcm16(r.payload).iterator.flatMap { case (_, samples) =>
+        samples.grouped(frameSize).zipWithIndex.map { case (frame, idx) =>
+          var energy = 0L
+          var peak = 0
+          frame.foreach { v =>
+            energy += v.toLong * v
+            if (math.abs(v) > peak) peak = math.abs(v)
           }
+          (r.media_id, idx, frame.length, energy, peak)
         }
-      })
-      .toDF("media_id", "frame_idx", "n_samples", "energy", "peak")
+      }
+    }).toDF("media_id", "frame_idx", "n_samples", "energy", "peak")
   }
 
   /**
@@ -1121,7 +1115,7 @@ object Multimodal {
 
   /**
    * Dominant periodicity of each audio row by INTEGER autocorrelation:
-   * R(L) = Σ x[i]·x[i+L] over the decoded 16-bit PCM for every lag in
+   * R(L) = Σ x[i]·x[i+L] over the decoded PCM for every lag in
    * [minLag, maxLag], reporting the argmax lag (ties → the smaller
    * lag), its raw correlation and the zero-lag energy R(0) — the
    * pitch/periodicity feature an audio-curation pass thresholds on
@@ -1132,65 +1126,39 @@ object Multimodal {
    * reproducible by an independent engine from the sample values
    * alone — no FFT, no floats, no fold-order caveats. One decode per
    * payload per partition, lag sweep in a tight local loop; only the
-   * ~40-byte feature row leaves the partition. Undecodable rows and
-   * non-audio kinds drop.
+   * ~40-byte feature row leaves the partition. Audio contract as in
+   * [[audioFrameEnergies]]: 16-bit signed PCM in either byte order;
+   * other formats, undecodable rows and non-audio kinds drop.
    */
   def audioPeriodicity(media: DataFrame, minLag: Int, maxLag: Int): DataFrame = {
     require(0 < minLag && minLag <= maxLag, "need 0 < minLag <= maxLag")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.kind != "audio") Iterator.empty
-        else {
-          val samples =
-            try {
-              val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(r.payload))
-              try {
-                val bytes = in.readAllBytes()
-                val out = new Array[Int](bytes.length / 2)
-                var i = 0
-                while (i < out.length) { // 16-bit little-endian signed PCM
-                  out(i) = ((bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff))
-                  i += 1
-                }
-                out
-              } finally in.close()
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException => null
-              case _: java.io.IOException => null
-            }
-          if (samples == null) Iterator.empty
-          else {
-            val n = samples.length
-            var r0 = 0L
-            var i = 0
-            while (i < n) { r0 += samples(i).toLong * samples(i); i += 1 }
-            var bestLag = minLag
-            var bestR = Long.MinValue
-            var lag = minLag
-            while (lag <= maxLag) {
-              var acc = 0L
-              var j = 0
-              while (j + lag < n) {
-                acc += samples(j).toLong * samples(j + lag)
-                j += 1
-              }
-              if (acc > bestR) { bestR = acc; bestLag = lag }
-              lag += 1
-            }
-            Iterator.single((r.media_id, n, r0, bestLag, bestR))
+    decodePass(media, Some("audio"))(_.flatMap { r =>
+      pcm16(r.payload).map { case (_, samples) =>
+        val n = samples.length
+        var r0 = 0L
+        var i = 0
+        while (i < n) { r0 += samples(i).toLong * samples(i); i += 1 }
+        var bestLag = minLag
+        var bestR = Long.MinValue
+        var lag = minLag
+        while (lag <= maxLag) {
+          var acc = 0L
+          var j = 0
+          while (j + lag < n) {
+            acc += samples(j).toLong * samples(j + lag)
+            j += 1
           }
+          if (acc > bestR) { bestR = acc; bestLag = lag }
+          lag += 1
         }
-      })
-      .toDF("media_id", "n_samples", "r0", "best_lag", "best_r")
+        (r.media_id, n, r0, bestLag, bestR)
+      }
+    }).toDF("media_id", "n_samples", "r0", "best_lag", "best_r")
   }
 
   /**
    * Clipping profile of a media table's audio rows: per audio payload,
-   * how many decoded 16-bit PCM samples sit at or beyond ±`threshold`
+   * how many decoded PCM samples sit at or beyond ±`threshold`
    * (`n_clipped`), the LONGEST consecutive clipped run (`max_run` —
    * the distortion signature: noise grazes the rail for 1–2 samples,
    * true clipping flat-tops for many), and the number of distinct
@@ -1200,56 +1168,31 @@ object Multimodal {
    * samples, and only the ~40-byte stats row leaves the partition —
    * payloads never shuffle. All-integer output: reproducible
    * cell-exact by an independent engine from the sample values alone.
-   * Undecodable rows and non-audio kinds drop.
+   * Audio contract as in [[audioFrameEnergies]]: 16-bit signed PCM in
+   * either byte order; other formats, undecodable rows and non-audio
+   * kinds drop.
    */
   def audioClipping(media: DataFrame, threshold: Int): DataFrame = {
     require(threshold > 0, "threshold must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.kind != "audio") Iterator.empty
-        else {
-          val samples =
-            try {
-              val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(r.payload))
-              try {
-                val bytes = in.readAllBytes()
-                val out = new Array[Int](bytes.length / 2)
-                var i = 0
-                while (i < out.length) { // 16-bit little-endian signed PCM
-                  out(i) = ((bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff))
-                  i += 1
-                }
-                out
-              } finally in.close()
-            } catch {
-              case _: javax.sound.sampled.UnsupportedAudioFileException => null
-              case _: java.io.IOException => null
-            }
-          if (samples == null) Iterator.empty
-          else {
-            var nClipped = 0L
-            var maxRun = 0L
-            var nRuns = 0L
-            var run = 0L
-            var i = 0
-            while (i < samples.length) {
-              if (math.abs(samples(i)) >= threshold) {
-                run += 1
-                if (run == 1) nRuns += 1
-                if (run > maxRun) maxRun = run
-                nClipped += 1
-              } else run = 0
-              i += 1
-            }
-            Iterator.single((r.media_id, samples.length, nClipped, maxRun, nRuns))
-          }
+    decodePass(media, Some("audio"))(_.flatMap { r =>
+      pcm16(r.payload).map { case (_, samples) =>
+        var nClipped = 0L
+        var maxRun = 0L
+        var nRuns = 0L
+        var run = 0L
+        var i = 0
+        while (i < samples.length) {
+          if (math.abs(samples(i)) >= threshold) {
+            run += 1
+            if (run == 1) nRuns += 1
+            if (run > maxRun) maxRun = run
+            nClipped += 1
+          } else run = 0
+          i += 1
         }
-      })
-      .toDF("media_id", "n_samples", "n_clipped", "max_run", "n_runs")
+        (r.media_id, samples.length, nClipped, maxRun, nRuns)
+      }
+    }).toDF("media_id", "n_samples", "n_clipped", "max_run", "n_runs")
   }
 
   /**
@@ -1263,50 +1206,32 @@ object Multimodal {
    * under 2⁶³ until w·h ≈ 3.6e16 pixels — declared bound, far past any
    * real image. Undecodable rows drop.
    */
-  def channelStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.kind != "image") None
-        else {
-          val img = decodeImage(r.payload)
-          if (img == null) None
-          else {
-            var (sr, sg, sb) = (0L, 0L, 0L)
-            val w = img.getWidth
-            rgbRows(img) { (_, row) =>
-              var x = 0
-              while (x < w) {
-                val v = row(x)
-                sr += (v >> 16) & 0xff; sg += (v >> 8) & 0xff; sb += v & 0xff
-                x += 1
-              }
-            }
-            Some((r.media_id, w, img.getHeight, sr, sg, sb))
+  def channelStats(media: DataFrame): DataFrame =
+    decodePass(media, Some("image"))(_.flatMap { r =>
+      Option(decodeImage(r.payload)).map { img =>
+        var (sr, sg, sb) = (0L, 0L, 0L)
+        val w = img.getWidth
+        rgbRows(img) { (_, row) =>
+          var x = 0
+          while (x < w) {
+            val v = row(x)
+            sr += (v >> 16) & 0xff; sg += (v >> 8) & 0xff; sb += v & 0xff
+            x += 1
           }
         }
-      })
-      .toDF("media_id", "width", "height", "sum_r", "sum_g", "sum_b")
-  }
+        (r.media_id, w, img.getHeight, sr, sg, sb)
+      }
+    }).toDF("media_id", "width", "height", "sum_r", "sum_g", "sum_b")
 
   /** Perceptual fingerprints of a media table's image rows: (id,
     * ahash), decoded per-partition like [[extractFeatures]]. Only this
     * narrow frame flows downstream — payloads never reach a shuffle,
     * which is what makes banded image dedup viable at billions of
     * images. Undecodable rows drop (they can't near-dup anything). */
-  def imageHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload", "width", "height", "sample_rate_hz")
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.kind != "image") None
-        else Option(averageHash64(r.payload)).map(h => (r.media_id, h.longValue()))
-      })
-      .toDF("id", "ahash")
-  }
+  def imageHashes(media: DataFrame): DataFrame =
+    decodePass(media, Some("image"))(_.flatMap { r =>
+      Option(averageHash64(r.payload)).map(h => (r.media_id, h.longValue()))
+    }).toDF("id", "ahash")
 
   /**
    * Scale-invariant CONTENT embedding of an [[ImageIoDecoder]] feature

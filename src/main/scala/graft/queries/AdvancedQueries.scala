@@ -1003,32 +1003,6 @@ object AdvancedQueries {
       .select(col("node").as("partkey"), col("n_tri"), col("rank"))
   }
 
-  /** The TEXTBOOK a<b<c oracle q45 shipped with through r16 — kept as
-    * the chain anchor: TriangleOracleChainSpec proves the oriented
-    * oracle below equal to this one on randomized graphs and the hub
-    * pathology, and TrianglesSpec separately chains the ENGINE to a
-    * naive local scan. Retired from the gate itself because its wedge
-    * join goes through raw-degree hubs (47 s in DuckDB at sf0.1,
-    * unaffordable at 10x), which kept q45 excluded above sf0.01. */
-  private[queries] val q45NaiveOracle =
-    """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      |pairs AS (SELECT a.p AS pa, b.p AS pb
-      |          FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p),
-      |edges AS (SELECT pa, pb FROM pairs GROUP BY 1, 2),
-      |tri AS (SELECT e1.pa AS a, e1.pb AS b, e2.pb AS c
-      |        FROM edges e1
-      |        JOIN edges e2 ON e2.pa = e1.pb
-      |        JOIN edges e3 ON e3.pa = e1.pa AND e3.pb = e2.pb),
-      |nodes AS (SELECT a AS node FROM tri
-      |          UNION ALL SELECT b FROM tri
-      |          UNION ALL SELECT c FROM tri),
-      |cnt AS (SELECT node, COUNT(*) AS n_tri FROM nodes GROUP BY 1)
-      |SELECT partkey, n_tri, rank FROM (
-      |  SELECT node AS partkey, n_tri,
-      |    ROW_NUMBER() OVER (ORDER BY n_tri DESC, node) AS rank
-      |  FROM cnt) z
-      |WHERE rank <= 20""".stripMargin
-
   /** r17: the gate oracle is the DEGREE-ORIENTED wedge join — the same
     * O(m^1.5) bound the engine's plan carries, derived independently in
     * SQL: orient every edge from its (degree, id)-smaller endpoint, so

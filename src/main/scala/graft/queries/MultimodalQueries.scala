@@ -45,6 +45,36 @@ object MultimodalQueries {
       Multimodal.mediaFromDocuments(Tables.documents(spark, dir)),
       Multimodal.StubDecoder)
 
+  /** The fixture's doc ids of one media kind (doc_id % 3 indexes
+    * [[Multimodal.Kinds]]), in scan order, for the oracle generators. */
+  private def kindIds(spark: SparkSession, dir: String, kind: String): Seq[Long] =
+    Tables.documents(spark, dir)
+      .select(col("doc_id")).filter(col("doc_id") % 3 === Multimodal.Kinds.indexOf(kind))
+      .collect().map(_.getLong(0)).toSeq
+
+  /** Fixture PNG of image row `id`, re-rendered for an oracle generator. */
+  private def fixturePng(id: Long): Array[Byte] = {
+    val (w, h) = Multimodal.imageSize(id)
+    Multimodal.renderPng(id, w, h)
+  }
+
+  /** Formula-predicted frame hashes of every fixture video, as
+    * (media_id, frame_idx, n_frames, frame_hash) in scan order — the
+    * relation mm11, mm15, mm18, mm19 and mm20's oracles embed. With
+    * `withTrims`, each trimmed video's rows follow its base: frames
+    * 1 until n under id + [[Multimodal.TrimVariantOffset]]
+    * ([[Multimodal.mediaWithTrimmedVideos]]'s population). */
+  private def referenceFrameRows(spark: SparkSession, dir: String,
+                                 withTrims: Boolean): Seq[(Long, Int, Int, Long)] =
+    kindIds(spark, dir, "video").flatMap { id =>
+      val (w, h) = Multimodal.imageSize(id)
+      val n = Multimodal.gifFrameCount(id)
+      def frames(mediaId: Long, from: Int) = (from until n).flatMap(f =>
+        ReferenceHashes.gifFrameHash64(id, w, h, f).map(hash => (mediaId, f, n - from, hash)))
+      frames(id, 0) ++
+        (if (withTrims && id % 6 == 5) frames(id + Multimodal.TrimVariantOffset, 1) else Nil)
+    }
+
   // ---- mm01: per-kind media statistics, ORACLE-GATED. n_media /
   //      total_frames / total_bytes are exact functions of the fixture
   //      (audio frames = wavSampleCount, audio bytes = 44-byte
@@ -109,8 +139,9 @@ object MultimodalQueries {
         // at 16 kHz; "video" payloads are the document's UTF-8 text,
         // which no codec parses, so they take the degraded path
         (id % 3) match {
-          case 0L => (id, "image", ReferenceHashes.pngFormulaFeatures(
-            id, 8 + (id % 9).toInt, 8 + (id % 7).toInt, 16))
+          case 0L =>
+            val (w, h) = Multimodal.imageSize(id)
+            (id, "image", ReferenceHashes.pngFormulaFeatures(id, w, h, 16))
           case 1L => (id, "audio",
             ReferenceHashes.wavFormulaFeatures(id, 16000, 16))
           case _ => (id, "video", ReferenceHashes.rollingHashFeatures(
@@ -151,11 +182,7 @@ object MultimodalQueries {
     // each deterministic fixture PNG (seed = id, dims = id-derived) and
     // sum the encoded lengths — touches the renderer only, never the
     // pipeline's decode path
-    val imageBytes = Tables.documents(spark, dir)
-      .select(col("doc_id")).where(col("doc_id") % 3 === 0)
-      .collect().map(_.getLong(0))
-      .map(id => Multimodal.renderPng(id, 8 + (id % 9).toInt, 8 + (id % 7).toInt).length.toLong)
-      .sum
+    val imageBytes = kindIds(spark, dir, "image").map(fixturePng(_).length.toLong).sum
     s"""SELECT 'image' AS kind, CAST(COUNT(*) AS BIGINT) AS n_media,
        |  CAST(COUNT(*) AS BIGINT) AS total_frames,
        |  CAST($imageBytes AS BIGINT) AS total_bytes
@@ -373,18 +400,11 @@ object MultimodalQueries {
     // re-render the corpus. Same rows out: (2k, payload) ∪
     // (2k+1, shifted(payload)) — the oracle gate re-proves identity.
     val media = Multimodal.mediaWithRealImages(
-        Tables.documents(spark, dir).filter(col("doc_id") % 3 === 0))
-      .filter(col("kind") === "image")
-    val spark2 = spark
-    import spark2.implicits._
-    val both = media.select("media_id", "kind", "payload", "width", "height",
-        "sample_rate_hz")
-      .as[Multimodal.MediaRow]
-      .mapPartitions(_.flatMap(r => Iterator(
-        r.copy(media_id = r.media_id * 2),
-        r.copy(media_id = r.media_id * 2 + 1,
-          payload = Multimodal.shiftBrightness(r.payload, 16)))))
-      .toDF()
+      Tables.documents(spark, dir).filter(col("doc_id") % 3 === 0))
+    val both = Multimodal.decodePass(media, Some("image"))(_.flatMap(r => Iterator(
+      r.copy(media_id = r.media_id * 2),
+      r.copy(media_id = r.media_id * 2 + 1,
+        payload = Multimodal.shiftBrightness(r.payload, 16))))).toDF()
     Dedup.hammingNearDupsAuto(
       // count-adaptive banding, not the fixed 8-band scheme: with
       // maxHamming = 6 the 8-band slack allows only grouped PAIRS over
@@ -405,15 +425,12 @@ object MultimodalQueries {
     * payloads, as a VALUES body (both the 2k originals and the 2k+1
     * exposure-shifted copies). */
   private def referenceAHashValues(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 0)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        val png = Multimodal.renderPng(id, 8 + (id % 9).toInt, 8 + (id % 7).toInt)
-        Seq(ReferenceHashes.averageHash64(png).map(h => s"(${id * 2}, $h)"),
-          ReferenceHashes.averageHash64(png, delta = 16)
-            .map(h => s"(${id * 2 + 1}, $h)")).flatten
-      }.mkString(", ")
+    val rows = kindIds(spark, dir, "image").flatMap { id =>
+      val png = fixturePng(id)
+      Seq(ReferenceHashes.averageHash64(png).map(h => s"(${id * 2}, $h)"),
+        ReferenceHashes.averageHash64(png, delta = 16)
+          .map(h => s"(${id * 2 + 1}, $h)")).flatten
+    }.mkString(", ")
     OracleSql.valuesOrEmpty(rows, "(CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))")
   }
 
@@ -421,13 +438,9 @@ object MultimodalQueries {
     * per id by the independent reference implementation (originals
     * only — no exposure-shifted copies in the ingest stream). */
   private[queries] def st09OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 0)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        val png = Multimodal.renderPng(id, 8 + (id % 9).toInt, 8 + (id % 7).toInt)
-        ReferenceHashes.averageHash64(png).map(h => s"($id, $h)")
-      }.mkString(", ")
+    val rows = kindIds(spark, dir, "image").flatMap { id =>
+      ReferenceHashes.averageHash64(fixturePng(id)).map(h => s"($id, $h)")
+    }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))")
     s"""WITH ah(id, h) AS ($vals)
@@ -487,17 +500,8 @@ object MultimodalQueries {
       Multimodal.mediaWithRealVideos(Tables.documents(spark, dir)))
 
   private def mm11OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 2)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        val w = 8 + (id % 9).toInt
-        val h = 8 + (id % 7).toInt
-        val n = Multimodal.gifFrameCount(id)
-        (0 until n).flatMap(f =>
-          ReferenceHashes.gifFrameHash64(id, w, h, f)
-            .map(hash => s"($id, $f, $n, $hash)"))
-      }.mkString(", ")
+    val rows = referenceFrameRows(spark, dir, withTrims = false)
+      .map { case (id, f, n, hash) => s"($id, $f, $n, $hash)" }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS INT), CAST(NULL AS BIGINT))")
     s"""WITH fh(media_id, frame_idx, n_frames, frame_hash) AS ($vals)
@@ -522,18 +526,22 @@ object MultimodalQueries {
       Multimodal.mediaWithRealImages(Tables.documents(spark, dir)),
       frameSize = Mm12FrameSize)
 
-  private def mm12OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 1)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        ReferenceHashes.wavFrameStats(id, Mm12FrameSize).map {
-          case (idx, n, energy, peak) => s"($id, $idx, $n, $energy, $peak)"
-        }
-      }.mkString(", ")
-    val vals = OracleSql.valuesOrEmpty(rows,
+  /** mm12/mm13's oracle relation: per-frame (media_id, frame_idx,
+    * n_samples, energy, peak) of every fixture WAV, predicted from the
+    * sample formula, as a VALUES body. */
+  private def referenceAudioFrameValues(spark: SparkSession, dir: String): String = {
+    val rows = kindIds(spark, dir, "audio").flatMap { id =>
+      ReferenceHashes.wavFrameStats(id, Mm12FrameSize).map {
+        case (idx, n, energy, peak) => s"($id, $idx, $n, $energy, $peak)"
+      }
+    }.mkString(", ")
+    OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS INT), " +
         "CAST(NULL AS BIGINT), CAST(NULL AS INT))")
+  }
+
+  private def mm12OracleGen(spark: SparkSession, dir: String): String = {
+    val vals = referenceAudioFrameValues(spark, dir)
     s"""WITH ref(media_id, frame_idx, n_samples, energy, peak) AS ($vals),
        |spine AS (
        |  SELECT doc_id AS media_id,
@@ -566,15 +574,11 @@ object MultimodalQueries {
           (col("width") * col("height") * lit(3)).cast("double"))
 
   private def mm14OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 0)
-      .collect().map { r =>
-        val id = r.getLong(0)
-        val w = 8 + (id % 9).toInt
-        val h = 8 + (id % 7).toInt
-        val (sr, sg, sb) = ReferenceHashes.pngChannelSums(id, w, h)
-        s"($id, $w, $h, $sr, $sg, $sb)"
-      }.mkString(", ")
+    val rows = kindIds(spark, dir, "image").map { id =>
+      val (w, h) = Multimodal.imageSize(id)
+      val (sr, sg, sb) = ReferenceHashes.pngChannelSums(id, w, h)
+      s"($id, $w, $h, $sr, $sg, $sb)"
+    }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS INT), " +
         "CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))")
@@ -608,17 +612,7 @@ object MultimodalQueries {
       threshold = Mm13Threshold)
 
   private def mm13OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 1)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        ReferenceHashes.wavFrameStats(id, Mm12FrameSize).map {
-          case (idx, n, energy, peak) => s"($id, $idx, $n, $energy, $peak)"
-        }
-      }.mkString(", ")
-    val vals = OracleSql.valuesOrEmpty(rows,
-      "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS INT), " +
-        "CAST(NULL AS BIGINT), CAST(NULL AS INT))")
+    val vals = referenceAudioFrameValues(spark, dir)
     s"""WITH ref(media_id, frame_idx, n_samples, energy, peak) AS ($vals),
        |act AS (
        |  SELECT * FROM ref
@@ -659,24 +653,8 @@ object MultimodalQueries {
       minJaccard = 0.5)
 
   private def mm15OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 2)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        val w = 8 + (id % 9).toInt
-        val h = 8 + (id % 7).toInt
-        val n = Multimodal.gifFrameCount(id)
-        val base = (0 until n).flatMap(f =>
-          ReferenceHashes.gifFrameHash64(id, w, h, f)
-            .map(hash => s"($id, $hash)"))
-        val variant =
-          if (id % 6 == 5)
-            (1 until n).flatMap(f =>
-              ReferenceHashes.gifFrameHash64(id, w, h, f)
-                .map(hash => s"(${id + Multimodal.TrimVariantOffset}, $hash)"))
-          else Seq.empty
-        base ++ variant
-      }.mkString(", ")
+    val rows = referenceFrameRows(spark, dir, withTrims = true)
+      .map { case (id, _, _, hash) => s"($id, $hash)" }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))")
     s"""WITH fh(media_id, frame_hash) AS ($vals),
@@ -716,14 +694,10 @@ object MultimodalQueries {
           col("r0").cast(org.apache.spark.sql.types.DoubleType))
 
   private def mm16OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 1)
-      .collect().map { r =>
-        val id = r.getLong(0)
-        val (n, r0, lag, best) =
-          ReferenceHashes.wavAutocorr(id, Mm16MinLag, Mm16MaxLag)
-        s"($id, $n, $r0, $lag, $best)"
-      }.mkString(", ")
+    val rows = kindIds(spark, dir, "audio").map { id =>
+      val (n, r0, lag, best) = ReferenceHashes.wavAutocorr(id, Mm16MinLag, Mm16MaxLag)
+      s"($id, $n, $r0, $lag, $best)"
+    }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS BIGINT), " +
         "CAST(NULL AS INT), CAST(NULL AS BIGINT))")
@@ -752,14 +726,10 @@ object MultimodalQueries {
         col("n_clipped").cast("double") / col("n_samples").cast("double"))
 
   private def mm17OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 1)
-      .collect().map { r =>
-        val id = r.getLong(0)
-        val (n, nClipped, maxRun, nRuns) =
-          ReferenceHashes.wavClipStats(id, Mm17Threshold)
-        s"($id, $n, $nClipped, $maxRun, $nRuns)"
-      }.mkString(", ")
+    val rows = kindIds(spark, dir, "audio").map { id =>
+      val (n, nClipped, maxRun, nRuns) = ReferenceHashes.wavClipStats(id, Mm17Threshold)
+      s"($id, $n, $nClipped, $maxRun, $nRuns)"
+    }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS BIGINT), " +
         "CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))")
@@ -805,16 +775,8 @@ object MultimodalQueries {
   }
 
   private def mm18OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 2)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        val w = 8 + (id % 9).toInt
-        val h = 8 + (id % 7).toInt
-        (0 until Multimodal.gifFrameCount(id)).flatMap(f =>
-          ReferenceHashes.gifFrameHash64(id, w, h, f)
-            .map(hash => s"($id, $f, $hash)"))
-      }.mkString(", ")
+    val rows = referenceFrameRows(spark, dir, withTrims = false)
+      .map { case (id, f, _, hash) => s"($id, $f, $hash)" }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS BIGINT))")
     s"""WITH fh(media_id, frame_idx, frame_hash) AS ($vals),
@@ -866,16 +828,8 @@ object MultimodalQueries {
   }
 
   private def mm19OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 2)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        val w = 8 + (id % 9).toInt
-        val h = 8 + (id % 7).toInt
-        (0 until Multimodal.gifFrameCount(id)).flatMap(f =>
-          ReferenceHashes.gifFrameHash64(id, w, h, f)
-            .map(hash => s"($id, $f, $hash)"))
-      }.mkString(", ")
+    val rows = referenceFrameRows(spark, dir, withTrims = false)
+      .map { case (id, f, _, hash) => s"($id, $f, $hash)" }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS INT), CAST(NULL AS BIGINT))")
     s"""WITH fh(media_id, frame_idx, frame_hash) AS ($vals),
@@ -914,24 +868,8 @@ object MultimodalQueries {
       minContainment = 0.9)
 
   private def mm20OracleGen(spark: SparkSession, dir: String): String = {
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id")).filter(col("doc_id") % 3 === 2)
-      .collect().flatMap { r =>
-        val id = r.getLong(0)
-        val w = 8 + (id % 9).toInt
-        val h = 8 + (id % 7).toInt
-        val n = Multimodal.gifFrameCount(id)
-        val base = (0 until n).flatMap(f =>
-          ReferenceHashes.gifFrameHash64(id, w, h, f)
-            .map(hash => s"($id, $hash)"))
-        val variant =
-          if (id % 6 == 5)
-            (1 until n).flatMap(f =>
-              ReferenceHashes.gifFrameHash64(id, w, h, f)
-                .map(hash => s"(${id + Multimodal.TrimVariantOffset}, $hash)"))
-          else Seq.empty
-        base ++ variant
-      }.mkString(", ")
+    val rows = referenceFrameRows(spark, dir, withTrims = true)
+      .map { case (id, _, _, hash) => s"($id, $hash)" }.mkString(", ")
     val vals = OracleSql.valuesOrEmpty(rows,
       "(CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))")
     s"""WITH fh(media_id, frame_hash) AS ($vals),

@@ -236,18 +236,6 @@ object ReferenceHashes {
   }
 
   /**
-   * Predicted per-frame (n_samples, energy, peak) of fixture WAV `id`
-   * at `frameSize`-sample frames — computed from the documented sample
-   * FORMULA alone, never by parsing WAV bytes (the gifFrameHash64
-   * independence recipe for audio): the fixture pins sample 0 to
-   * +32767 and draws sample i > 0 from the i-th state of the LCG
-   * s ← s·6364136223846793005 + 1442695040888963407 seeded at the id
-   * (one warm-up step before the loop), taking ((s >>> 24) mod 65535)
-   * − 32767. The operator must decode real RIFF/PCM bytes with
-   * `javax.sound.sampled` and land on integers this side derives with
-   * no audio library at all.
-   */
-  /**
    * Predicted per-channel pixel sums of fixture PNG `seed` at `w`×`h` —
    * computed from the documented pixel FORMULA alone, never from a
    * codec (the gifFrameHash64 independence recipe): the fixture warms
@@ -313,26 +301,20 @@ object ReferenceHashes {
 
   /**
    * Predicted feature vector of fixture WAV `id` — from the documented
-   * sample FORMULA alone (sample count 256 + (id%7)·64, sample 0
-   * pinned to +32767, LCG tail), no audio library. Layout per the
+   * sample FORMULA alone ([[wavSamples]]), no audio library. Layout per the
    * documented audio decode contract: rate, channels, frames, peak,
    * mean |amp|, RMS (sequential double fold — order is part of the
    * contract), zero crossings, 9-bin |amp| histogram.
    */
   def wavFormulaFeatures(id: Long, rateHz: Int, dim: Int): Array[Float] = {
-    val n = 256 + (id % 7).toInt * 64
-    var s = id * 6364136223846793005L + 1442695040888963407L
+    val samples = wavSamples(id)
+    val n = samples.length
     var peak = 0; var sumAbs = 0L; var sumSq = 0.0; var zc = 0; var prev = 0
     val bins = math.max(dim - 7, 0)
     val hist = new Array[Long](math.max(bins, 1))
     var i = 0
     while (i < n) {
-      val v =
-        if (i == 0) 32767
-        else {
-          s = s * 6364136223846793005L + 1442695040888963407L
-          ((s >>> 24) % 65535L).toInt - 32767
-        }
+      val v = samples(i)
       val a = math.abs(v)
       if (a > peak) peak = a
       sumAbs += a
@@ -376,33 +358,19 @@ object ReferenceHashes {
     f
   }
 
-  def wavFrameStats(id: Long, frameSize: Int): Seq[(Int, Int, Long, Int)] = {
-    val n = 256 + (id % 7).toInt * 64 // the fixture's sample-count formula
-    var s = id * 6364136223846793005L + 1442695040888963407L
-    val samples = new Array[Int](n)
-    samples(0) = 32767
-    var i = 1
-    while (i < n) {
-      s = s * 6364136223846793005L + 1442695040888963407L
-      samples(i) = ((s >>> 24) % 65535L).toInt - 32767
-      i += 1
-    }
-    samples.grouped(frameSize).zipWithIndex.map { case (frame, idx) =>
-      var energy = 0L
-      var peak = 0
-      frame.foreach { v =>
-        energy += v.toLong * v
-        if (math.abs(v) > peak) peak = math.abs(v)
-      }
-      (idx, frame.length, energy, peak)
-    }.toSeq
-  }
-
-  /** Clipping profile of audio row `id` — predicted from the
-    * fixture's sample FORMULA alone (mm17's oracle side; no audio
-    * library): (n, samples with |x| ≥ threshold, longest consecutive
-    * such run, number of runs). */
-  def wavClipStats(id: Long, threshold: Int): (Int, Long, Long, Long) = {
+  /**
+   * The samples of fixture WAV `id`, from the documented sample FORMULA
+   * alone, never by parsing WAV bytes (the gifFrameHash64 independence
+   * recipe for audio): 256 + (id mod 7)·64 mono samples; sample 0 is
+   * pinned to +32767 and sample i > 0 comes from the i-th state of the
+   * LCG s ← s·6364136223846793005 + 1442695040888963407 seeded at the
+   * id (one warm-up step before the loop), taking
+   * ((s >>> 24) mod 65535) − 32767. The operator must decode real
+   * RIFF/PCM bytes with `javax.sound.sampled` and land on what the
+   * audio oracles below derive from these integers with no audio
+   * library at all.
+   */
+  private def wavSamples(id: Long): Array[Int] = {
     val n = 256 + (id % 7).toInt * 64
     var s = id * 6364136223846793005L + 1442695040888963407L
     val samples = new Array[Int](n)
@@ -413,11 +381,35 @@ object ReferenceHashes {
       samples(i) = ((s >>> 24) % 65535L).toInt - 32767
       i += 1
     }
+    samples
+  }
+
+  /** Per-frame (frame_idx, n_samples, energy, peak) of fixture WAV `id`
+    * at `frameSize`-sample frames, last frame partial (mm12/mm13's
+    * oracle side). */
+  def wavFrameStats(id: Long, frameSize: Int): Seq[(Int, Int, Long, Int)] =
+    wavSamples(id).grouped(frameSize).zipWithIndex.map { case (frame, idx) =>
+      var energy = 0L
+      var peak = 0
+      frame.foreach { v =>
+        energy += v.toLong * v
+        if (math.abs(v) > peak) peak = math.abs(v)
+      }
+      (idx, frame.length, energy, peak)
+    }.toSeq
+
+  /** Clipping profile of audio row `id` — predicted from the
+    * fixture's sample FORMULA alone (mm17's oracle side; no audio
+    * library): (n, samples with |x| ≥ threshold, longest consecutive
+    * such run, number of runs). */
+  def wavClipStats(id: Long, threshold: Int): (Int, Long, Long, Long) = {
+    val samples = wavSamples(id)
+    val n = samples.length
     var nClipped = 0L
     var maxRun = 0L
     var nRuns = 0L
     var run = 0L
-    i = 0
+    var i = 0
     while (i < n) {
       if (math.abs(samples(i)) >= threshold) {
         run += 1
@@ -435,18 +427,10 @@ object ReferenceHashes {
     * audio library): (n, R(0), argmax lag in [minLag, maxLag] with
     * smaller-lag tie-break, R(argmax)). */
   def wavAutocorr(id: Long, minLag: Int, maxLag: Int): (Int, Long, Int, Long) = {
-    val n = 256 + (id % 7).toInt * 64
-    var s = id * 6364136223846793005L + 1442695040888963407L
-    val samples = new Array[Int](n)
-    samples(0) = 32767
-    var i = 1
-    while (i < n) {
-      s = s * 6364136223846793005L + 1442695040888963407L
-      samples(i) = ((s >>> 24) % 65535L).toInt - 32767
-      i += 1
-    }
+    val samples = wavSamples(id)
+    val n = samples.length
     var r0 = 0L
-    i = 0
+    var i = 0
     while (i < n) { r0 += samples(i).toLong * samples(i); i += 1 }
     var bestLag = minLag
     var bestR = Long.MinValue

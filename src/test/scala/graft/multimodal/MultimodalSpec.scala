@@ -120,6 +120,73 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     assert(stubbed.nFrames == Multimodal.StubDecoder.decode("audio", "plain text".getBytes, 16).nFrames)
   }
 
+  test("audio kernels: 16-bit PCM decodes in either byte order, other formats drop") {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+    val n = 320
+    val wav = Multimodal.renderWav(seed = 5L, nSamples = n, rateHz = 16000)
+    // the WAV's own samples, read back out of its little-endian body
+    val samples = (0 until n).map(i => (wav(44 + 2 * i + 1) << 8) | (wav(44 + 2 * i) & 0xff))
+    def write(body: Array[Byte], fmt: AudioFormat, tpe: AudioFileFormat.Type) = {
+      val out = new java.io.ByteArrayOutputStream()
+      AudioSystem.write(new AudioInputStream(
+        new java.io.ByteArrayInputStream(body), fmt, n.toLong), tpe, out)
+      out.toByteArray
+    }
+    // the same samples as a big-endian AIFF and as 8-bit unsigned WAV
+    val aiff = write(samples.flatMap(v => Seq((v >> 8).toByte, v.toByte)).toArray,
+      new AudioFormat(16000f, 16, 1, true, true), AudioFileFormat.Type.AIFF)
+    val pcm8 = write(samples.map(v => ((v >> 8) + 128).toByte).toArray,
+      new AudioFormat(16000f, 8, 1, false, false), AudioFileFormat.Type.WAVE)
+    assert(new String(aiff.take(4), "US-ASCII") == "FORM")
+    val media = Seq(
+      Multimodal.MediaRow(1L, "audio", wav, 0, 0, 16000),
+      Multimodal.MediaRow(2L, "audio", aiff, 0, 0, 16000),
+      Multimodal.MediaRow(3L, "audio", pcm8, 0, 0, 16000)).toDF()
+    // per media id, the rows without their id, in a fixed order
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
+      df.collect().groupBy(_.getLong(0)).view
+        .mapValues(_.map(_.toSeq.tail.mkString(",")).toSeq.sorted).toMap
+    for ((name, out) <- Seq(
+        "audioFrameEnergies" -> Multimodal.audioFrameEnergies(media, frameSize = 100),
+        "audioPeriodicity" -> Multimodal.audioPeriodicity(media, minLag = 16, maxLag = 64),
+        "audioClipping" -> Multimodal.audioClipping(media, threshold = 20000))) {
+      val got = byId(out)
+      assert(got.keySet == Set(1L, 2L), s"$name: ids ${got.keySet}")
+      assert(got(2L) == got(1L), s"$name: AIFF rows differ from the WAV's")
+    }
+    // the decoder reads both byte orders alike and stubs the 8-bit payload
+    val dec = Multimodal.ImageIoDecoder
+    val (dWav, dAiff) = (dec.decode("audio", wav, 16), dec.decode("audio", aiff, 16))
+    assert(dAiff.nFrames == n && dAiff.nFrames == dWav.nFrames)
+    assert(dAiff.features.toSeq == dWav.features.toSeq)
+    assert(dec.decode("audio", pcm8, 16).features.toSeq ==
+      Multimodal.StubDecoder.decode("audio", pcm8, 16).features.toSeq)
+  }
+
+  test("warm mm09 and mm15 reuse their persisted frames: a second run adds no cache entry") {
+    val sf = "/root/testdata/sf0.001"
+    val byName = graft.queries.Registry.all.map(q => q.name -> q).toMap
+    val queries = Seq(byName("mm09_image_phash_dedup"), byName("mm15_video_near_dup"))
+    // CacheManager.numCachedEntries is private[sql] in Scala, public in bytecode
+    val cacheManager = spark.sharedState.cacheManager
+    def cachedDatasets(): Int = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    graft.util.PlanCache.releaseAll()
+    try {
+      val before = (cachedDatasets(), graft.dedup.Dedup.cachedBaseCount)
+      queries.foreach(_.run(spark, sf).count())
+      val cold = (cachedDatasets(), graft.dedup.Dedup.cachedBaseCount)
+      // each query persists on its first run, or the guard is vacuous
+      assert(cold._1 >= before._1 + 2 && cold._2 > before._2, s"$before -> $cold")
+      queries.foreach { q =>
+        q.run(spark, sf).count()
+        assert(cachedDatasets() == cold._1, s"${q.name}: warm run persisted again")
+        assert(graft.dedup.Dedup.cachedBaseCount == cold._2,
+          s"${q.name}: warm run added a fingerprint base")
+      }
+    } finally graft.util.PlanCache.releaseAll()
+  }
+
   test("averageHash64: cross-implementation agreement, shift robustness, separation") {
     val ids = (0L until 120L by 3L).toSeq
     val hams = ids.map { id =>

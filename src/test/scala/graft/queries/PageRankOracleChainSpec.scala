@@ -40,10 +40,10 @@ class PageRankOracleChainSpec extends AnyFunSuite with SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
   }
 
-  /** The pre-r22 oracle form, the chain's anchor (the q45NaiveOracle
-    * pattern): every CTE inlined, the edge list joined twice per
-    * iteration. Unaffordable for DuckDB replay past the sf0.1 tier,
-    * but obviously the textbook recurrence. */
+  /** The pre-r22 oracle form, the chain's anchor (the pattern of
+    * TriangleOracleChainSpec's naiveOracle): every CTE inlined, the
+    * edge list joined twice per iteration. Unaffordable for DuckDB
+    * replay past the sf0.1 tier, but obviously the textbook recurrence. */
   private def naiveIterCtes(iters: Int): String = {
     val steps = (1 to iters).map { i =>
       s"""pr$i AS (
