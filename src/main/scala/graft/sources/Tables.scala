@@ -2,20 +2,81 @@ package graft.sources
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.util.PlanCache
 
 /**
  * Typed loaders for the driver-generated star schema (`TESTDATA.md`):
  * TPC-H-ish tables plus an event stream, a text-document table, and an
- * embedding table. Each loader is a plain parquet scan — column pruning
- * and predicate pushdown are left to Catalyst, so callers should
- * select/filter as early as possible and let the optimizer reach the
- * scan.
+ * embedding table. Each loader is a parquet scan with a declared
+ * schema: the schema is inferred once per file version and supplied to
+ * the reader after that (see [[layout]]), so a repeat load starts no
+ * Spark job. Column pruning and predicate pushdown are left to
+ * Catalyst, so callers should select/filter as early as possible and
+ * let the optimizer reach the scan.
  */
 object Tables {
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** What one parquet file version resolves to: its schema, and whether
+    * reading it needs the legacy nanos conf. */
+  private final case class Layout(schema: StructType, nanos: Boolean)
+
+  // holds no frames, only layouts; a PlanCache so releaseAll flushes it
+  private val layouts = new PlanCache(maxEntries = 16)
+
+  /** The version of the parquet file or directory at `path`: its
+    * qualified path plus the path, length and modification time of
+    * every file under it. Rewriting the file, or a directory's part
+    * files, gives a new version. Hadoop's `listStatus` and
+    * `getFileStatus` are plain stat calls on the local filesystem (no
+    * forked `stat`). A missing path throws `FileNotFoundException`
+    * naming it. */
+  private def version(spark: SparkSession, path: String): (String, Seq[(String, Long, Long)]) = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
+    (fs.makeQualified(root).toString,
+      leaves(fs.getFileStatus(root))
+        .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted)
+  }
+
+  /** `path`'s layout, inferred by the parquet reader (one Spark job)
+    * on the first load of the current file version and memoized for
+    * every session after that. With `nanosFallback`, a file the plain
+    * reader rejects is inferred again under the legacy nanos conf (see
+    * [[eventsFile]]); the conf is set only after the plain read
+    * failed, so a MICROS file never touches it. Sessions share the
+    * memo: every session here comes from `LocalSpark`, with the same
+    * parquet inference settings. */
+  private def layout(spark: SparkSession, path: String, nanosFallback: Boolean): Layout =
+    layouts.memoOn(version(spark, path), "parquet-layout", nanosFallback) {
+      try Layout(spark.read.parquet(path).schema, nanos = false)
+      catch {
+        case NonFatal(first) if nanosFallback =>
+          spark.conf.set(NanosAsLong, "true")
+          try Layout(spark.read.parquet(path).schema, nanos = true)
+          catch { case NonFatal(_) => throw first }
+      }
+    }
+
+  /** `path` read with its memoized schema. A nanos layout sets the
+    * legacy conf on THIS session before the read: the memo outlives
+    * the session that inferred it. */
+  private def read(spark: SparkSession, path: String,
+                   nanosFallback: Boolean = false): DataFrame = {
+    val l = layout(spark, path, nanosFallback)
+    if (l.nanos) spark.conf.set(NanosAsLong, "true")
+    spark.read.schema(l.schema).parquet(path)
+  }
+
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "nation")
@@ -54,28 +115,24 @@ object Tables {
   /** The events parquet at `path` read as a batch frame, with the
     * expressions mapping its `ts` onto microsecond `TimestampType` `ts`
     * and nanosecond `ts_ns` — the one layout probe both the batch and
-    * the streaming loader use. The legacy nanos conf is session-global
-    * by Spark's design (no per-relation override exists), so it is
-    * touched ONLY when the file actually carries TIMESTAMP(NANOS) —
-    * which Spark otherwise rejects at schema resolution — detected by
-    * attempting the plain read first. Current MICROS fixtures therefore
-    * never mutate the shared session (the io08/io11 isolation lesson);
-    * on a legacy nanos fixture the flag's only observable effect is on
-    * nanos columns, which exist in no other table. A fatal error
-    * (out of memory, interrupt) during the plain read propagates
-    * instead of flipping the conf. */
+    * the streaming loader use. The probe is part of [[layout]]'s
+    * resolution, so it runs once per file version, not per load. The
+    * legacy nanos conf is session-global by Spark's design (no
+    * per-relation override exists), so it is touched ONLY when the file
+    * actually carries TIMESTAMP(NANOS) — which Spark otherwise rejects
+    * at schema resolution — detected by attempting the plain read
+    * first. Current MICROS fixtures therefore never mutate the shared
+    * session (the io08/io11 isolation lesson); on a legacy nanos
+    * fixture the flag's only observable effect is on nanos columns,
+    * which exist in no other table, and every load of it sets the flag
+    * on the loading session, memo hit or not. A fatal error (out of
+    * memory, interrupt) during the plain read propagates instead of
+    * flipping the conf. */
   private[graft] def eventsFile(spark: SparkSession,
                                 path: String): (DataFrame, String, String) = {
-    val raw =
-      try spark.read.parquet(path)
-      catch {
-        case NonFatal(first) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          try spark.read.parquet(path)
-          catch { case NonFatal(_) => throw first }
-      }
+    val raw = read(spark, path, nanosFallback = true)
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         (raw, "timestamp_micros(ts div 1000) AS ts", "ts AS ts_ns")
       case _ =>
         (raw, "cast(ts AS timestamp) AS ts",

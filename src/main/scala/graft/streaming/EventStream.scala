@@ -44,15 +44,14 @@ object EventStream {
   }
 
   /** Streaming scan of an events parquet path. The file stream source
-    * needs a declared schema, so the batch reader probes the footer
-    * once: `ts` may be INT64 nanos (legacy fixture layout, surfaced as
-    * LongType under the legacy conf) or TIMESTAMP(MICROS) (current
-    * fixtures) — see [[graft.sources.Tables.events]]. Both normalize to
-    * the same microsecond `TimestampType` column. */
+    * needs a declared schema, so it takes the batch loader's memoized
+    * layout of `path`: `ts` may be INT64 nanos (legacy fixture layout,
+    * surfaced as LongType under the legacy conf) or TIMESTAMP(MICROS)
+    * (current fixtures) — see [[graft.sources.Tables.events]]. Both
+    * normalize to the same microsecond `TimestampType` column. */
   def readEvents(spark: SparkSession, path: String): DataFrame = {
-    val dir = streamableDir(path)
-    val (probe, tsExpr, _) = graft.sources.Tables.eventsFile(spark, dir)
-    spark.readStream.schema(probe.schema).parquet(dir)
+    val (probe, tsExpr, _) = graft.sources.Tables.eventsFile(spark, path)
+    spark.readStream.schema(probe.schema).parquet(streamableDir(path))
       .selectExpr("event_id", tsExpr, "user_id", "event_type", "value", "props")
   }
 

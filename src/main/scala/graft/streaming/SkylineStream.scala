@@ -26,11 +26,10 @@ import graft.sources.Tables
 object SkylineStream {
 
   def skylineReplay(spark: SparkSession, dir: String): DataFrame = {
-    val path = EventStream.streamableDir(s"$dir/orders.parquet")
-    val schema = spark.read.parquet(path).schema
     val spend = StreamRun.drain("graft_stream_skyline",
       graft.queries.AdvancedQueries.custSpendCents(
-        spark.readStream.schema(schema).parquet(path)
+        spark.readStream.schema(Tables.orders(spark, dir).schema)
+          .parquet(EventStream.streamableDir(s"$dir/orders.parquet"))
           .select(col("o_custkey"), col("o_totalprice"))), "complete")
     graft.queries.AdvancedQueries.customerSkyline(
       Tables.customer(spark, dir), spend)

@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /**
  * A bounded, access-ordered memoization cache for persisted DataFrames,
  * keyed by a canonicalized logical plan, plus a memo for driver-side
- * values fitted from a source (row counts, quantizer centroids). It is
- * the one place the engine keeps a frame or a fitted value across
- * queries.
+ * values fitted from a source (row counts, quantizer centroids) or
+ * resolved from a file version (parquet schemas, see
+ * [[graft.sources.Tables]]). It is the one place the engine keeps a
+ * frame or a fitted value across queries.
  *
  * Why this exists: operators like MinHash LSH and IVF search build an
  * expensive projection (shingling, vector normalization) consumed by
@@ -91,10 +92,10 @@ final class PlanCache(val maxEntries: Int) {
   // evicted-and-rebuilt frame has the same count and the same fit.
   // Bounded at 4x the frame cap — a value is bytes to kilobytes on the
   // driver, a frame gigabytes on the executors.
-  private val memos = new java.util.LinkedHashMap[(LogicalPlan, String, Seq[Any]), Any](
+  private val memos = new java.util.LinkedHashMap[(Any, String, Seq[Any]), Any](
       16, 0.75f, true) {
     override def removeEldestEntry(
-        e: java.util.Map.Entry[(LogicalPlan, String, Seq[Any]), Any]): Boolean =
+        e: java.util.Map.Entry[(Any, String, Seq[Any]), Any]): Boolean =
       this.size() > math.max(maxEntries * 4, 16)
   }
 
@@ -102,8 +103,14 @@ final class PlanCache(val maxEntries: Int) {
     * `tag` and its `params` — a driver-side value fitted from a source
     * (a count, k-means centroids) is paid once per distinct source and
     * parameters, not once per call. */
-  def memo[A](source: DataFrame, tag: String, params: Any*)(compute: => A): A = {
-    val key = (source.queryExecution.analyzed.canonicalized, tag, params)
+  def memo[A](source: DataFrame, tag: String, params: Any*)(compute: => A): A =
+    memoOn(source.queryExecution.analyzed.canonicalized, tag, params: _*)(compute)
+
+  /** [[memo]] keyed by any immutable value instead of a plan — for a
+    * value resolved before there is a frame to key on, such as a
+    * parquet file's schema keyed by the file's version. */
+  def memoOn[A](source: Any, tag: String, params: Any*)(compute: => A): A = {
+    val key = (source, tag, params)
     val hit = memos.synchronized(memos.get(key))
     if (hit != null) hit.asInstanceOf[A]
     else {

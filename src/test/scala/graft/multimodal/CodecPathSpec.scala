@@ -112,10 +112,16 @@ class PlanCacheCountSpec extends AnyFunSuite with graft.SparkSpec {
     val df = (1 to 41).toDF("memo_probe")
     val counts = new java.util.concurrent.atomic.AtomicInteger
     val sentinel = new java.util.concurrent.CountDownLatch(1)
+    // only counts over this test's own `memo_probe` frame: a count
+    // another test queued before registration can still be delivered
+    // after it, and must not land here
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         if (qe.analyzed.output.map(_.name) == Seq("count_sentinel")) sentinel.countDown()
-        else if (funcName == "count") { counts.incrementAndGet(); () }
+        else if (funcName == "count" &&
+                 qe.analyzed.exists(_.output.map(_.name) == Seq("memo_probe"))) {
+          counts.incrementAndGet(); ()
+        }
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
