@@ -113,18 +113,13 @@ object ChangeFeedStream {
   def cdcApplyReplay(spark: SparkSession, dir: String): DataFrame = {
     val feed = graft.queries.StorageQueries.cdcFeed(spark, dir)
     graft.util.Scratch.withDir("graft-st17-") { tmp =>
-      val feedDir = s"$tmp/feed"
-      feed.repartition(4, col("o_orderkey")).write.mode("overwrite").parquet(feedDir)
-      val schema = spark.read.parquet(feedDir).schema
-
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(feedDir)
+      val stream = StreamRun.replay(feed, "o_orderkey", s"$tmp/feed")
       val q = runCdcStream(stream, "o_orderkey", s"$tmp/state", s"$tmp/chk")
       try q.processAllAvailable() finally q.stop()
 
       graft.queries.StorageQueries.cdcProject(
         applyState(spark, Tables.orders(spark, dir), s"$tmp/state",
-          "o_orderkey", schema)).localCheckpoint()
+          "o_orderkey", stream.schema)).localCheckpoint()
     }
   }
 }

@@ -64,12 +64,8 @@ object PublishStream {
     * The result is snapshotted, then the scratch tree is deleted. */
   def auditedPublishReplay(spark: SparkSession, dir: String): DataFrame =
     graft.util.Scratch.withDir("graft-st24-") { tmp =>
-      val feedDir = s"$tmp/feed"
-      graft.sources.Tables.events(spark, dir)
-        .repartition(4, col("event_id")).write.mode("overwrite").parquet(feedDir)
-      val schema = spark.read.parquet(feedDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(feedDir)
+      val stream = StreamRun.replay(
+        graft.sources.Tables.events(spark, dir), "event_id", s"$tmp/feed")
       val q = runAuditedPublish(
         graft.queries.QualityQueries.dailyCounts(stream),
         s"$tmp/pub", s"$tmp/chk", dailyAudits)

@@ -84,11 +84,7 @@ object QuantileSketchStream {
     val rows = graft.queries.QualityQueries.qsRows(
       graft.sources.Tables.orders(spark, dir))
     val sigs = graft.util.Scratch.withDir("graft-st33-") { tmp =>
-      val feedDir = s"$tmp/feed"
-      rows.repartition(4, col("k")).write.mode("overwrite").parquet(feedDir)
-      val schema = spark.read.parquet(feedDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(feedDir)
+      val stream = StreamRun.replay(rows, "k", s"$tmp/feed")
       StreamRun.drain("graft_stream_qsketch", sketchStream(stream.as[QsRow]),
         "update")
     }

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 
 /**
- * The one drain behind every memory-sink streaming query. A query
+ * The one drain behind every memory-sink streaming query, and the one
+ * feed replay behind the queries that stream a frame they wrote. A query
  * module declares the stream and the batch view over its result; this
  * helper runs the stream to completion and hands back an immutable
  * snapshot of what the sink received.
@@ -34,5 +36,16 @@ object StreamRun {
       try q.processAllAvailable() finally q.stop()
       spark.table(name).localCheckpoint()
     } finally spark.catalog.dropTempView(name)
+  }
+
+  /** Write `feed` under `dir` as 4 parquet files hashed on `key` and
+    * stream them back one file per micro-batch, so batches arrive in
+    * hash order, not in the feed's. The stream takes the feed's own
+    * schema, made nullable as every parquet file source reads it, so no
+    * job infers the schema of the files just written. */
+  def replay(feed: DataFrame, key: String, dir: String): DataFrame = {
+    feed.repartition(4, col(key)).write.mode("overwrite").parquet(dir)
+    feed.sparkSession.readStream.schema(feed.schema.toNullable)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
   }
 }

@@ -1,24 +1,19 @@
 package graft.marketpulse
 
 import java.io.File
+import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.nio.file.attribute.PosixFilePermissions
 
-import scala.jdk.CollectionConverters._
-
-import jdk.jfr.consumer.RecordingStream
+import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem, LocalFileSystem}
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ProcessStarts, SparkSpec}
 import graft.util.Scratch
-
-/** Committed after the recorded write: once the recording delivers it,
-  * every process start committed before it has been delivered too. */
-@jdk.jfr.Name("graft.test.SinkSentinel")
-final class SinkSentinel extends jdk.jfr.Event
 
 /** S1 (pluggable fetch) and S5 (JSON write-back) boundary tests: the
   * two halves that wrap the ingest path the way the reference's DAG
@@ -50,66 +45,85 @@ class FetchSinkSpec extends AnyFunSuite with SparkSpec {
 
   test("local write-back starts no child process") {
     Scratch.withDir("graft-docsink-") { dir =>
-      // the first landing warms every lazily initialised class, so the
-      // recorded overwrite sees only what a refresh cycle's write does
-      DocumentSink.writeDocuments(parsed, dir)
-      val starts = new ConcurrentLinkedQueue[String]()
-      val delivered = new CountDownLatch(1)
-      val rs = new RecordingStream()
-      try {
-        rs.enable("jdk.ProcessStart").withStackTrace()
-        rs.enable(classOf[SinkSentinel])
-        // charged to the sink by call stack: Spark's own threads start
-        // processes of their own once per JVM (`getconf PAGESIZE`)
-        rs.onEvent("jdk.ProcessStart", e =>
-          if (e.getStackTrace.getFrames.asScala.exists(
-                _.getMethod.getType.getName.startsWith("graft.marketpulse.DocumentSink")))
-            starts.add(e.getString("command")))
-        rs.onEvent("graft.test.SinkSentinel", _ => delivered.countDown())
-        rs.startAsync()
-        DocumentSink.writeDocuments(parsed, dir)
-        new SinkSentinel().commit()
-        assert(delivered.await(60, TimeUnit.SECONDS), "the recording never delivered its sentinel")
-      } finally rs.close()
+      // the warm-up landing makes the recorded one an overwrite, as in a
+      // refresh cycle
+      val forks = ProcessStarts.through(ProcessStarts.HadoopFs, "graft.marketpulse.DocumentSink")(
+        DocumentSink.writeDocuments(parsed, dir))
       assert(new File(dir).list().toSet == Set("AAPL.json", "V.json", "BRK.B.json"))
-      assert(starts.isEmpty, s"${starts.size} process starts by the sink: $starts")
+      assert(forks.isEmpty, s"${forks.size} process starts by the sink: $forks")
     }
   }
 
-  test("both publish paths: same names, bytes and mode; no .tmp or .crc; a rewrite replaces in place") {
+  test("the landed store equals the stock local filesystem's: names, bytes and mode; no .tmp or .crc; a rewrite replaces in place") {
     // a umask unlike the usual process umask (022), so a mode that
     // ignored the Hadoop conf would show
     spark.conf.set("fs.permissions.umask-mode", "027")
     try Scratch.withDir("graft-docsink-") { base =>
-      val conf = spark.sessionState.newHadoopConf()
+      val stock = spark.sessionState.newHadoopConf()
+      stock.set("fs.file.impl", classOf[LocalFileSystem].getName)
+      stock.set("fs.AbstractFileSystem.file.impl", classOf[LocalFs].getName)
+      stock.setBoolean("fs.file.impl.disable.cache", true)
+      val local = new URI("file:///")
+      // the comparison means something only if the two confs differ
+      assert(FileSystem.get(local, spark.sessionState.newHadoopConf()).getClass ==
+        classOf[graft.util.NioLocalFileSystem])
+      assert(AbstractFileSystem.get(local, spark.sessionState.newHadoopConf()).getClass ==
+        classOf[graft.util.NioLocalFs])
+      assert(FileSystem.get(local, stock).getClass == classOf[LocalFileSystem])
+      assert(AbstractFileSystem.get(local, stock).getClass == classOf[LocalFs])
+
       val docs = DocumentSink.documents(parsed).collect()
-        .map(r => s"${r.getString(0)}.json" -> r.getString(1).getBytes(UTF_8)).toMap
-      val (nio, hadoop) = (s"$base/nio", s"$base/hadoop")
-      assert(DocumentSink.publisher(nio, conf, 0L).isInstanceOf[DocumentSink.NioPublisher])
-      assert(DocumentSink.publisher(s"file:$nio", conf, 0L).isInstanceOf[DocumentSink.NioPublisher])
+        .map(r => r.getString(0) -> r.getString(1).getBytes(UTF_8)).toMap
+      val (landed, reference) = (s"$base/landed", s"$base/stock")
       def land(): Unit = {
-        DocumentSink.writeDocuments(parsed, nio)
-        val out = new DocumentSink.HadoopPublisher(hadoop, conf, 7L)
-        try docs.foreach { case (name, bytes) => out.publish(name.stripSuffix(".json"), bytes) }
-        finally out.close()
+        DocumentSink.writeDocuments(parsed, landed)
+        DocumentSink.publish(reference, stock, 7L, docs.iterator)
       }
-      def check(): Unit = Seq(nio, hadoop).foreach { dir =>
-        assert(new File(dir).list().toSet == docs.keySet, dir) // hidden .tmp/.crc included
-        docs.foreach { case (name, bytes) =>
-          val path = Paths.get(dir, name)
-          assert(Files.readAllBytes(path).sameElements(bytes), path)
-          assert(java.nio.file.attribute.PosixFilePermissions.toString(
-            Files.getPosixFilePermissions(path)) == "rw-r-----", path)
+      def check(): Unit = {
+        val names = docs.keySet.map(symbol => s"$symbol.json")
+        Seq(landed, reference).foreach(dir =>
+          assert(new File(dir).list().toSet == names, dir)) // hidden .tmp/.crc included
+        names.foreach { name =>
+          val Seq(a, b) = Seq(landed, reference).map(Paths.get(_, name))
+          assert(Files.readAllBytes(a).sameElements(Files.readAllBytes(b)), name)
+          assert(Files.readAllBytes(a).sameElements(docs(name.stripSuffix(".json"))), name)
+          val Seq(modeA, modeB) = Seq(a, b).map(p =>
+            PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
+          assert(modeA == modeB && modeA == "rw-r-----", s"$name: $modeA vs $modeB")
         }
       }
       land()
       check()
       // every landed file replaced: stale bytes are overwritten
-      for (dir <- Seq(nio, hadoop); name <- docs.keys)
-        Files.write(Paths.get(dir, name), "stale".getBytes(UTF_8))
+      for (dir <- Seq(landed, reference); name <- docs.keys)
+        Files.write(Paths.get(dir, s"$name.json"), "stale".getBytes(UTF_8))
       land()
       check()
     } finally spark.conf.unset("fs.permissions.umask-mode")
+  }
+
+  test("a rewrite replaces the document in one step: a polling reader never finds it missing or torn") {
+    Scratch.withDir("graft-docsink-") { dir =>
+      val conf = spark.sessionState.newHadoopConf()
+      val versions = Seq("old", "new").map(v => s"""{"version": "$v"}""".getBytes(UTF_8))
+      DocumentSink.publish(dir, conf, 0L, Iterator("AAPL" -> versions.head))
+      val path = Paths.get(dir, "AAPL.json")
+      @volatile var writing = true
+      var (reads, missing, torn) = (0, 0, 0)
+      val reader = new Thread(() =>
+        while (writing) {
+          reads += 1
+          try {
+            val bytes = Files.readAllBytes(path)
+            if (!versions.exists(_.sameElements(bytes))) torn += 1
+          } catch { case _: java.nio.file.NoSuchFileException => missing += 1 }
+        })
+      reader.start()
+      try DocumentSink.publish(dir, conf, 1L, Iterator.tabulate(2000)(i => "AAPL" -> versions(i % 2)))
+      finally { writing = false; reader.join() }
+      assert(reads > 0 && missing == 0 && torn == 0, s"$reads reads: $missing missing, $torn torn")
+      assert(new File(dir).list().toSeq == Seq("AAPL.json"))
+    }
   }
 
   test("reference DAG: fetch → merge with landed state → write-back → models, idempotent") {

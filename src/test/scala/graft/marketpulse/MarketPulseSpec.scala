@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ProcessStarts, SparkSpec}
 
 class MarketPulseSpec extends AnyFunSuite with SparkSpec {
 
@@ -216,6 +216,24 @@ class MarketPulseSpec extends AnyFunSuite with SparkSpec {
       // catalog entry, so DROP TABLE does not remove it
       tables.foreach(t => graft.util.Scratch.delete(
         new java.io.File(spark.sessionState.catalog.defaultTablePath(TableIdentifier(t)))))
+    }
+  }
+
+  test("materialize of a landed run starts no process through Hadoop's filesystem") {
+    val prefix = "mp_materialize_forks"
+    graft.util.Scratch.withDir("graft-mp-forks-") { dir =>
+      val r = Pipeline.referenceDag(spark, Seq("AAPL", "V"),
+        new Fetch.StubFetcher(Map("AAPL" -> Fixtures.aapl, "V" -> Fixtures.v)), s"$dir/alphavantage")
+      try {
+        // the warm-up write makes the recorded one an overwrite, as in a
+        // refresh cycle
+        val forks = ProcessStarts.through(ProcessStarts.HadoopFs)(Pipeline.materialize(r, prefix))
+        assert(forks.isEmpty, s"${forks.size} process starts by materialize: $forks")
+      } finally {
+        r.raw.unpersist()
+        Seq("stg_alphavantage", "dim_stock", "fact_stock_prices", "agg_weekly_prices")
+          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      }
     }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ProcessStarts, SparkSpec}
 import graft.marketpulse.{Fetch, Fixtures, Pipeline}
 import graft.util.Scratch
 
@@ -17,12 +17,21 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming hourly aggregation equals the batch aggregation") {
+    // the fixture is one file, which the file source reads through a symlink
+    val exposed = java.nio.file.Paths.get(EventStream.streamableDir(s"$sf/events.parquet"))
+    assert(java.nio.file.Files.isSymbolicLink(exposed.resolve("events.parquet")))
     val streamed = EventStream.hourlyStats(spark, sf)
       .orderBy("hour_start", "event_type").collect().toSeq
     val batch = EventStream.hourlyAgg(graft.sources.Tables.events(spark, sf))
       .orderBy("hour_start", "event_type").collect().toSeq
     assert(streamed == batch)
     assert(streamed.nonEmpty)
+  }
+
+  test("st01's drain starts no process through Hadoop's filesystem") {
+    // the warm-up drain loads every class the checkpoint manager needs
+    val forks = ProcessStarts.through(ProcessStarts.HadoopFs)(EventStream.hourlyStats(spark, sf).count())
+    assert(forks.isEmpty, s"${forks.size} process starts by the st01 drain: $forks")
   }
 
   test("stream-static broadcast enrichment equals the batch join") {

@@ -18,7 +18,10 @@ for small sandboxes holds:
   - the medians differ, in the better direction, by more than the
     parent's quartile spread (q3 - q1).
 
-It also prints each side's failed-operation share. `--out` keeps every
+Each metric's line ends with the median over pairs of (second run -
+first run), whichever side ran first: a metric that the run order moves
+more than the code shows a large order effect there. It also prints
+each side's failed-operation share. `--out` keeps every
 run's metrics and its perfbench report (per-operation medians and
 samples) as JSON. Quartiles use statistics.quantiles(method=
 "inclusive").
@@ -124,12 +127,17 @@ def main():
         spread = q["parent"][1] - q["parent"][0]
         gap = sign * (med["change"] - med["parent"])
         holds = len(pairs) >= 10 and wins >= 0.9 * len(pairs) and gap > spread
+        later = [p["change" if p["first"] == "parent" else "parent"]["metrics"][m]["value"]
+                 - p[p["first"]]["metrics"][m]["value"]
+                 for p in pairs if p["parent"] and p["change"]]
+        order = statistics.median(later) if later else float("nan")
         print(f"  {m} ({better} is better): parent {med['parent']:.3f} "
               f"[q1 {q['parent'][0]:.3f} / q3 {q['parent'][1]:.3f}]  change {med['change']:.3f} "
               f"[q1 {q['change'][0]:.3f} / q3 {q['change'][1]:.3f}]  "
               f"({100 * (med['change'] / med['parent'] - 1):+.1f} %)  "
               f"change won {wins}/{len(pairs)}  gain rule {'HOLDS' if holds else 'does not hold'} "
-              f"(gap {gap:.3f} vs parent spread {spread:.3f})")
+              f"(gap {gap:.3f} vs parent spread {spread:.3f})  "
+              f"second - first run {order:+.3f}")
 
 
 if __name__ == "__main__":
